@@ -1,7 +1,7 @@
 package graft
 
-import java.io.File
-import java.nio.channels.FileChannel
+import java.io.{File, IOException}
+import java.nio.channels.{FileChannel, OverlappingFileLockException}
 import java.nio.file.{Paths, StandardOpenOption}
 
 /** Cross-process guard for the tmpfs scratch dirs build.sbt points the
@@ -40,20 +40,28 @@ object ScratchGuard {
 
   /** Sweep `dir`'s contents (keeping the dir and the lock file) if and
     * only if no sibling JVM holds the live lock, then hold the shared
-    * live lock until this JVM exits. No-op when the dir is absent.
+    * live lock until this JVM exits. Creates the dir when absent (the
+    * first run after boot), so that run is guarded too. A dir this JVM
+    * already holds is left alone: re-locking it from a second channel
+    * would fail, and closing that channel drops the process's lock.
+    * When no lock can be taken the guard says so on stderr.
     */
   def sweepAndHold(dir: String, sweep: Boolean): Unit = {
+    if (held.containsKey(dir)) return
+    def unguarded(why: String): Unit = System.err.println(
+      s"[graft] scratch dir $dir is UNGUARDED (no live lock): $why")
     val d = new File(dir)
-    if (!d.isDirectory) return
+    d.mkdirs()
+    if (!d.isDirectory) return unguarded("not a creatable directory")
     val ch =
       try FileChannel.open(Paths.get(dir, LiveLock),
         StandardOpenOption.CREATE, StandardOpenOption.READ,
         StandardOpenOption.WRITE)
-      catch { case _: Throwable => return }
+      catch { case e: IOException => return unguarded(e.toString) }
     try {
       if (sweep) {
-        val excl = try ch.tryLock(0L, Long.MaxValue, false)
-        catch { case _: Throwable => null }
+        // null = a sibling JVM holds the shared lock
+        val excl = ch.tryLock(0L, Long.MaxValue, false)
         if (excl != null) {
           Option(d.listFiles())
             .foreach(_.filterNot(_.getName == LiveLock).foreach(rmTree))
@@ -66,7 +74,9 @@ object ScratchGuard {
       ch.lock(0L, Long.MaxValue, true)
       held.put(dir, ch): Unit
     } catch {
-      case _: Throwable => try ch.close() catch { case _: Throwable => }
+      case e @ (_: IOException | _: OverlappingFileLockException) =>
+        ch.close()
+        unguarded(e.toString)
     }
   }
 

@@ -1,5 +1,7 @@
 package graft.lake
 
+import java.nio.file.{Files, Paths, StandardOpenOption}
+
 import scala.collection.mutable
 
 import org.apache.hadoop.conf.Configuration
@@ -17,10 +19,11 @@ import org.json4s.jackson.JsonMethods
   *    line); data files under `data/` are immutable and only ever
   *    referenced, never mutated;
   *  - a commit is ATOMIC: actions are staged to a hidden temp file and
-  *    `rename`d to the next version number. Rename-if-absent is atomic
-  *    on HDFS and local FS, so two racing writers get exactly one
-  *    winner; the loser re-reads the log and retries (optimistic
-  *    concurrency). On S3-like stores this would sit behind a
+  *    published at the next version number put-if-absent (a hard link
+  *    on the local FS, a non-replacing rename on HDFS), so two racing
+  *    writers get exactly one winner; the loser re-reads the log and
+  *    retries (optimistic concurrency). Other schemes refuse: on
+  *    S3-like stores this would sit behind a
   *    commit-coordinator/conditional-put — the protocol is unchanged;
   *  - appends never conflict (they reference only new files); REWRITE
   *    commits (delete/merge/compact/overwrite) declare the files they
@@ -419,40 +422,66 @@ object LakeLog {
     vs.find(v => tsOf(v) >= tsMillis).getOrElse(vs.last + 1)
   }
 
-  /** Atomic commit attempt at exactly `v`: stage + rename-if-absent.
-    * Returns false when some other writer won `v`.
+  private def render(actions: Seq[Action]): String = actions.map(a =>
+    JsonMethods.compact(JsonMethods.render(actionToJson(a)))).mkString("\n")
+
+  /** Put-if-absent, the log's one publish primitive: `body` lands at
+    * `target` whole, and only if `target` does not exist yet. Returns
+    * false when another writer got there first. The body is staged to
+    * a hidden temp file beside `target`, then published per scheme
+    * (the split Delta's `LocalLogStore` / `HDFSLogStore` make):
     *
-    * The rename goes through `FileContext.rename(..., Options.Rename
-    * .NONE)`, NOT `FileSystem.rename`: on the local filesystem
-    * `FileSystem.rename` bottoms out in POSIX rename(2), which
-    * silently REPLACES an existing destination — two writers racing
-    * the same version could both pass the exists() precheck and both
-    * "win", losing the first commit. `FileContext` with `Rename.NONE`
-    * fails with `FileAlreadyExistsException` when the destination
-    * exists (on local FS and HDFS alike) — the same commit primitive
-    * Delta's log store uses — so exactly one writer per version wins.
+    *  - `file`: a hard link, POSIX link(2), which fails atomically
+    *    when the target exists. The temp file is written without a
+    *    checksum sidecar, so the published file is one inode — never
+    *    one writer's data beside another writer's `.crc`. Hadoop's
+    *    local `FileContext.rename(..., Rename.NONE)` is NOT this: it
+    *    is an exists-check then a replacing rename(2), with the
+    *    sidecar renamed separately;
+    *  - `hdfs`: `FileContext.rename(..., Rename.NONE)`, which the
+    *    NameNode makes atomic;
+    *  - any other scheme refuses until a store exists for it.
+    */
+  private def putIfAbsent(fs: FileSystem, target: Path,
+                          body: String): Boolean = {
+    val tmp = new Path(target.getParent, s".tmp-${java.util.UUID.randomUUID()}")
+    fs.getUri.getScheme match {
+      case "file" =>
+        def local(p: Path) = Paths.get(fs.makeQualified(p).toUri.getPath)
+        val staged = local(tmp)
+        try {
+          Files.write(staged, body.getBytes("UTF-8"),
+            StandardOpenOption.CREATE_NEW)
+          Files.createLink(local(target), staged)
+          true
+        } catch {
+          case _: java.nio.file.FileAlreadyExistsException => false
+        } finally Files.deleteIfExists(staged): Unit
+      case "hdfs" =>
+        try {
+          writeString(fs, tmp, body)
+          FileContext.getFileContext(fs.getUri, fs.getConf).rename(
+            fs.makeQualified(tmp), fs.makeQualified(target),
+            Options.Rename.NONE)
+          true
+        } catch {
+          case _: FileAlreadyExistsException => false
+        } finally if (fs.exists(tmp)) fs.delete(tmp, false): Unit
+      case other => throw new UnsupportedOperationException(
+        s"lake log at $target: scheme '$other' has no atomic " +
+          "put-if-absent here (supported: file, hdfs)")
+    }
+  }
+
+  /** Atomic commit attempt at exactly `v` ([[putIfAbsent]]). Returns
+    * false when some other writer won `v`; any other I/O failure
+    * propagates — a disk error is not a lost race.
     */
   def tryCommit(fs: FileSystem, root: Path, v: Long,
                 actions: Seq[Action]): Boolean = {
-    val dir = logDir(root)
-    fs.mkdirs(dir)
+    fs.mkdirs(logDir(root))
     val target = commitPath(root, v)
-    if (fs.exists(target)) return false
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    writeString(fs, tmp, actions.map(a =>
-      JsonMethods.compact(JsonMethods.render(actionToJson(a)))).mkString("\n"))
-    val won =
-      try {
-        val fc = FileContext.getFileContext(root.toUri, fs.getConf)
-        fc.rename(fs.makeQualified(tmp), fs.makeQualified(target),
-          Options.Rename.NONE)
-        fs.exists(target)
-      } catch {
-        case _: FileAlreadyExistsException => false // lost the race
-        case _: java.io.IOException        => false
-      }
-    if (!won && fs.exists(tmp)) fs.delete(tmp, false)
-    won
+    !fs.exists(target) && putIfAbsent(fs, target, render(actions))
   }
 
   /** Commit `actions` at the next free version, retrying lost races.
@@ -460,7 +489,7 @@ object LakeLog {
     * `baseVersion` is the snapshot version the caller computed its
     * rewrite against; whenever the log has advanced past it (a
     * concurrent commit landed — before our first attempt or by
-    * winning a rename race), every file this commit supersedes
+    * winning a commit race), every file this commit supersedes
     * (removes OR re-adds with a new deletion vector) must still be
     * present in the current snapshot EXACTLY as the caller read it —
     * same stats, same DV. Liveness alone is not enough: a concurrent
@@ -491,7 +520,7 @@ object LakeLog {
         val cur = snapshot(fs, root, None)
         // exactly-once streaming: re-check the (appId, batchId) token
         // INSIDE the retry loop — a zombie duplicate that slipped past
-        // the caller's first snapshot read races the rename, and the
+        // the caller's first snapshot read races the commit, and the
         // loser's retry must notice the token landed and abort, not
         // commit the batch twice
         dedupBatch.foreach { case (app, b) =>
@@ -616,13 +645,9 @@ object LakeLog {
           })
     val p = checkpointPath(root, v)
     if (fs.exists(p)) return
-    def render(as: Seq[Action]): String = as.map(a =>
-      JsonMethods.compact(JsonMethods.render(actionToJson(a)))).mkString("\n")
-    def put(target: Path, body: String): Unit = {
-      val tmp = new Path(logDir(root), s".tmp-${java.util.UUID.randomUUID()}")
-      writeString(fs, tmp, body)
-      fs.rename(tmp, target): Unit
-    }
+    // only the winner of `v` writes its checkpoint, so a put never loses
+    def put(target: Path, body: String): Unit =
+      putIfAbsent(fs, target, body): Unit
     // CopiedFile entries scale with ingest history exactly like Adds
     // scale with the table — they shard into the same part files, so
     // no single driver-side string ever holds a 10^6-file ingest log
@@ -740,11 +765,11 @@ object LakeLog {
 
   /** Monotone floor advance (a concurrent lower vacuum never
     * regresses it) — one IMMUTABLE marker file per keepFrom under
-    * `_vacuum_floors/`, committed rename-if-absent and never deleted
+    * `_vacuum_floors/`, committed put-if-absent and never deleted
     * or overwritten; [[vacuumFloor]] takes the max. A single
     * read-check-then-replace file cannot be made monotone under
     * concurrent vacuums (keepFrom 5 and 10 interleaving so the LOWER
-    * value's rename lands last would silently regress the floor, and
+    * value's write lands last would silently regress the floor, and
     * the lower writer — re-reading its own value — has no reason to
     * retry); append-only markers are monotone by construction, and
     * the marker count grows only with vacuums that actually deleted
@@ -756,20 +781,10 @@ object LakeLog {
     if (keepFrom <= cur) return
     val dir = floorsDir(root)
     fs.mkdirs(dir)
-    val target = new Path(dir, f"$keepFrom%020d.json")
-    if (fs.exists(target)) return // same keepFrom already recorded
-    val tmp = new Path(dir, s".tmp-${java.util.UUID.randomUUID()}")
-    writeString(fs, tmp, s"""{"keepFrom":$keepFrom,"horizonTs":$horizonTs}""")
-    try {
-      val fc = FileContext.getFileContext(root.toUri, fs.getConf)
-      fc.rename(fs.makeQualified(tmp), fs.makeQualified(target),
-        Options.Rename.NONE)
-    } catch {
-      // another vacuum recorded the same keepFrom first — identical
-      // floor, nothing to retry
-      case _: FileAlreadyExistsException => ()
-      case _: java.io.IOException if fs.exists(target) => ()
-    } finally if (fs.exists(tmp)) fs.delete(tmp, false): Unit
+    // false = another vacuum recorded the same keepFrom first: an
+    // identical floor, nothing to retry
+    putIfAbsent(fs, new Path(dir, f"$keepFrom%020d.json"),
+      s"""{"keepFrom":$keepFrom,"horizonTs":$horizonTs}"""): Unit
   }
 
   private def replay(fs: FileSystem, root: Path, target: Long,

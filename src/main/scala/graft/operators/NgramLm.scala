@@ -164,6 +164,12 @@ object NgramLm {
   def scoreAllBigrams(bigramRows: DataFrame, keys: Seq[String],
       models: Seq[(String, Model)]): DataFrame = {
     require(models.nonEmpty, "scoreAll needs at least one model")
+    // names are spliced into column names and an `expr` string
+    val names = models.map(_._1)
+    names.foreach(nm => require(nm.matches("[A-Za-z_][A-Za-z0-9_]*"),
+      s"scoreAll model name '$nm' is not an identifier ([A-Za-z_][A-Za-z0-9_]*)"))
+    require(names.distinct.size == names.size,
+      s"scoreAll model names must be distinct: ${names.mkString(", ")}")
     var rows = bigramRows
     models.foreach { case (nm, m) =>
       val b = m.bigrams

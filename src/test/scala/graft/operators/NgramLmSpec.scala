@@ -107,6 +107,17 @@ class NgramLmSpec extends SparkSuite {
     assert(shared === twoPass)
   }
 
+  test("scoreAll refuses a malformed or duplicate model name up front") {
+    val corpus = Seq((1L, "a b")).toDF("doc_id", "text")
+    val m = NgramLm.fit(corpus, "text")
+    val bad = intercept[IllegalArgumentException](
+      NgramLm.scoreAll(corpus, "doc_id", "text", Seq("tgt bits" -> m)))
+    assert(bad.getMessage.contains("'tgt bits' is not an identifier"))
+    val dup = intercept[IllegalArgumentException](
+      NgramLm.scoreAll(corpus, "doc_id", "text", Seq("tgt" -> m, "tgt" -> m)))
+    assert(dup.getMessage.contains("must be distinct: tgt, tgt"))
+  }
+
   test("score partial-aggregates map-side (accumulation-order free)") {
     // same doc content split across partitions must fold identically
     // regardless of partitioning — repartition and compare
