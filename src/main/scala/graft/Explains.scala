@@ -63,8 +63,9 @@ object Explains {
     sb.append("neardup_embedding). None grows with the fact table.\n\n")
     sb.append("Note on iterative operators (graph_*, dedup_clusters): the ")
     sb.append("dumped plan is the FINAL plan over localCheckpoint lineage ")
-    sb.append("cuts — the per-round exchange structure is pinned separately ")
-    sb.append("in ShuffleBudgetSpec. The stream_*_replay plans are the ")
+    sb.append("cuts — the per-round stage budgets are pinned in ")
+    sb.append("IterativeShuffleSpec, and ScalePlanGuardsSpec checks each ")
+    sb.append("round's plan for quadratic joins. The stream_*_replay plans are the ")
     sb.append("post-replay batch reads of the memory sink (building them ")
     sb.append("executes the bounded streaming replay first).\n")
     names.foreach { name =>

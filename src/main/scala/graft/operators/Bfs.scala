@@ -34,16 +34,9 @@ object Bfs {
   /** (node BIGINT, dist BIGINT) for every node whose minimum hop
     * count from `seeds` is ≤ `maxHops` (seeds themselves at dist 0).
     * Nodes not reachable within the budget are absent.
-    *
-    * `checkpoint = false` skips the per-round lineage cuts so tests
-    * can assert the full multi-round physical plan (a checkpointed
-    * frontier plans as an opaque RDD scan); production callers keep
-    * the default — an uncut lineage chain re-plans every prior round
-    * inside each new one and recomputes wholesale on task retry.
     */
   def distances(edges: DataFrame, srcCol: String, dstCol: String,
-                seeds: Seq[Long], maxHops: Int,
-                checkpoint: Boolean = true): DataFrame = {
+                seeds: Seq[Long], maxHops: Int): DataFrame = {
     require(seeds.nonEmpty, "BFS needs at least one seed")
     require(maxHops >= 1 && maxHops <= 16,
       s"maxHops must be in [1, 16], got $maxHops — each hop is a " +
@@ -51,13 +44,10 @@ object Bfs {
         "with its own convergence check")
     val spark = edges.sparkSession
     import spark.implicits._
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = false) else df
-    val e = cut(edges
+    val e = Graph.pinned(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .repartition(col("src"))) // scanned once per round, partitioned once
+      .distinct(), "src")
     // distinct: a duplicated seed must not emit duplicate dist-0 rows
     // (reached is never re-grouped, so dupes here would survive to
     // the output)
@@ -68,7 +58,7 @@ object Bfs {
       // the frontier feeds BOTH next round's expansion join and the
       // reached union — cut so it computes once, and lineage stays
       // one round deep instead of maxHops-deep
-      val next = cut(e.join(frontier, e("src") === frontier("node"))
+      val next = Graph.cut(e.join(frontier, e("src") === frontier("node"))
         .select(col("dst").as("node"))
         .distinct()
         .join(reached.select("node"), Seq("node"), "left_anti")

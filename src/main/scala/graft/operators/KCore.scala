@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   * Scale shape per round: one degree aggregation (partial-agg'd
   * (node, count) pairs — map-side combined) and two semi-joins of the
   * edge list against the survivor set, all hash-partitioned
-  * equi-joins; lineage cut per round via localCheckpoint (swap to
-  * `checkpoint` on a reliable store for multi-hour jobs). Edges and
+  * equi-joins; lineage cut per round ([[Graph.cut]]). Edges and
   * survivors only shrink, so per-round cost is non-increasing —
   * unlike iterative rank propagation, the working set peels away.
   */
@@ -41,9 +40,10 @@ object KCore {
     coreOf(peeledEdges(edges, uCol, vCol, k, rounds), k)
 
   /** True when one more peeling round would remove nothing — i.e. the
-    * R-round result already IS the k-core. Costs ONE extra peel round
-    * over the R-round edge set (already checkpointed), not a second
-    * full peel; driver-side state is two counts.
+    * R-round result already IS the k-core. Costs R+1 peel rounds: it
+    * rebuilds the R-round edge set from `edges` (nothing is shared
+    * with an earlier [[core]] call), peels once more and counts both
+    * sets; driver-side state is two counts.
     *
     * The fixpoint test compares EDGE counts, not surviving-node
     * counts: peeling is monotone (edges only ever removed), so edge-
@@ -67,28 +67,22 @@ object KCore {
                           k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    var e = edges
-      .select(least(col(uCol), col(vCol)).as("u"),
-        greatest(col(uCol), col(vCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false)
+    var e = Graph.cut(Graph.undirected(edges, uCol, vCol))
     for (_ <- 1 to rounds) e = peelRound(e, k)
     e
   }
 
   private def peelRound(e: DataFrame, k: Int): DataFrame = {
-    val keep = degrees(e).where(col("d") >= k).select("node")
-      .localCheckpoint(eager = false) // read by both semi-joins
+    // read by both semi-joins
+    val keep = Graph.cut(degrees(e).where(col("d") >= k).select("node"))
     // both semi-joins broadcast the IDENTICAL `keep` subtree (the
     // rename lives in the join condition, not above the exchange), so
     // the planner's ReusedExchange builds the survivor broadcast once
     // per round instead of once per endpoint — half the per-round
     // broadcast-build jobs, byte-identical survivors (KCoreSpec)
-    e.join(keep, col("u") === col("node"), "left_semi")
+    Graph.cut(e.join(keep, col("u") === col("node"), "left_semi")
       .join(keep, col("v") === col("node"), "left_semi")
-      .select("u", "v")
-      .localCheckpoint(eager = false) // cut lineage per round
+      .select("u", "v"))
   }
 
   private def coreOf(e: DataFrame, k: Int): DataFrame =
@@ -110,7 +104,7 @@ object KCore {
     * letting the optimizer inline the chain re-expands the base scan
     * ~3^rounds times — at 8 rounds that exhausts file handles before
     * it exhausts patience. Materialization is exactly the operator's
-    * localCheckpoint, mirrored on the oracle side.
+    * per-round lineage cut, mirrored on the oracle side.
     */
   def oracleSqlBody(k: Int, rounds: Int): String = {
     val rs = (0 until rounds).map { r =>

@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
   * exchange — and two partial-aggregated shuffles ((node, label)
   * vote counts, then per-node argmax as a max-of-struct aggregate,
   * NOT a window: map-side combine keeps hot nodes cheap). Labels
-  * localCheckpoint per round.
+  * are cut per round ([[Graph.cut]]).
   */
 object LabelPropagation {
 
@@ -39,36 +39,22 @@ object LabelPropagation {
   def communities(edges: DataFrame, uCol: String, vCol: String,
                   rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    val e = edges
-      .select(least(col(uCol), col(vCol)).as("u"),
-        greatest(col(uCol), col(vCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-    val adj = e.select(col("u").as("node"), col("v").as("nbr"))
-      .unionAll(e.select(col("v").as("node"), col("u").as("nbr")))
-      // partitioned ONCE on the per-round join key before the lineage
-      // cut (the PageRank/Sssp/Bfs pattern — a checkpointed Dataset
-      // keeps its partitioning): every round's vote join then finds
-      // the adjacency already hash-partitioned on nbr and only the
-      // narrow labels relation moves. Without this the BIG side
-      // re-shuffled every round. Votes are exact integer arithmetic,
-      // so partitioning changes scheduling, never results.
-      .repartition(col("nbr"))
-      .localCheckpoint(eager = false) // reread every round
-    var labels = adj.select(col("node")).distinct()
-      .select(col("node"), col("node").as("lab"))
-      .localCheckpoint(eager = false)
+    val e = Graph.undirected(edges, uCol, vCol)
+    // every round's vote join finds the adjacency in place on nbr
+    val adj = Graph.pinned(e.select(col("u").as("node"), col("v").as("nbr"))
+      .unionAll(e.select(col("v").as("node"), col("u").as("nbr"))), "nbr")
+    var labels = Graph.cut(adj.select(col("node")).distinct()
+      .select(col("node"), col("node").as("lab")))
     for (_ <- 1 to rounds) {
       val votes = adj
         .join(labels.select(col("node").as("nbr"), col("lab")), Seq("nbr"))
         .groupBy("node", "lab").agg(count(lit(1)).as("c"))
       // argmax by (count DESC, label ASC) as max(struct(c, -lab)) —
       // a partial-aggregable max, no per-node window
-      labels = votes
+      labels = Graph.cut(votes
         .groupBy("node")
         .agg(max(struct(col("c"), (-col("lab")).as("nl"))).as("m"))
-        .select(col("node"), (-col("m.nl")).as("lab"))
-        .localCheckpoint(eager = false) // cut lineage per round
+        .select(col("node"), (-col("m.nl")).as("lab")))
     }
     labels.select(col("node"), col("lab").as("community"))
   }

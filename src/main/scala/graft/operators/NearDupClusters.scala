@@ -14,9 +14,8 @@ import org.apache.spark.sql.functions._
   * edge list (both partial-aggregated equi-shuffles); iterations are
   * bounded by the component diameter, which for near-dup graphs is
   * tiny (dup clusters are cliques or near-cliques from LSH banding).
-  * Each iteration's result is checkpointed locally to truncate the
-  * lineage — at cluster scale this would be `checkpoint()` on a
-  * reliable store. This is label propagation, not a hand-rolled
+  * Each iteration's result is cut ([[Graph.cut]]) to truncate the
+  * lineage. This is label propagation, not a hand-rolled
   * driver loop: per-iteration work is fully distributed.
   */
 object NearDupClusters {
@@ -38,27 +37,20 @@ object NearDupClusters {
     */
   def representativesWithIterations(nodes: DataFrame, pairs: DataFrame, idCol: String,
                                     maxIterations: Int = 10): (DataFrame, Int) = {
-    // undirected edge list, both directions — hash-partitioned ONCE on
-    // the per-iteration join key before the lineage cut (a
-    // checkpointed Dataset keeps its partitioning — the PageRank/Sssp
-    // pattern), so every propagation round's neighbor join finds the
-    // edge side in place and only the labels relation moves. min/least
-    // labels are partitioning-independent, so results are unchanged.
-    // lazy checkpoints throughout the loop: every per-iteration frame
+    // undirected edge list, both directions, pinned on the neighbor
+    // join key. Lazy cuts throughout the loop: every per-iteration frame
     // is consumed by the labelSum probe right after it is built, so the
     // probe's one aggregate job materializes the checkpoint blocks too
     // — one job per iteration instead of an eager-materialize job PLUS
     // the probe (guide §1.2; blocks are reused by the next round's
     // joins exactly as with eager cuts)
-    val edges = pairs.select(col("a"), col("b"))
+    val edges = Graph.pinned(pairs.select(col("a"), col("b"))
       .unionByName(pairs.select(col("b").as("a"), col("a").as("b")))
-      .distinct()
-      .repartition(col("b"))
-      .localCheckpoint(eager = false)
+      .distinct(), "b")
 
     // labels: start as self
-    var labels = nodes.select(col(idCol).as("id"), col(idCol).as("label"))
-      .localCheckpoint(eager = false)
+    var labels = Graph.cut(
+      nodes.select(col(idCol).as("id"), col(idCol).as("label")))
 
     var converged = false
     var iter = 0
@@ -82,14 +74,14 @@ object NearDupClusters {
         .agg(min(col("nlabel")).as("nmin"))
       // id is unique in `labels`, so this is a plain key remap L -> label(L)
       val labelOfLabel = labels.select(col("id").as("label"), col("label").as("llabel"))
-      val next = labels
+      // materialized by labelSum below
+      val next = Graph.cut(labels
         .join(neighborMin, Seq("id"), "left_outer")
         .join(labelOfLabel, Seq("label"), "left_outer")
         .select(col("id"),
           least(col("label"),
             coalesce(col("nmin"), col("label")),
-            coalesce(col("llabel"), col("label"))).as("label"))
-        .localCheckpoint(eager = false) // materialized by labelSum below
+            coalesce(col("llabel"), col("label"))).as("label")))
       val nextSum = labelSum(next)
       labels = next
       converged = nextSum.compareTo(prevSum) == 0

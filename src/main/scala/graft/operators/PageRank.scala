@@ -28,9 +28,8 @@ import org.apache.spark.sql.functions._
   * both sides hash-partitioned on the same key, so consecutive
   * iterations reuse the exchange) and one partial-aggregated shuffle
   * (contributions grouped by dst). Nothing driver-side except the
-  * node count (one long). Lineage is cut per iteration with
-  * localCheckpoint, the same guard NearDupClusters uses for its
-  * pointer-doubling rounds.
+  * node count (one long). Lineage is cut every 4th iteration, never
+  * after the last ([[Graph.cut]]).
   *
   * Semantics notes (documented contract, both engines implement it
   * identically):
@@ -89,25 +88,16 @@ object PageRank {
 
   private def ranksImpl(edges: DataFrame, srcCol: String, dstCol: String,
                         p: Params, seeds: Seq[Long]): DataFrame = {
-    val e = edges
+    val e = Graph.cut(edges // feeds nodes, outdeg AND the join
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .distinct()
-      .localCheckpoint(eager = false) // feeds nodes, outdeg AND the join
-    val nodes = e.select(col("src").as("node"))
+      .distinct())
+    val nodes = Graph.cut(e.select(col("src").as("node"))
       .union(e.select(col("dst")))
-      .distinct()
-      .localCheckpoint(eager = false)
-    // out-degree is attached to the edge list ONCE, outside the loop,
-    // and the result is pre-partitioned on src BEFORE the lineage cut:
-    // a checkpointed Dataset keeps its partitioning, so every
-    // iteration's ranks join finds the big side already hash-
-    // partitioned on the join key and only the small ranks relation
-    // moves — the cluster-scale iteration shape (partition the edges
-    // once, iterate against them in place)
-    val ed = e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src")
-      .repartition(col("src"))
-      .localCheckpoint(eager = false) // scanned once per iteration
+      .distinct())
+    // out-degree is attached to the edge list ONCE, outside the loop
+    val ed = Graph.pinned(
+      e.join(e.groupBy("src").agg(count(lit(1)).as("deg")), "src"), "src")
     // one long of driver metadata — never data
     val n = nodes.count()
     require(n > 0, "PageRank over an empty edge set")
@@ -139,7 +129,7 @@ object PageRank {
       // intermediate materialization keeps consecutive iterations
       // inside one codegen'd stage pipeline
       if (i % 4 == 0 && i < p.iterations)
-        ranks = ranks.localCheckpoint(eager = false)
+        ranks = Graph.cut(ranks)
     }
     ranks
   }

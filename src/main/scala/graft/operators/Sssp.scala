@@ -35,18 +35,14 @@ object Sssp {
     * task error).
     */
   def costs(edges: DataFrame, srcCol: String, dstCol: String,
-            weightCol: String, seeds: Seq[Long], rounds: Int,
-            checkpoint: Boolean = true): DataFrame = {
+            weightCol: String, seeds: Seq[Long], rounds: Int): DataFrame = {
     require(seeds.nonEmpty, "SSSP needs at least one seed")
     require(rounds >= 1 && rounds <= 16,
       s"rounds must be in [1, 16], got $rounds — each round is a " +
         "shuffle; size the budget to the graph's hop diameter")
     val spark = edges.sparkSession
     import spark.implicits._
-    // checkpoint=false: plan-assertion escape hatch, see Bfs.distances
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = false) else df
-    val e = cut(edges
+    val e = Graph.pinned(edges
       .select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
@@ -55,8 +51,7 @@ object Sssp {
       .agg(min(when(col("w") < 0,
         raise_error(concat(lit("negative edge weight: "),
           col("w").cast("string"))))
-        .otherwise(col("w"))).as("w"))
-      .repartition(col("src"))) // scanned once per round, partitioned once
+        .otherwise(col("w"))).as("w")), "src")
     var dist = seeds.toDF("node")
       .select(col("node").cast("long").as("node"), lit(0L).as("cost"))
     for (_ <- 1 to rounds) {
@@ -64,7 +59,7 @@ object Sssp {
         .select(col("dst").as("node"), (col("cost") + col("w")).as("cost"))
       // each round's result feeds the next join AND the next union —
       // cut so it computes once and lineage stays one round deep
-      dist = cut(dist.union(relaxed)
+      dist = Graph.cut(dist.union(relaxed)
         .groupBy("node").agg(min("cost").as("cost")))
     }
     dist

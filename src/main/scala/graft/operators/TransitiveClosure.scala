@@ -47,10 +47,6 @@ object TransitiveClosure {
     * a root has no proper ancestor, and a kept self-loop would both
     * break the forest invariant and pump spurious depths.
     *
-    * `checkpoint = false` skips the per-round lineage cuts so tests
-    * can assert the full multi-round physical plan (same convention
-    * as [[Bfs.distances]]).
-    *
     * `validateForest = true` spends one aggregation up front to fail
     * loudly when some node has two distinct parents — on a non-forest
     * the unique-decomposition argument breaks and depths silently
@@ -59,14 +55,12 @@ object TransitiveClosure {
     * construction.
     */
   def ancestors(edges: DataFrame, nodeCol: String, parentCol: String,
-                doublingRounds: Int, checkpoint: Boolean = true,
+                doublingRounds: Int,
                 validateForest: Boolean = false): DataFrame = {
     require(doublingRounds >= 1 && doublingRounds <= 8,
       s"doublingRounds must be in [1, 8] (horizon 2^8 = 256 deep), " +
         s"got $doublingRounds — each round is a join round; hierarchies " +
         "deeper than 256 belong in a driver loop with a convergence check")
-    def cut(df: DataFrame): DataFrame =
-      if (checkpoint) df.localCheckpoint(eager = false) else df
     // distinct: a duplicated edge row would double every pair it
     // participates in (union-without-distinct is only exact over a set)
     val base = edges
@@ -83,7 +77,7 @@ object TransitiveClosure {
           "parents — path doubling over a DAG multiplies depths; " +
           "resolve to one parent per node first")
     }
-    var pairs = cut(base.withColumn("depth", lit(1L)))
+    var pairs = Graph.cut(base.withColumn("depth", lit(1L)))
     var horizon = 1L
     for (_ <- 1 to doublingRounds) {
       // exact-horizon split: `far` ⨝ `pairs` yields each depth-(h, 2h]
@@ -95,7 +89,7 @@ object TransitiveClosure {
             (col("depth") + horizon).as("depth")),
           "mid")
         .select(col("node"), col("anc"), col("depth"))
-      pairs = cut(pairs.union(jumped))
+      pairs = Graph.cut(pairs.union(jumped))
       horizon *= 2L
     }
     pairs

@@ -42,30 +42,25 @@ object Triangles {
     * 0.0 for degree-1 nodes (no possible wedge).
     */
   def perNode(edges: DataFrame, uCol: String, vCol: String): DataFrame = {
-    // canonical undirected simple graph: u < v, loops out, parallels out
-    val e = edges
-      .select(least(col(uCol), col(vCol)).as("u"),
-        greatest(col(uCol), col(vCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint(eager = false) // read by deg + both ends of ord
-    val deg = e.select(col("u").as("node"))
+    // read by deg + both ends of ord
+    val e = Graph.cut(Graph.undirected(edges, uCol, vCol))
+    // read by ord (twice) + final join
+    val deg = Graph.cut(e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("d"))
-      .localCheckpoint(eager = false) // read by ord (twice) + final join
+      .groupBy("node").agg(count(lit(1)).as("d")))
     // orient each edge from the (degree, id)-smaller endpoint; carry
     // the far endpoint's degree so wedge generation can ≺-order the
     // far pair without another degree join
     val lower = col("du") < col("dv") ||
       (col("du") === col("dv") && col("u") < col("v"))
-    val ord = e
+    // read by e1, e2 and the closure join
+    val ord = Graph.cut(e
       .join(deg.select(col("node").as("u"), col("d").as("du")), "u")
       .join(deg.select(col("node").as("v"), col("d").as("dv")), "v")
       .select(
         when(lower, col("u")).otherwise(col("v")).as("s"),
         when(lower, col("v")).otherwise(col("u")).as("t"),
-        when(lower, col("dv")).otherwise(col("du")).as("dt"))
-      .localCheckpoint(eager = false) // read by e1, e2 and the closure join
+        when(lower, col("dv")).otherwise(col("du")).as("dt")))
     val e1 = ord.select(col("s"), col("t").as("a"), col("dt").as("da"))
     val e2 = ord.select(col("s"), col("t").as("b"), col("dt").as("db"))
     val wedges = e1.join(e2, "s")

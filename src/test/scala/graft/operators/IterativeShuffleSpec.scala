@@ -80,12 +80,17 @@ class IterativeShuffleSpec extends SparkSuite {
     test(s"$name: <= $maxMarginal scheduler stages per extra round ($why)") {
       val a = stagesDuring(run(r1))
       val b = stagesDuring(run(r2))
-      val budget = maxMarginal * (r2 - r1)
-      assert(b - a <= budget,
-        s"$name rounds $r1->$r2 submitted ${b - a} marginal stages, " +
-          s"budget $budget ($maxMarginal/round) — a per-round exchange " +
-          s"was added (lost edge pre-partitioning?): $why")
+      assertMarginal(name, r1, r2, b - a, maxMarginal, why)
     }
+
+  private def assertMarginal(name: String, r1: Int, r2: Int, marginal: Int,
+                             maxMarginal: Int, why: String): Unit = {
+    val budget = maxMarginal * (r2 - r1)
+    assert(marginal <= budget,
+      s"$name rounds $r1->$r2 submitted $marginal marginal stages, " +
+        s"budget $budget ($maxMarginal/round) — a per-round exchange " +
+        s"was added (lost edge pre-partitioning?): $why")
+  }
 
   pinMarginal("pagerank", 2, 6, 3,
     "contrib agg + rank rebuild per round, ranks-side exchange only — " +
@@ -127,5 +132,28 @@ class IterativeShuffleSpec extends SparkSuite {
     val chain = (1L until 70L).map(k => (k + 1, k)).toDF("n", "p")
     TransitiveClosure.ancestors(chain, "n", "p", doublingRounds = r)
       .count(): Unit
+  }
+
+  // near-dup clusters iterate to a fixpoint, so the round count comes
+  // from the data: pointer doubling needs 6 iterations on a 16-chain
+  // and 8 on a 64-chain. An eager cut per iteration measures 9.
+  test("near-dup clusters: <= 8 scheduler stages per extra iteration " +
+    "(neighbor-min join + agg, label-of-label join and the label-sum " +
+    "probe, which also materializes the lazy cut)") {
+    import spark.implicits._
+    def run(n: Long): Int = {
+      val nodes = (0L until n).toDF("id")
+      val pairs = (1L until n).map(k => (k - 1, k)).toDF("a", "b")
+      val (reps, iterations) =
+        NearDupClusters.representativesWithIterations(nodes, pairs, "id")
+      reps.count()
+      iterations
+    }
+    var (r1, r2) = (0, 0)
+    val a = stagesDuring { r1 = run(16) }
+    val b = stagesDuring { r2 = run(64) }
+    assert(r2 > r1, s"chains converged in $r1 and $r2 iterations")
+    assertMarginal("near-dup clusters", r1, r2, b - a, 8,
+      "per-iteration joins, agg and probe; the cut adds no job")
   }
 }

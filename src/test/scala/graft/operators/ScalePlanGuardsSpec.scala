@@ -1,8 +1,14 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentLinkedQueue
+
+import scala.jdk.CollectionConverters._
+
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 /** Structural scale guards: every operator documented as a 100 TB path
   * must plan WITHOUT a quadratic join shape — no BroadcastNestedLoopJoin,
@@ -16,10 +22,41 @@ class ScalePlanGuardsSpec extends SparkSuite {
   private lazy val emb = graft.Tables(spark, sf("sf0.001"), "embeddings")
   private lazy val docs = graft.Tables(spark, sf("sf0.001"), "documents")
 
-  private def assertNoQuadraticJoin(df: DataFrame, label: String): Unit = {
-    val plan = df.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"$label plans a quadratic join:\n$plan")
+  /** Builds `df` and counts it with a QueryExecutionListener attached,
+    * then fails if ANY plan executed meanwhile has a quadratic join.
+    * An operator that cuts lineage shows only a scan of its last cut in
+    * the final `executedPlan`; each lazy localCheckpoint reports its
+    * round's plan to the listener when it is called, so the guard sees
+    * every round production runs. `iterative` also requires a join
+    * among the captured plans, so a round guard cannot pass vacuously.
+    */
+  private def assertNoQuadraticJoin(df: => DataFrame, label: String,
+                                    iterative: Boolean = false): Unit = {
+    val plans = new ConcurrentLinkedQueue[String]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit = {
+        plans.add(qe.executedPlan.toString); ()
+      }
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val frame = df
+      frame.count()
+      // the frame's own plan too: it is checked even if no event arrives
+      plans.add(frame.queryExecution.executedPlan.toString)
+      // listener events are async: settle-poll until the count is stable
+      var prev = -1
+      while (plans.size != prev) { Thread.sleep(200); prev = plans.size }
+    } finally spark.listenerManager.unregister(listener)
+    val all = plans.asScala.toSeq
+    all.find(p => p.contains("BroadcastNestedLoopJoin") || p.contains("CartesianProduct"))
+      .foreach(p => fail(s"$label plans a quadratic join:\n$p"))
+    if (iterative)
+      assert(all.exists(_.contains("Join")),
+        s"$label: no captured plan joins, the guard is vacuous:\n${all.mkString("\n")}")
   }
 
   test("LSH near-dup pairs: bucket equi-joins only") {
@@ -103,7 +140,7 @@ class ScalePlanGuardsSpec extends SparkSuite {
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
     assertNoQuadraticJoin(
       PageRank.ranks(edges, "src", "dst", PageRank.Params(iterations = 2)),
-      "pageRank")
+      "pageRank", iterative = true)
   }
 
   test("perceptual dHash pairs: 16-bit band equi-join only") {
@@ -130,7 +167,8 @@ class ScalePlanGuardsSpec extends SparkSuite {
   test("k-core peel: degree agg + semi-join rounds only") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L)).toDF("u", "v")
-    assertNoQuadraticJoin(KCore.core(edges, "u", "v", k = 2, rounds = 2), "kcore")
+    assertNoQuadraticJoin(KCore.core(edges, "u", "v", k = 2, rounds = 2), "kcore",
+      iterative = true)
   }
 
   test("spatial radius join: 3x3 cell equi-join only") {
@@ -146,29 +184,41 @@ class ScalePlanGuardsSpec extends SparkSuite {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 1L), (1L, 4L)).toDF("u", "v")
     assertNoQuadraticJoin(
-      LabelPropagation.communities(edges, "u", "v", rounds = 2), "lpa")
+      LabelPropagation.communities(edges, "u", "v", rounds = 2), "lpa",
+      iterative = true)
   }
 
   test("BFS frontier expansion: src equi-join + anti-join rounds only") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
-    // checkpoint=false: lineage cuts would hide every round behind an
-    // opaque RDD scan and make this assertion vacuous
-    val df = Bfs.distances(edges, "src", "dst", Seq(1L), maxHops = 3,
-      checkpoint = false)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Join"), s"expected visible round joins:\n$plan")
-    assertNoQuadraticJoin(df, "bfs")
+    assertNoQuadraticJoin(
+      Bfs.distances(edges, "src", "dst", Seq(1L), maxHops = 3), "bfs",
+      iterative = true)
   }
 
   test("SSSP relaxation: src equi-join + min-agg rounds only") {
     import spark.implicits._
     val edges = Seq((1L, 2L, 3L), (2L, 3L, 4L)).toDF("src", "dst", "w")
-    val df = Sssp.costs(edges, "src", "dst", "w", Seq(1L), rounds = 3,
-      checkpoint = false)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("Join"), s"expected visible round joins:\n$plan")
-    assertNoQuadraticJoin(df, "sssp")
+    assertNoQuadraticJoin(
+      Sssp.costs(edges, "src", "dst", "w", Seq(1L), rounds = 3), "sssp",
+      iterative = true)
+  }
+
+  test("transitive closure: far-vs-pairs equi-join rounds only") {
+    import spark.implicits._
+    val chain = (1L until 10L).map(k => (k + 1, k)).toDF("n", "p")
+    assertNoQuadraticJoin(
+      TransitiveClosure.ancestors(chain, "n", "p", doublingRounds = 3),
+      "transitive closure", iterative = true)
+  }
+
+  test("near-dup clusters: neighbor-min + label-of-label equi-join rounds only") {
+    import spark.implicits._
+    val nodes = (1L to 6L).toDF("id")
+    val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("a", "b")
+    assertNoQuadraticJoin(
+      NearDupClusters.representatives(nodes, pairs, "id"),
+      "near-dup clusters", iterative = true)
   }
 
   test("incremental agg merge: union + partial-agg only (no join at all)") {
