@@ -18,17 +18,24 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // Legacy fixture form: parquet TIMESTAMP(NANOS), which Spark's
-    // vectorized reader rejects unless surfaced as a nanos long.
-    // Harmless for micros fixtures (the conf only affects NANOS).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$dir/$name.parquet")
+    val df = raw(spark, dir, name)
     name match {
       case "events"   => normalizeEventTs(df)
       case "orders"   => normalizeDateCol(df, "o_orderdate")
       case "lineitem" => normalizeDateCol(df, "l_shipdate")
       case _          => df
     }
+  }
+
+  /** Fixture table `name` as stored, before the normalisations
+    * [[apply]] adds.
+    */
+  def raw(spark: SparkSession, dir: String, name: String): DataFrame = {
+    // Legacy fixture form: parquet TIMESTAMP(NANOS), which Spark's
+    // vectorized reader rejects unless surfaced as a nanos long.
+    // Harmless for micros fixtures (the conf only affects NANOS).
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.read.parquet(s"$dir/$name.parquet")
   }
 
   /** Fixture contract: `events.ts` is exposed as MICROS-since-epoch

@@ -1,7 +1,5 @@
 package graft.queries
 
-import java.util.concurrent.ConcurrentHashMap
-
 import graft.Tables
 import graft.lake.{LakeSink, LakeTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -15,24 +13,24 @@ import org.apache.spark.sql.functions._
   * recompute the same end state directly from the parquet with plain
   * SQL. Equality therefore certifies the log replay, snapshot
   * isolation, stats-pruned rewrites and idempotent sink TOGETHER,
-  * end-to-end, not just per-op in unit tests.
-  *
-  * The chains are built once per (JVM, fixture dir) and memoized like
-  * the ANN index caches — the bench's median-of-3 then measures the
-  * amortized READ cost, which is what a deployed lakehouse pays.
+  * end-to-end, not just per-op in unit tests. The chains are
+  * [[PerFixture]] artifacts; the replays build fresh tables per run.
   */
 object LakeQueries {
 
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  private lazy val lakeRoot =
-    java.nio.file.Files.createTempDirectory("graft_lake_q").toString
-  private def dirKey(dir: String): String = {
-    var h = -3750763034362895579L // FNV-1a 64 offset basis
-    dir.foreach { c => h ^= c.toLong; h *= 1099511628211L }
-    dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(40) +
-      "_" + java.lang.Long.toHexString(h)
+  /** Registers lake catalog `<prefix>_<hash of dir>` over `warehouse`
+    * and creates its `core` namespace; returns the catalog name.
+    */
+  private def catalog(s: SparkSession, prefix: String, dir: String,
+                      warehouse: String): String = {
+    val cat = s"${prefix}_${PerFixture.hash(dir)}"
+    s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
+    s.conf.set(s"spark.sql.catalog.$cat.warehouse", warehouse)
+    s.sql(s"CREATE NAMESPACE $cat.core")
+    cat
   }
 
   /** Seed: orders keys < 4000 as (o_orderkey, o_custkey,
@@ -48,10 +46,8 @@ object LakeQueries {
     * ties favor D — plus 50 fresh inserts) → v3 delete keys
     * [1000,1999] → v4 compact into 3 clustered files.
     */
-  private val chainCache = new ConcurrentHashMap[String, String]()
   private[graft] def chainFor(s: SparkSession, dir: String): String =
-    chainCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/chain_${dirKey(dir)}"
+    PerFixture("chain", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root, sd.where(col("o_orderkey") % 2 === 0),
         Seq("o_orderkey"), nFiles = 8, clusterBy = Some("o_orderkey"))
@@ -77,17 +73,15 @@ object LakeQueries {
       LakeTable.compact(s, root, smallBytes = Long.MaxValue,
         targetBytes = math.max(1L, liveBytes / 3))
       root
-    })
+    }
 
   /** Sink chain: exactly-once streaming appends — batch 0, a REPLAY
     * of batch 0 (must be skipped), batch 1 — then compaction and a
     * vacuum that retains only the compacted version, so the final
     * read also proves vacuum deleted nothing live.
     */
-  private val sinkCache = new ConcurrentHashMap[String, String]()
   private def sinkFor(s: SparkSession, dir: String): String =
-    sinkCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/sink_${dirKey(dir)}"
+    PerFixture("sink", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root, sd.where(col("o_orderkey") < 0),
         Seq("o_orderkey"), nFiles = 1)
@@ -102,17 +96,15 @@ object LakeQueries {
       LakeTable.vacuum(s, root, keepFromVersion = compacted,
         retentionMs = 0L)
       root
-    })
+    }
 
   /** Evolution chain: v0 create (o_orderkey, o_cents) for keys
     * < 1500 → v1 mergeSchema append of keys [1500, 3000) carrying the
     * NEW o_orderstatus column. Latest reads must back-fill the
     * pre-evolution rows with null status.
     */
-  private val evoCache = new ConcurrentHashMap[String, String]()
   private def evoFor(s: SparkSession, dir: String): String =
-    evoCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/evo_${dirKey(dir)}"
+    PerFixture("evo", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root,
         sd.where(col("o_orderkey") < 1500).select("o_orderkey", "o_cents"),
@@ -122,7 +114,7 @@ object LakeQueries {
           .select("o_orderkey", "o_cents", "o_orderstatus"),
         nFiles = 2, mergeSchema = true)
       root
-    })
+    }
 
   /** Z-order chain: orders keys < 4000 laid out on the Morton curve
     * of (o_custkey, o_orderkey) — a predicate on EITHER column
@@ -130,28 +122,24 @@ object LakeQueries {
     * query pins the row-level correctness of a custkey-range read
     * the key-sorted layout could not have pruned).
     */
-  private val zCache = new ConcurrentHashMap[String, String]()
   private def zFor(s: SparkSession, dir: String): String =
-    zCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/zord_${dirKey(dir)}"
+    PerFixture("zord", dir) { root =>
       LakeTable.create(s, root, seed(s, dir), Seq("o_custkey", "o_orderkey"),
         nFiles = 16,
         clusterBy = Some(LakeTable.zCluster("o_custkey", "o_orderkey")))
       root
-    })
+    }
 
   /** Hilbert twin of [[zFor]]: same data, same dims, the
     * better-locality curve.
     */
-  private val hCache = new ConcurrentHashMap[String, String]()
   private def hFor(s: SparkSession, dir: String): String =
-    hCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/hilb_${dirKey(dir)}"
+    PerFixture("hilb", dir) { root =>
       LakeTable.create(s, root, seed(s, dir), Seq("o_custkey", "o_orderkey"),
         nFiles = 16,
         clusterBy = Some(LakeTable.hilbertCluster("o_custkey", "o_orderkey")))
       root
-    })
+    }
 
   /** 3-D sibling of [[zFor]]: (tenant-ish, day-ish, key) — the layout
     * a (o_custkey, omday, o_orderkey) Morton interleave gives prunes
@@ -160,10 +148,8 @@ object LakeQueries {
     * spec survives maintenance (writeDataFiles re-enters layoutN with
     * the same recorded spec).
     */
-  private val z3Cache = new ConcurrentHashMap[String, String]()
   private def z3For(s: SparkSession, dir: String): String =
-    z3Cache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/zord3_${dirKey(dir)}"
+    PerFixture("zord3", dir) { root =>
       val df = t(s, dir, "orders").where(col("o_orderkey") < 4000)
         .select(col("o_orderkey"), col("o_custkey"),
           dayofmonth(col("o_orderdate")).cast("long").as("omday"),
@@ -176,7 +162,7 @@ object LakeQueries {
         targetBytes = math.max(1L, LakeTable.snapshot(s, root).files
           .map(_.stats.bytes).sum / 16))
       root
-    })
+    }
 
   /** Partitioned + curve-clustered chain — the standard 100 TB
     * layout: directory partitioning on the coarse time column
@@ -188,10 +174,8 @@ object LakeQueries {
     * re-enters the same spec; per-dimension file-pruning ratios
     * pinned in LakeSqlReadSpec).
     */
-  private val pzCache = new ConcurrentHashMap[String, String]()
   private def pzFor(s: SparkSession, dir: String): String =
-    pzCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/pzord_${dirKey(dir)}"
+    PerFixture("pzord", dir) { root =>
       val df = t(s, dir, "orders").where(col("o_orderkey") < 4000)
         .select(col("o_orderkey"), col("o_custkey"),
           month(col("o_orderdate")).cast("long").as("omonth"),
@@ -205,17 +189,15 @@ object LakeQueries {
         targetBytes = math.max(1L, LakeTable.snapshot(s, root).files
           .map(_.stats.bytes).sum / 24))
       root
-    })
+    }
 
   /** 3-D HILBERT sibling of [[z3For]] — same dims, the Skilling
     * transform curve; compacted so the read certifies n-D Hilbert
     * spec survival through maintenance (zCluster/hilbertCluster
     * parity, HilbertSpec pins the curve's bijectivity + adjacency).
     */
-  private val h3Cache = new ConcurrentHashMap[String, String]()
   private def h3For(s: SparkSession, dir: String): String =
-    h3Cache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/hilb3_${dirKey(dir)}"
+    PerFixture("hilb3", dir) { root =>
       val df = t(s, dir, "orders").where(col("o_orderkey") < 4000)
         .select(col("o_orderkey"), col("o_custkey"),
           dayofmonth(col("o_orderdate")).cast("long").as("omday"),
@@ -228,17 +210,15 @@ object LakeQueries {
         targetBytes = math.max(1L, LakeTable.snapshot(s, root).files
           .map(_.stats.bytes).sum / 16))
       root
-    })
+    }
 
   /** Merge-on-read chain: create (8 key-clustered files) → MOR delete
     * [500,999] → MOR delete [800,1299] (overlap: positions carry
     * forward cumulatively, never recount). NO data file is rewritten
     * — every read below must apply the deletion-vector sidecar.
     */
-  private val morCache = new ConcurrentHashMap[String, String]()
   private def morFor(s: SparkSession, dir: String): String =
-    morCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/mor_${dirKey(dir)}"
+    PerFixture("mor", dir) { root =>
       LakeTable.create(s, root, seed(s, dir), Seq("o_orderkey"),
         nFiles = 8, clusterBy = Some("o_orderkey"))
       LakeTable.deleteWhereMor(s, root,
@@ -246,7 +226,7 @@ object LakeQueries {
       LakeTable.deleteWhereMor(s, root,
         Seq(LakeTable.ColRange("o_orderkey", Some(800L), Some(1299L))))
       root
-    })
+    }
 
   /** Zero-copy clone of the maintained chain, then a MOR delete of
     * [2000,2499] applied ONLY to the clone — the branch-and-edit
@@ -257,15 +237,13 @@ object LakeQueries {
     * statement surface commits through the same [[LakeTable
     * .shallowClone]] the library call would.
     */
-  private val cloneCache = new ConcurrentHashMap[String, String]()
   private def cloneFor(s: SparkSession, dir: String): String =
-    cloneCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/clone_${dirKey(dir)}"
+    PerFixture("clone", dir) { root =>
       s.sql(s"CREATE TABLE '$root' SHALLOW CLONE '${chainFor(s, dir)}'")
       LakeTable.deleteWhereMor(s, root,
         Seq(LakeTable.ColRange("o_orderkey", Some(2000L), Some(2499L))))
       root
-    })
+    }
 
   /** Deep-clone chain: dedicated source (4 clustered files) + a MOR
     * delete of [700,1199] (so the clone INHERITS a deletion vector),
@@ -276,11 +254,9 @@ object LakeQueries {
     * localized copies preserved the DV file identity (the inherited
     * deletions still apply).
     */
-  private val deepCloneCache = new ConcurrentHashMap[String, String]()
   private def deepCloneFor(s: SparkSession, dir: String): String =
-    deepCloneCache.computeIfAbsent(dir, _ => {
-      val src = s"$lakeRoot/dcsrc_${dirKey(dir)}"
-      val root = s"$lakeRoot/dclone_${dirKey(dir)}"
+    PerFixture("dclone", dir) { root =>
+      val src = PerFixture.path("dcsrc", dir)
       LakeTable.create(s, src, seed(s, dir), Seq("o_orderkey"),
         nFiles = 4, clusterBy = Some("o_orderkey"))
       LakeTable.deleteWhereMor(s, src,
@@ -289,13 +265,9 @@ object LakeQueries {
       LakeTable.vacuum(s, src,
         keepFromVersion = LakeTable.latestVersion(s, src).get,
         retentionMs = 0L)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(src))
+      PerFixture.remove(src)
       root
-    })
+    }
 
   /** Restore chain: create(even keys) → append(odd keys) → COW
     * delete [1000,1999] → RESTORE to v0. The final read must equal
@@ -304,10 +276,8 @@ object LakeQueries {
     * itself runs as VERBATIM SQL TEXT (`RESTORE TABLE ... TO VERSION
     * AS OF 0`) through the maintenance parser.
     */
-  private val restoreCache = new ConcurrentHashMap[String, String]()
   private def restoreFor(s: SparkSession, dir: String): String =
-    restoreCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/restore_${dirKey(dir)}"
+    PerFixture("restore", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root, sd.where(col("o_orderkey") % 2 === 0),
         Seq("o_orderkey"), nFiles = 4, clusterBy = Some("o_orderkey"))
@@ -317,7 +287,7 @@ object LakeQueries {
         Seq(LakeTable.ColRange("o_orderkey", Some(1000L), Some(1999L))))
       s.sql(s"RESTORE TABLE '$root' TO VERSION AS OF 0")
       root
-    })
+    }
 
   /** In-place dedup chain: the documents fixture plus planted
     * duplicates (every doc_id % 5 == 0 re-inserted under
@@ -327,10 +297,8 @@ object LakeQueries {
     * must equal DuckDB's min-doc_id-per-text fold of the same
     * planted corpus.
     */
-  private val dedupCache = new ConcurrentHashMap[String, String]()
   private def dedupFor(s: SparkSession, dir: String): String =
-    dedupCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/dedup_${dirKey(dir)}"
+    PerFixture("dedup", dir) { root =>
       val docs = t(s, dir, "documents").select("doc_id", "text", "lang")
       val planted = docs.where(col("doc_id") % 5 === 0)
         .withColumn("doc_id", col("doc_id") + 10000)
@@ -338,7 +306,7 @@ object LakeQueries {
         nFiles = 4, clusterBy = Some("doc_id"))
       LakeTable.dedupTable(s, root, Seq("text"), "doc_id")
       root
-    })
+    }
 
   private val seq = new java.util.concurrent.atomic.AtomicLong(0L)
 
@@ -350,7 +318,7 @@ object LakeQueries {
     */
   private def tailReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val root = s"$lakeRoot/tail_${dirKey(dir)}_$n"
+    val root = s"${PerFixture.path("tail", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, root, sd.where(col("o_orderkey") < 400),
       Seq("o_orderkey"), nFiles = 1)
@@ -387,9 +355,9 @@ object LakeQueries {
     */
   private def pipelineReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val src = s"$lakeRoot/pipe_src_${dirKey(dir)}_$n"
-    val dst = s"$lakeRoot/pipe_dst_${dirKey(dir)}_$n"
-    val ckpt = s"$lakeRoot/pipe_ckpt_${dirKey(dir)}_$n"
+    val src = s"${PerFixture.path("pipe_src", dir)}_$n"
+    val dst = s"${PerFixture.path("pipe_dst", dir)}_$n"
+    val ckpt = s"${PerFixture.path("pipe_ckpt", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, src, sd.where(col("o_orderkey") < 400),
       Seq("o_orderkey"), nFiles = 1)
@@ -422,17 +390,13 @@ object LakeQueries {
     */
   private def toTableReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-    val cat = s"glstt_${key}_$n"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      s"$lakeRoot/sttwh_${key}_$n")
-    s.sql(s"CREATE NAMESPACE $cat.core")
+    val cat = catalog(s, s"glstt_$n", dir,
+      s"${PerFixture.path("sttwh", dir)}_$n")
     s.sql(s"CREATE TABLE $cat.core.dst (o_orderkey BIGINT, " +
       "o_custkey BIGINT, o_orderstatus STRING, o_cents BIGINT) " +
       "TBLPROPERTIES (clusterBy = 'o_orderkey')")
-    val src = s"$lakeRoot/stt_src_${dirKey(dir)}_$n"
-    val ckpt = s"$lakeRoot/stt_ckpt_${dirKey(dir)}_$n"
+    val src = s"${PerFixture.path("stt_src", dir)}_$n"
+    val ckpt = s"${PerFixture.path("stt_ckpt", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, src, sd.where(col("o_orderkey") < 400),
       Seq("o_orderkey"), nFiles = 1)
@@ -463,9 +427,9 @@ object LakeQueries {
     */
   private def upsertReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val src = s"$lakeRoot/ups_src_${dirKey(dir)}_$n"
-    val dst = s"$lakeRoot/ups_dst_${dirKey(dir)}_$n"
-    val ckpt = s"$lakeRoot/ups_ckpt_${dirKey(dir)}_$n"
+    val src = s"${PerFixture.path("ups_src", dir)}_$n"
+    val dst = s"${PerFixture.path("ups_dst", dir)}_$n"
+    val ckpt = s"${PerFixture.path("ups_ckpt", dir)}_$n"
     val sd = seed(s, dir)
     def changes(df: org.apache.spark.sql.DataFrame, v: Long, op: String,
                 dCents: Long, status: String) =
@@ -507,7 +471,7 @@ object LakeQueries {
     */
   private def cdfReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val root = s"$lakeRoot/cdf_${dirKey(dir)}_$n"
+    val root = s"${PerFixture.path("cdf", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, root, sd.where(col("o_orderkey") < 400),
       Seq("o_orderkey"), nFiles = 2, clusterBy = Some("o_orderkey"))
@@ -554,9 +518,9 @@ object LakeQueries {
     */
   private def replicateReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val src = s"$lakeRoot/repl_src_${dirKey(dir)}_$n"
-    val dst = s"$lakeRoot/repl_dst_${dirKey(dir)}_$n"
-    val ckpt = s"$lakeRoot/repl_ckpt_${dirKey(dir)}_$n"
+    val src = s"${PerFixture.path("repl_src", dir)}_$n"
+    val dst = s"${PerFixture.path("repl_dst", dir)}_$n"
+    val ckpt = s"${PerFixture.path("repl_ckpt", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, src, sd.where(col("o_orderkey") < 1000),
       Seq("o_orderkey"), nFiles = 2, clusterBy = Some("o_orderkey"))
@@ -624,25 +588,20 @@ object LakeQueries {
     * identifier; every statement committed through the same LakeLog
     * transaction machinery as the library calls.
     */
-  private val catCache = new ConcurrentHashMap[String, String]()
   private def catFor(s: SparkSession, dir: String): String =
-    catCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glq_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/cat_$key")
+    PerFixture("cat", dir) { wh =>
+      val cat = catalog(s, "glq", dir, wh)
       val ident = s"$cat.core.ord"
-      seed(s, dir).createOrReplaceTempView(s"lakeq_seed_$key")
-      s.sql(s"CREATE NAMESPACE $cat.core")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_custkey BIGINT, " +
         "o_orderstatus STRING, o_cents BIGINT) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '4')")
-      s.sql(s"INSERT INTO $ident SELECT * FROM lakeq_seed_$key")
+      s.sql(s"INSERT INTO $ident SELECT * FROM ${cat}_seed")
       s.sql(s"DELETE FROM $ident WHERE o_orderkey BETWEEN 1000 AND 1999")
       s.sql(s"ALTER TABLE $ident ADD COLUMNS (flag STRING)")
       s.sql(s"INSERT INTO $ident SELECT o_orderkey + 10000, o_custkey, " +
         "o_orderstatus, o_cents, 'late' " +
-        s"FROM lakeq_seed_$key WHERE o_orderkey < 500")
+        s"FROM ${cat}_seed WHERE o_orderkey < 500")
       // row-level SQL DML: an UPDATE with a non-range predicate (the
       // general rewrite command) and a three-clause MERGE INTO
       s.sql(s"UPDATE $ident SET o_cents = o_cents + 17 " +
@@ -652,8 +611,8 @@ object LakeQueries {
         .unionByName(seed(s, dir).where(col("o_orderkey") < 200)
           .select((col("o_orderkey") + 50000).as("sid"),
             (col("o_cents") * 2).as("scents")))
-        .createOrReplaceTempView(s"lakeq_msrc_$key")
-      s.sql(s"""MERGE INTO $ident t USING lakeq_msrc_$key s
+        .createOrReplaceTempView(s"${cat}_msrc")
+      s.sql(s"""MERGE INTO $ident t USING ${cat}_msrc s
         ON t.o_orderkey = s.sid
         WHEN MATCHED THEN UPDATE SET o_cents = s.scents,
           o_orderstatus = 'M'
@@ -661,7 +620,7 @@ object LakeQueries {
           (o_orderkey, o_custkey, o_orderstatus, o_cents, flag)
           VALUES (s.sid, -1, 'I', s.scents, 'merged')""")
       ident
-    })
+    }
 
   /** Evolving-merge chain (own catalog, pure SQL): create
     * (o_orderkey, o_cents) for keys < 1500, then `MERGE WITH SCHEMA
@@ -670,26 +629,21 @@ object LakeQueries {
     * insert, and the untouched pre-evolution files (keys < 1000) must
     * read NULL for the evolved column.
     */
-  private val mergeEvoCache = new ConcurrentHashMap[String, String]()
   private def mergeEvoFor(s: SparkSession, dir: String): String =
-    mergeEvoCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glme_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/me_$key")
+    PerFixture("me", dir) { wh =>
+      val cat = catalog(s, "glme", dir, wh)
       val ident = s"$cat.core.ord"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_cents BIGINT) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '3')")
-      seed(s, dir).createOrReplaceTempView(s"lakeq_meseed_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"INSERT INTO $ident SELECT o_orderkey, o_cents " +
-        s"FROM lakeq_meseed_$key WHERE o_orderkey < 1500")
+        s"FROM ${cat}_seed WHERE o_orderkey < 1500")
       // evolution resolves the new target column BY SOURCE NAME: the
       // source schema must carry `o_orderstatus` for the analyzer's
       // schemaChanges to add it to the target
       s.sql(s"""MERGE WITH SCHEMA EVOLUTION INTO $ident t
         USING (SELECT o_orderkey, o_cents + 5 AS o_cents, o_orderstatus
-               FROM lakeq_meseed_$key
+               FROM ${cat}_seed
                WHERE o_orderkey >= 1000 AND o_orderkey < 3000) s
         ON t.o_orderkey = s.o_orderkey
         WHEN MATCHED THEN UPDATE SET o_cents = s.o_cents,
@@ -697,7 +651,7 @@ object LakeQueries {
         WHEN NOT MATCHED THEN INSERT (o_orderkey, o_cents, o_orderstatus)
           VALUES (s.o_orderkey, s.o_cents, s.o_orderstatus)""")
       ident
-    })
+    }
 
   /** SQL-widening chain (own catalog, pure SQL): create
     * (o_orderkey INT, o_cents INT) for keys < 1500, widen BOTH columns
@@ -705,26 +659,21 @@ object LakeQueries {
     * metadata commits, nothing rewritten), then a plain INSERT of
     * keys [1500, 3000) with +3e9 cents — beyond int range.
     */
-  private val widenSqlCache = new ConcurrentHashMap[String, String]()
   private def widenSqlFor(s: SparkSession, dir: String): String =
-    widenSqlCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glws_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/ws_$key")
+    PerFixture("ws", dir) { wh =>
+      val cat = catalog(s, "glws", dir, wh)
       val ident = s"$cat.core.ord"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       s.sql(s"CREATE TABLE $ident (o_orderkey INT, o_cents INT) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '2')")
-      seed(s, dir).createOrReplaceTempView(s"lakeq_wsseed_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"INSERT INTO $ident SELECT CAST(o_orderkey AS INT), " +
-        s"CAST(o_cents AS INT) FROM lakeq_wsseed_$key WHERE o_orderkey < 1500")
+        s"CAST(o_cents AS INT) FROM ${cat}_seed WHERE o_orderkey < 1500")
       s.sql(s"ALTER TABLE $ident ALTER COLUMN o_orderkey TYPE BIGINT")
       s.sql(s"ALTER TABLE $ident ALTER COLUMN o_cents TYPE BIGINT")
       s.sql(s"INSERT INTO $ident SELECT o_orderkey, o_cents + 3000000000 " +
-        s"FROM lakeq_wsseed_$key WHERE o_orderkey >= 1500 AND o_orderkey < 3000")
+        s"FROM ${cat}_seed WHERE o_orderkey >= 1500 AND o_orderkey < 3000")
       ident
-    })
+    }
 
   /** Atomic-replace chain (own catalog, pure SQL): create + insert +
     * CHECK constraint, then `REPLACE TABLE ... AS SELECT` swaps in a
@@ -733,37 +682,30 @@ object LakeQueries {
     * recorded, staged files range-clustered, pre-replace versions
     * still travelable.
     */
-  private val replaceSqlCache = new ConcurrentHashMap[String, String]()
   private def replaceSqlFor(s: SparkSession, dir: String): String =
-    replaceSqlCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glrp_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/rp_$key")
+    PerFixture("rp", dir) { wh =>
+      val cat = catalog(s, "glrp", dir, wh)
       val ident = s"$cat.core.ord"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_cents BIGINT) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey')")
-      seed(s, dir).createOrReplaceTempView(s"lakeq_rpseed_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"INSERT INTO $ident SELECT o_orderkey, o_cents " +
-        s"FROM lakeq_rpseed_$key WHERE o_orderkey < 1000")
+        s"FROM ${cat}_seed WHERE o_orderkey < 1000")
       s.sql(s"ALTER TABLE $ident ADD CONSTRAINT nonneg CHECK (o_cents >= 0)")
       s.sql(s"REPLACE TABLE $ident " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '2') " +
         "AS SELECT o_orderkey, o_custkey, o_cents + 1 AS o_cents " +
-        s"FROM lakeq_rpseed_$key WHERE o_orderkey < 3000")
+        s"FROM ${cat}_seed WHERE o_orderkey < 3000")
       ident
-    })
+    }
 
   /** Rename chain: v0 create (o_orderkey, o_cents) for keys < 1500 →
     * v1 RENAME COLUMN o_cents -> cents_total (metadata-only, column
     * mapping) → v2 append keys [1500, 3000) under the new name.
     * Old files must read their values under the new logical name.
     */
-  private val renameCache = new ConcurrentHashMap[String, String]()
   private def renameFor(s: SparkSession, dir: String): String =
-    renameCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/rename_${dirKey(dir)}"
+    PerFixture("rename", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root,
         sd.where(col("o_orderkey") < 1500).select("o_orderkey", "o_cents"),
@@ -775,17 +717,15 @@ object LakeQueries {
           .select(col("o_orderkey"), col("o_cents").as("cents_total")),
         nFiles = 2)
       root
-    })
+    }
 
   /** Widening chain: v0 create (o_orderkey INT, o_cents INT) for keys
     * < 1500 → v1 widenTypes append of keys [1500, 3000) as BIGINT
     * with +3e9 cents (beyond int range) — old int32 files must read
     * exactly through the widened schema, nothing rewritten.
     */
-  private val widenCache = new ConcurrentHashMap[String, String]()
   private def widenFor(s: SparkSession, dir: String): String =
-    widenCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/widen_${dirKey(dir)}"
+    PerFixture("widen", dir) { root =>
       val sd = seed(s, dir)
       LakeTable.create(s, root,
         sd.where(col("o_orderkey") < 1500)
@@ -798,7 +738,7 @@ object LakeQueries {
             (col("o_cents") + 3000000000L).as("o_cents")),
         nFiles = 2, mergeSchema = true, widenTypes = true)
       root
-    })
+    }
 
   /** PARTITIONED chain, pure SQL through the catalog: CREATE TABLE
     * PARTITIONED BY (o_orderstatus) + clusterBy, INSERT INTO, a
@@ -808,27 +748,21 @@ object LakeQueries {
     * state from raw parquet, so equality certifies the partition
     * round-trip (values, pruning, DML respecting boundaries) whole.
     */
-  private val partCache = new ConcurrentHashMap[String, String]()
   private def partFor(s: SparkSession, dir: String): String =
-    partCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glpart_$key"
-      val wh = s"$lakeRoot/partwh_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-      s.sql(s"CREATE NAMESPACE $cat.core")
+    PerFixture("part", dir) { wh =>
+      val cat = catalog(s, "glpart", dir, wh)
       s.sql(s"CREATE TABLE $cat.core.p (o_orderkey BIGINT, " +
         "o_custkey BIGINT, o_orderstatus STRING, o_cents BIGINT) " +
         "PARTITIONED BY (o_orderstatus) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '4')")
-      seed(s, dir).createOrReplaceTempView(s"seed_part_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"INSERT INTO $cat.core.p SELECT o_orderkey, o_custkey, " +
-        s"o_orderstatus, o_cents FROM seed_part_$key")
+        s"o_orderstatus, o_cents FROM ${cat}_seed")
       s.sql(s"DELETE FROM $cat.core.p WHERE o_orderstatus = 'F' " +
         "AND o_orderkey BETWEEN 500 AND 1499")
       s.sql(s"OPTIMIZE $cat.core.p")
       s"$wh/core/p"
-    })
+    }
 
   /** CONVERT chain: "pre-existing data" = a plain Spark
     * `write.partitionBy(o_orderstatus)` parquet directory of the
@@ -836,16 +770,14 @@ object LakeQueries {
     * partition values), then a DELETE proves the adopted table is
     * fully DML-live.
     */
-  private val convCache = new ConcurrentHashMap[String, String]()
   private def convFor(s: SparkSession, dir: String): String =
-    convCache.computeIfAbsent(dir, _ => {
-      val root = s"$lakeRoot/conv_${dirKey(dir)}"
+    PerFixture("conv", dir) { root =>
       seed(s, dir).write.partitionBy("o_orderstatus").parquet(root)
       s.sql(s"CONVERT TO LAKE '$root'")
       LakeTable.deleteWhere(s, root,
         Seq(LakeTable.ColRange("o_orderkey", Some(3000L), Some(3999L))))
       root
-    })
+    }
 
   /** Update-mode keyed upserts through the DSv2 `toTable` sink — the
     * `stream_lake_upsert_replay` twin driven by
@@ -859,12 +791,8 @@ object LakeQueries {
     */
   private def totableUpsertReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-    val cat = s"glttu_${key}_$n"
-    val wh = s"$lakeRoot/ttuwh_${key}_$n"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
-    s.sql(s"CREATE NAMESPACE $cat.core")
+    val wh = s"${PerFixture.path("ttuwh", dir)}_$n"
+    val cat = catalog(s, s"glttu_$n", dir, wh)
     s.sql(s"CREATE TABLE $cat.core.dst (o_orderkey BIGINT, " +
       "o_custkey BIGINT, o_orderstatus STRING, o_cents BIGINT) " +
       "TBLPROPERTIES (clusterBy = 'o_orderkey')")
@@ -875,8 +803,8 @@ object LakeQueries {
     def delta(df: DataFrame, st: String, d: Long): DataFrame = df
       .withColumn("o_orderstatus", lit(st))
       .withColumn("o_cents", col("o_cents") + d)
-    val src = s"$lakeRoot/ttu_src_${key}_$n"
-    val ckpt = s"$lakeRoot/ttu_ckpt_${key}_$n"
+    val src = s"${PerFixture.path("ttu_src", dir)}_$n"
+    val ckpt = s"${PerFixture.path("ttu_ckpt", dir)}_$n"
     LakeTable.create(s, src,
       delta(sd.where(col("o_orderkey") < 500), "A", 1L),
       Seq("o_orderkey"), nFiles = 1)
@@ -907,36 +835,31 @@ object LakeQueries {
     * exists default (old files keep reading 'legacy', new omissions
     * read null).
     */
-  private val semCache = new ConcurrentHashMap[String, String]()
   private def semFor(s: SparkSession, dir: String): String =
-    semCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glsem_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/sem_$key")
+    PerFixture("sem", dir) { wh =>
+      val cat = catalog(s, "glsem", dir, wh)
       val ident = s"$cat.core.ord"
-      s.sql(s"CREATE NAMESPACE $cat.core")
-      seed(s, dir).createOrReplaceTempView(s"lakeq_semseed_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_cents BIGINT, " +
         "status STRING DEFAULT 'open', pri INT DEFAULT 3) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '3')")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_cents) " +
-        s"SELECT o_orderkey, o_cents FROM lakeq_semseed_$key " +
+        s"SELECT o_orderkey, o_cents FROM ${cat}_seed " +
         "WHERE o_orderkey < 1000")
       s.sql(s"INSERT INTO $ident " +
-        s"SELECT o_orderkey, o_cents, 'filled', 7 FROM lakeq_semseed_$key " +
+        s"SELECT o_orderkey, o_cents, 'filled', 7 FROM ${cat}_seed " +
         "WHERE o_orderkey >= 1000 AND o_orderkey < 2000")
       s.sql(s"ALTER TABLE $ident ADD COLUMN tag STRING DEFAULT 'legacy'")
       s.sql(s"ALTER TABLE $ident ALTER COLUMN status SET DEFAULT 'new'")
       s.sql(s"ALTER TABLE $ident ALTER COLUMN pri DROP DEFAULT")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_cents) " +
-        s"SELECT o_orderkey, o_cents FROM lakeq_semseed_$key " +
+        s"SELECT o_orderkey, o_cents FROM ${cat}_seed " +
         "WHERE o_orderkey >= 2000 AND o_orderkey < 2500")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_cents, tag) " +
-        s"SELECT o_orderkey, o_cents, 'fresh' FROM lakeq_semseed_$key " +
+        s"SELECT o_orderkey, o_cents, 'fresh' FROM ${cat}_seed " +
         "WHERE o_orderkey >= 2500 AND o_orderkey < 3000")
       ident
-    })
+    }
 
   /** Generated-partition chain: the Delta/Iceberg time-series shape —
     * `day` is GENERATED ALWAYS from the event timestamp AND the
@@ -944,18 +867,13 @@ object LakeQueries {
     * files land under `day=.../`, and a day-equality read prunes whole
     * directories.
     */
-  private val genCache = new ConcurrentHashMap[String, String]()
   private def genFor(s: SparkSession, dir: String): String =
-    genCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glgen_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/gen_$key")
+    PerFixture("gen", dir) { wh =>
+      val cat = catalog(s, "glgen", dir, wh)
       val ident = s"$cat.core.ev"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       t(s, dir, "events").where(col("event_id") < 5000)
         .select(col("event_id"), col("ts"), col("value"))
-        .createOrReplaceTempView(s"lakeq_genseed_$key")
+        .createOrReplaceTempView(s"${cat}_seed")
       // Tables() exposes events.ts as micros-since-epoch BIGINT (the
       // fixture contract); the generated day is derived through
       // timestamp_micros under the UTC session
@@ -965,9 +883,9 @@ object LakeQueries {
         "value DOUBLE) PARTITIONED BY (day) " +
         "TBLPROPERTIES (clusterBy = 'event_id', nFiles = '2')")
       s.sql(s"INSERT INTO $ident (event_id, ts, value) " +
-        s"SELECT event_id, ts, value FROM lakeq_genseed_$key")
+        s"SELECT event_id, ts, value FROM ${cat}_seed")
       ident
-    })
+    }
 
   /** Identity chain: GENERATED ALWAYS AS IDENTITY ids allocated over
     * two INSERT commits and a MERGE (updates keep their ids, inserts
@@ -976,35 +894,30 @@ object LakeQueries {
     * row count, distinct count, floor — plus the exact business
     * columns.
     */
-  private val idCache = new ConcurrentHashMap[String, String]()
   private def idFor(s: SparkSession, dir: String): String =
-    idCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glid_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/id_$key")
+    PerFixture("id", dir) { wh =>
+      val cat = catalog(s, "glid", dir, wh)
       val ident = s"$cat.core.ord"
-      s.sql(s"CREATE NAMESPACE $cat.core")
-      seed(s, dir).createOrReplaceTempView(s"lakeq_idseed_$key")
+      seed(s, dir).createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (" +
         "id BIGINT GENERATED ALWAYS AS IDENTITY, " +
         "o_orderkey BIGINT, o_cents BIGINT) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '3')")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_cents) " +
-        s"SELECT o_orderkey, o_cents FROM lakeq_idseed_$key " +
+        s"SELECT o_orderkey, o_cents FROM ${cat}_seed " +
         "WHERE o_orderkey < 1500")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_cents) " +
-        s"SELECT o_orderkey, o_cents FROM lakeq_idseed_$key " +
+        s"SELECT o_orderkey, o_cents FROM ${cat}_seed " +
         "WHERE o_orderkey >= 1500 AND o_orderkey < 2000")
       s.sql(s"MERGE INTO $ident t USING (" +
         s"SELECT o_orderkey AS k, o_cents + 11 AS c " +
-        s"FROM lakeq_idseed_$key WHERE o_orderkey >= 1000 " +
+        s"FROM ${cat}_seed WHERE o_orderkey >= 1000 " +
         "AND o_orderkey < 2500) s ON t.o_orderkey = s.k " +
         "WHEN MATCHED THEN UPDATE SET o_cents = s.c " +
         "WHEN NOT MATCHED THEN INSERT (o_orderkey, o_cents) " +
         "VALUES (s.k, s.c)")
       ident
-    })
+    }
 
   /** COPY INTO chain: a landing directory ingested in three runs —
     * first load, an exact re-run (pure no-op, every file skipped), and
@@ -1012,21 +925,16 @@ object LakeQueries {
     * The read certifies exactly-once FILE-grain ingest: any
     * double-load would duplicate rows and break the hash.
     */
-  private val copyCache = new ConcurrentHashMap[String, String]()
   private def copyFor(s: SparkSession, dir: String): String =
-    copyCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glcpy_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/cpy_$key")
+    PerFixture("cpy", dir) { wh =>
+      val cat = catalog(s, "glcpy", dir, wh)
       val ident = s"$cat.core.ord"
-      val land = s"$lakeRoot/cpyland_$key"
+      val land = PerFixture.path("cpyland", dir)
       val sd = seed(s, dir).select("o_orderkey", "o_custkey", "o_cents")
       sd.where(col("o_orderkey") < 1000).coalesce(1)
         .write.parquet(s"$land/b1")
       sd.where(col("o_orderkey") >= 1000 && col("o_orderkey") < 2000)
         .coalesce(1).write.parquet(s"$land/b2")
-      s.sql(s"CREATE NAMESPACE $cat.core")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_custkey BIGINT, " +
         "o_cents BIGINT) TBLPROPERTIES (clusterBy = 'o_orderkey')")
       s.sql(s"COPY INTO $ident FROM '$land'")
@@ -1035,7 +943,7 @@ object LakeQueries {
         .coalesce(1).write.parquet(s"$land/b3")
       s.sql(s"COPY INTO $ident FROM '$land'") // only b3 loads
       ident
-    })
+    }
 
   /** DYNAMIC-overwrite chain (pure SQL): a month-partitioned table
     * seeded with every month from keys < 3000, then — under
@@ -1045,34 +953,29 @@ object LakeQueries {
     * partition-reload shape: at 100 TB the commit touches 3 of 3000
     * day-partitions and the rest are never read, listed, or guarded).
     */
-  private val dynCache = new ConcurrentHashMap[String, String]()
   private def dynFor(s: SparkSession, dir: String): String =
-    dynCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"gldyn_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/dyn_$key")
+    PerFixture("dyn", dir) { wh =>
+      val cat = catalog(s, "gldyn", dir, wh)
       val ident = s"$cat.core.m"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       t(s, dir, "orders").where(col("o_orderkey") < 3000)
         .select(col("o_orderkey"),
           round(col("o_totalprice") * 100).cast("long").as("o_cents"),
           date_format(col("o_orderdate"), "yyyy-MM").as("omonth"))
-        .createOrReplaceTempView(s"lakeq_dynseed_$key")
+        .createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_cents BIGINT, " +
         "omonth STRING) PARTITIONED BY (omonth) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '1')")
-      s.sql(s"INSERT INTO $ident SELECT * FROM lakeq_dynseed_$key")
+      s.sql(s"INSERT INTO $ident SELECT * FROM ${cat}_seed")
       val prev = s.conf.get("spark.sql.sources.partitionOverwriteMode",
         "STATIC")
       s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
       try s.sql(s"INSERT OVERWRITE $ident " +
         "SELECT o_orderkey, o_cents + 9 AS o_cents, omonth " +
-        s"FROM lakeq_dynseed_$key " +
+        s"FROM ${cat}_seed " +
         "WHERE omonth IN ('1995-01', '1995-02', '1995-03')"): Unit
       finally s.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
       ident
-    })
+    }
 
   /** Generated-partition chain (pure SQL): a table partitioned by
     * `omonth INT GENERATED ALWAYS AS (month(o_orderdate))` — the
@@ -1083,28 +986,23 @@ object LakeQueries {
     * and nothing else (files-read subset pinned in
     * LakeColumnSemanticsSpec).
     */
-  private val genInferCache = new ConcurrentHashMap[String, String]()
   private def genInferFor(s: SparkSession, dir: String): String =
-    genInferCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"glgi_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/geni_$key")
+    PerFixture("geni", dir) { wh =>
+      val cat = catalog(s, "glgi", dir, wh)
       val ident = s"$cat.core.g"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       t(s, dir, "orders").where(col("o_orderkey") < 4000)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderdate"),
           round(col("o_totalprice") * 100).cast("long").as("o_cents"))
-        .createOrReplaceTempView(s"lakeq_giseed_$key")
+        .createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_custkey BIGINT, " +
         "o_orderdate TIMESTAMP, " +
         "omonth INT GENERATED ALWAYS AS (month(o_orderdate)), " +
         "o_cents BIGINT) PARTITIONED BY (omonth) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '1')")
       s.sql(s"INSERT INTO $ident (o_orderkey, o_custkey, o_orderdate, " +
-        s"o_cents) SELECT * FROM lakeq_giseed_$key")
+        s"o_cents) SELECT * FROM ${cat}_seed")
       ident
-    })
+    }
 
   /** Partition-management chain (pure SQL): PARTITIONED BY
     * (o_orderstatus) table seeded from keys < 3000, then `ALTER TABLE
@@ -1113,26 +1011,21 @@ object LakeQueries {
     * references, nothing read or rewritten, the other partitions'
     * files untouched.
     */
-  private val dropPartCache = new ConcurrentHashMap[String, String]()
   private def dropPartFor(s: SparkSession, dir: String): String =
-    dropPartCache.computeIfAbsent(dir, _ => {
-      val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-      val cat = s"gldp_$key"
-      s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-      s.conf.set(s"spark.sql.catalog.$cat.warehouse", s"$lakeRoot/dp_$key")
+    PerFixture("dp", dir) { wh =>
+      val cat = catalog(s, "gldp", dir, wh)
       val ident = s"$cat.core.o"
-      s.sql(s"CREATE NAMESPACE $cat.core")
       seed(s, dir).where(col("o_orderkey") < 3000)
-        .createOrReplaceTempView(s"lakeq_dpseed_$key")
+        .createOrReplaceTempView(s"${cat}_seed")
       s.sql(s"CREATE TABLE $ident (o_orderkey BIGINT, o_custkey BIGINT, " +
         "o_cents BIGINT, o_orderstatus STRING) " +
         "PARTITIONED BY (o_orderstatus) " +
         "TBLPROPERTIES (clusterBy = 'o_orderkey', nFiles = '2')")
       s.sql(s"INSERT INTO $ident SELECT o_orderkey, o_custkey, o_cents, " +
-        s"o_orderstatus FROM lakeq_dpseed_$key")
+        s"o_orderstatus FROM ${cat}_seed")
       s.sql(s"ALTER TABLE $ident DROP PARTITION (o_orderstatus = 'P')")
       ident
-    })
+    }
 
   /** Streaming into a COMPUTED-column table through the DSv2 `toTable`
     * sink, restart in the middle: the destination declares a GENERATED
@@ -1148,20 +1041,16 @@ object LakeQueries {
     */
   private def toTableIdentityReplay(s: SparkSession, dir: String): DataFrame = {
     val n = seq.incrementAndGet()
-    val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-    val cat = s"glsti_${key}_$n"
-    s.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
-    s.conf.set(s"spark.sql.catalog.$cat.warehouse",
-      s"$lakeRoot/stiwh_${key}_$n")
-    s.sql(s"CREATE NAMESPACE $cat.core")
+    val cat = catalog(s, s"glsti_$n", dir,
+      s"${PerFixture.path("stiwh", dir)}_$n")
     s.sql(s"CREATE TABLE $cat.core.dst (" +
       "id BIGINT GENERATED ALWAYS AS IDENTITY, " +
       "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
       "o_cents BIGINT, " +
       "cents2 BIGINT GENERATED ALWAYS AS (o_cents * 2)) " +
       "TBLPROPERTIES (clusterBy = 'o_orderkey')")
-    val src = s"$lakeRoot/sti_src_${key}_$n"
-    val ckpt = s"$lakeRoot/sti_ckpt_${key}_$n"
+    val src = s"${PerFixture.path("sti_src", dir)}_$n"
+    val ckpt = s"${PerFixture.path("sti_ckpt", dir)}_$n"
     val sd = seed(s, dir)
     LakeTable.create(s, src, sd.where(col("o_orderkey") < 400),
       Seq("o_orderkey"), nFiles = 1)
@@ -1963,8 +1852,8 @@ object LakeQueries {
       // bleed (untouched partitions in the diff) both fail the hash.
       (s, dir) => {
         dynFor(s, dir) // ensure the chain exists
-        val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-        LakeTable.scanChanges(s, s"$lakeRoot/dyn_$key/core/m", 1L, 2L)
+        LakeTable.scanChanges(s, s"${PerFixture.path("dyn", dir)}/core/m",
+          1L, 2L)
           .orderBy("_change_type", "o_orderkey")
       },
       Some("""
@@ -1992,8 +1881,8 @@ object LakeQueries {
       // the injected-column path runs with an empty added side).
       (s, dir) => {
         dropPartFor(s, dir) // ensure the chain exists
-        val key = dirKey(dir).replaceAll("[^A-Za-z0-9_]", "_")
-        LakeTable.scanChanges(s, s"$lakeRoot/dp_$key/core/o", 1L, 2L)
+        LakeTable.scanChanges(s, s"${PerFixture.path("dp", dir)}/core/o",
+          1L, 2L)
           .orderBy("o_orderkey")
       },
       Some("""

@@ -163,94 +163,59 @@ object PipelineQueries {
 
   private val ivfParams = IvfAnn.Params(k = 16, iterations = 3, nprobe = 3)
 
-  /** Per-JVM prebuilt-index store for the `*_search` queries: the first
-    * call per sfDir fits the index, SAVES it to a temp dir, and LOADS
-    * it back — so the persistence API is exercised end-to-end under
-    * the oracle gate — and every later call searches the loaded
-    * (parquet-backed) index only. In Bench's median-of-3, the median
-    * run is therefore the amortized search-only cost that index
-    * persistence exists to expose; at 100 TB this fit-once/search-many
-    * split is the only affordable shape for a served ANN index.
+  /** Prebuilt indexes for the `*_search` queries, [[PerFixture]]
+    * artifacts: each is fitted, SAVED to its path and LOADED back, so
+    * the persistence API runs end-to-end under the oracle gate and
+    * every search reads the loaded (parquet-backed) index. At 100 TB
+    * this fit-once/search-many split is the only affordable shape for a
+    * served ANN index.
     */
-  private lazy val indexRoot =
-    java.nio.file.Files.createTempDirectory("graft_ann_index").toString
-  /** Collision-safe on-disk key for a fixture dir: sanitized path text
-    * plus a 64-bit FNV-1a suffix. `math.abs(dir.hashCode)` was wrong
-    * twice over — abs(Int.MinValue) is negative, and two dirs sharing
-    * a 32-bit hash would silently share one persisted index.
-    */
-  private def dirKey(dir: String): String = {
-    var h = -3750763034362895579L // FNV-1a 64 offset basis
-    dir.foreach { c => h ^= c.toLong; h *= 1099511628211L }
-    dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(40) +
-      "_" + java.lang.Long.toHexString(h)
-  }
-  private val ivfIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfAnn.Index]()
   private def ivfIndexFor(s: SparkSession, dir: String): IvfAnn.Index =
-    ivfIndexCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/ivf_${dirKey(dir)}"
+    PerFixture("ivf", dir) { path =>
       IvfAnn.save(
         IvfAnn.fitIndex(t(s, dir, "embeddings"), "vec_id", "embedding", ivfParams),
         path)
       IvfAnn.load(s, path)
-    })
+    }
   /** metaCols variant for filtered search: the label rides the index
-    * rows, so `ann_ivf_filtered` pays fit+save+load once per JVM like
-    * every other amortized `*_search` path (it used to re-train
-    * in-query — 5.3 s of k-means per run for a 0.6 s search).
+    * rows, so `ann_ivf_filtered` searches a prebuilt index too.
     */
-  private val ivfMetaIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfAnn.Index]()
   private def ivfMetaIndexFor(s: SparkSession, dir: String): IvfAnn.Index =
-    ivfMetaIndexCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/ivfmeta_${dirKey(dir)}"
+    PerFixture("ivfmeta", dir) { path =>
       IvfAnn.save(
         IvfAnn.fitIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
           ivfParams, metaCols = Seq("label")),
         path)
       IvfAnn.load(s, path)
-    })
-  private val sq8IndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, ScalarQuant.Index]()
+    }
   private def sq8IndexFor(s: SparkSession, dir: String): ScalarQuant.Index =
-    sq8IndexCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/sq8_${dirKey(dir)}"
+    PerFixture("sq8", dir) { path =>
       ScalarQuant.save(
         ScalarQuant.fitIndex(t(s, dir, "embeddings"), "vec_id", "embedding"),
         path)
       ScalarQuant.load(s, path)
-    })
-  private val ivfPqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, IvfPqAnn.Index]()
+    }
   private def ivfPqIndexFor(s: SparkSession, dir: String): IvfPqAnn.Index =
-    ivfPqIndexCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/ivfpq_${dirKey(dir)}"
+    PerFixture("ivfpq", dir) { path =>
       IvfPqAnn.save(
         IvfPqAnn.fitIndex(t(s, dir, "embeddings"), "vec_id", "embedding",
           ivfPqParams),
         path)
       IvfPqAnn.load(s, path)
-    })
-  private val pqIndexCache =
-    new java.util.concurrent.ConcurrentHashMap[String, PqAnn.Index]()
+    }
   private def pqIndexFor(s: SparkSession, dir: String): PqAnn.Index =
-    pqIndexCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/pq_${dirKey(dir)}"
+    PerFixture("pq", dir) { path =>
       PqAnn.save(
         PqAnn.fitIndex(t(s, dir, "embeddings"), "vec_id", "embedding", pqParams),
         path)
       PqAnn.load(s, path)
-    })
-  private val semModelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, SemDedup.Model]()
+    }
   private def semModelFor(s: SparkSession, dir: String): SemDedup.Model =
-    semModelCache.computeIfAbsent(dir, _ => {
-      val path = s"$indexRoot/sem_${dirKey(dir)}"
+    PerFixture("semdedup", dir) { path =>
       SemDedup.save(SemDedup.fitModel(
         t(s, dir, "embeddings"), "vec_id", "embedding", semDedup2Params), s, path)
       SemDedup.load(s, path)
-    })
+    }
 
   /** CMS probe keys: eight live part keys + two absent ones (exact
     * count 0 — any non-zero estimate is pure collision overestimate).
@@ -391,16 +356,14 @@ object PipelineQueries {
     UNION ALL SELECT '5_semantic', (SELECT count(*) FROM fin)"""
   }
 
-  /** BM25 query terms (present at every sf) + per-sfDir corpus stats,
-    * fitted once per JVM — the fit-once/score-many split that makes
+  /** BM25 query terms (present at every sf) + the corpus stats, a
+    * [[PerFixture]] artifact — the fit-once/score-many split that makes
     * corpus statistics an index-lifetime cost, like ANN centroids.
     */
   private val bm25Terms = Seq("hash", "join", "scan")
-  private val bm25StatsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Bm25.Stats]()
   private def bm25StatsFor(s: SparkSession, dir: String): Bm25.Stats =
-    bm25StatsCache.computeIfAbsent(dir,
-      _ => Bm25.fitStats(t(s, dir, "documents"), "text", bm25Terms))
+    PerFixture("bm25", dir)(_ =>
+      Bm25.fitStats(t(s, dir, "documents"), "text", bm25Terms))
 
   /** Generated DuckDB oracle for hybrid_rrf: the BM25 top-20 replay
     * ([[Bm25.oracleSql]], idf/avgdl inlined) and the exact-cosine
@@ -1357,8 +1320,8 @@ object PipelineQueries {
       oracleGen = Some(semDedupOracle _)),
 
     QueryDef("dedup_semantic_search",
-      // the AMORTIZED SemDeDup path: fit + save + load the centroid
-      // model once per JVM (semModelFor), then dedup against the
+      // the AMORTIZED SemDeDup path: the prebuilt centroid model
+      // (semModelFor), then dedup against the
       // parquet-backed model with NO in-query training — the frozen-
       // model posture that dedups every new corpus drop against the
       // same cells. Same oracle as dedup_semantic (identical params ⇒
@@ -1513,9 +1476,8 @@ object PipelineQueries {
       // index (fitIndex metaCols) so filtering costs no extra join;
       // same deterministic training as ann_ivf_topk, so the oracle
       // inlines identical centroids and threads the label through
-      // the replay. The index is fit+saved+loaded once per JVM
-      // (ivfMetaIndexFor) — the amortized serving shape, same as
-      // ann_ivf_search.
+      // the replay. The index is prebuilt (ivfMetaIndexFor) — the
+      // amortized serving shape, same as ann_ivf_search.
       (s, dir) => {
         val e = t(s, dir, "embeddings")
         val idx = ivfMetaIndexFor(s, dir)
@@ -1528,8 +1490,8 @@ object PipelineQueries {
       oracleGen = Some(ivfFilteredOracle _)),
 
     QueryDef("ann_ivf_search",
-      // the AMORTIZED IVF path: fit + save + load once per JVM
-      // (ivfIndexFor), then search the parquet-backed index — no
+      // the AMORTIZED IVF path: the prebuilt index (ivfIndexFor),
+      // then search the parquet-backed index — no
       // in-query training. Same oracle as ann_ivf_topk (identical
       // params ⇒ identical deterministic centroids ⇒ identical
       // search results), so fit→save→load→search is proven bit-equal

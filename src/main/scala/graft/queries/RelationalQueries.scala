@@ -158,8 +158,8 @@ object RelationalQueries {
          'Manufacturer#' || CAST(p_partkey % 5 + 1 AS VARCHAR) AS p_mfgr
        FROM part p)"""
 
-  /** Per-JVM BUCKETED copies of orders/lineitem (8 buckets on the join
-    * key, sorted within buckets): written once per sf dir via
+  /** BUCKETED copies of orders/lineitem (8 buckets on the join key,
+    * sorted within buckets), a [[PerFixture]] artifact written via
     * `bucketBy(...).saveAsTable`, so a declared query can prove the
     * co-located join end-to-end — both scans expose the same hash
     * partitioning and the join runs with NO exchange on either side.
@@ -167,11 +167,9 @@ object RelationalQueries {
     * fact-to-fact joins: the shuffle is paid once at write time, then
     * every join on the bucket key is exchange-free forever.
     */
-  private val bucketedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
   private def bucketedTablesFor(s: SparkSession, dir: String): (String, String) =
-    bucketedCache.computeIfAbsent(dir, _ => {
-      val tag = math.abs(dir.hashCode).toString
+    PerFixture("bkt", dir) { _ =>
+      val tag = PerFixture.hash(dir)
       val (ot, lt) = (s"orders_bkt_$tag", s"lineitem_bkt_$tag")
       // a previous JVM's managed-table DIRECTORY can outlive the
       // in-memory catalog entry — clear both or saveAsTable refuses
@@ -194,28 +192,24 @@ object RelationalQueries {
       t(s, dir, "lineitem").write.mode("overwrite").format("parquet")
         .bucketBy(8, "l_orderkey").sortBy("l_orderkey").saveAsTable(lt)
       (ot, lt)
-    })
+    }
 
-  /** Per-JVM hive-partitioned copy of `events` (day=YYYY-MM-DD dirs,
-    * 30 partitions): written once per sf dir, then read back as a
-    * partitioned source so a declared query can prove partition
-    * PRUNING end-to-end — the first thing a 100 TB consumer relies on
-    * (a day-ranged query must touch the matching partition dirs, not
-    * the whole table). The layout is exactly what a daily ingest job
-    * produces with `.write.partitionBy("day")`.
+  /** Hive-partitioned copy of `events` (day=YYYY-MM-DD dirs, 30
+    * partitions), a [[PerFixture]] artifact read back as a partitioned
+    * source so a declared query can prove partition PRUNING end-to-end
+    * — the first thing a 100 TB consumer relies on (a day-ranged query
+    * must touch the matching partition dirs, not the whole table). The
+    * layout is exactly what a daily ingest job produces with
+    * `.write.partitionBy("day")`.
     */
-  private val partEventsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def partitionedEventsFor(s: SparkSession, dir: String): String =
-    partEventsCache.computeIfAbsent(dir, _ => {
-      val path = java.nio.file.Files
-        .createTempDirectory("graft_part_events").toString
+    PerFixture("events_by_day", dir) { path =>
       // ts arrives as a micros long (Tables normalizes every fixture form)
       t(s, dir, "events")
         .withColumn("day", to_date(timestamp_micros(col("ts"))))
         .write.mode("overwrite").partitionBy("day").parquet(path)
       path
-    })
+    }
 
   /** Floor-consistent integer division as a SQL fragment: DuckDB `//`
     * FLOORS while Spark `div` truncates toward zero, so the two

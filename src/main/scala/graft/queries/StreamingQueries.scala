@@ -48,8 +48,8 @@ object StreamingQueries {
     * — at the bench fixtures (1e5 events at sf0.1) this derives the
     * registry's long-standing 8; a deployment feeds its own expected
     * per-trigger key volume through the same rule and raises the
-    * clamp. Derived once per fixture dir from the events parquet's
-    * footer row count (metadata-only, no scan) and cached; the engine
+    * clamp. Derived from the events parquet's footer row count
+    * (metadata-only, no scan) as a [[PerFixture]] artifact; the engine
     * checkpoint-pins the value at first query start, exactly as in
     * production. Results are partition-count-independent, which the
     * DuckDB oracle certifies per replay.
@@ -57,14 +57,12 @@ object StreamingQueries {
   private val stateRowsPerPartition = 12500L
   private val stateMinPartitions = 4
   private val stateMaxPartitions = 64
-  private val statePartCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
   private def statePartitionsFor(s: SparkSession, dir: String): Int =
-    statePartCache.getOrElseUpdate(dir, {
-      val rows = s.read.parquet(s"$dir/events.parquet").count()
+    PerFixture("state_parts", dir) { _ =>
+      val rows = Tables.raw(s, dir, "events").count()
       math.max(stateMinPartitions, math.min(stateMaxPartitions,
         math.ceil(rows.toDouble / stateRowsPerPartition).toInt))
-    })
+    }
 
   /** The streaming twin of Tables.normalizeEventTs: surface the
     * fixture's `ts` as a TimestampType column (watermarks reject NTZ
@@ -89,8 +87,7 @@ object StreamingQueries {
     * FILE, so the stream reads the parent dir glob-filtered to it).
     */
   private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val schema = s.read.parquet(s"$dir/events.parquet").schema
+    val schema = Tables.raw(s, dir, "events").schema
     tsToTimestamp(
       s.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -156,14 +153,6 @@ object StreamingQueries {
     streamed.sparkSession.table(name)
   }
 
-  /** Multi-batch form of [[eventsStream]]: the fixture is split into
-    * `parts` parquet files (by event_id hash — any split is legal for
-    * the update-mode replays, whose FINAL state is order-independent
-    * by construction) in a per-JVM temp dir, and the file source
-    * feeds them one per trigger. This is what turns the replay rows
-    * from "within one micro-batch" evidence into real cross-batch
-    * incremental-state evidence under the oracle gate.
-    */
   /** Stamps strictly increasing mtimes on files written since the
     * last call. FileStreamSource ingests oldest-modified first; on a
     * coarse-mtime filesystem two writes can TIE, letting a later
@@ -192,15 +181,18 @@ object StreamingQueries {
     }
   }
 
-  private val splitCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Int), String]
+  /** Multi-batch form of [[eventsStream]]: the fixture is split into
+    * `parts` parquet files (by event_id hash — any split is legal for
+    * the update-mode replays, whose FINAL state is order-independent
+    * by construction), a [[PerFixture]] artifact, and the file source
+    * feeds them one per trigger. This is what turns the replay rows
+    * from "within one micro-batch" evidence into real cross-batch
+    * incremental-state evidence under the oracle gate.
+    */
   private def eventsMultiBatchStream(s: SparkSession, dir: String,
                                      parts: Int, copies: Int = 1): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val splitDir = splitCache.getOrElseUpdate((dir, parts, copies), {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_stream_split").toString
-      val base = s.read.parquet(s"$dir/events.parquet")
+    val splitDir = PerFixture(s"split_${parts}x$copies", dir) { out =>
+      val base = Tables.raw(s, dir, "events")
       // one write per split (not repartition-by-hash-of-pmod, which
       // can collide two splits into one file): exactly parts*copies
       // non-empty files, so the maxFilesPerTrigger=1 source must run
@@ -214,7 +206,7 @@ object StreamingQueries {
         mt.stamp() // strictly increasing mtime per split — see MtimeSequencer
       }
       out
-    })
+    }
     val schema = s.read.parquet(splitDir).schema
     tsToTimestamp(
       s.readStream.schema(schema)
@@ -231,16 +223,11 @@ object StreamingQueries {
     * (see streamingIntervalJoin's scaladoc). The recovery filters the
     * sentinels out by `user_id < 0`.
     */
-  private val sentinelSplitCache =
-    scala.collection.concurrent.TrieMap.empty[(String, Int, Long), String]
   private def eventsMultiBatchStreamWithSentinels(
       s: SparkSession, dir: String, parts: Int,
       advanceUs: Long): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val splitDir = sentinelSplitCache.getOrElseUpdate((dir, parts, advanceUs), {
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_stream_split_sent").toString
-      val base = s.read.parquet(s"$dir/events.parquet")
+    val splitDir = PerFixture(s"split_sent_${parts}_$advanceUs", dir) { out =>
+      val base = Tables.raw(s, dir, "events")
       val mt = new MtimeSequencer(out)
       for (p <- 0 until parts) {
         base.where(pmod(col("event_id"), lit(parts.toLong)) === p)
@@ -271,7 +258,7 @@ object StreamingQueries {
         .coalesce(1).write.mode("append").parquet(out)
       mt.stamp() // the sentinel MUST carry the latest mtime of all
       out
-    })
+    }
     val schema = s.read.parquet(splitDir).schema
     tsToTimestamp(
       s.readStream.schema(schema)
@@ -755,10 +742,9 @@ object StreamingQueries {
       // run 1's emission for that key stopped short.
       (s, dir) => {
         import java.nio.file.Files
-        s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         val stage = Files.createTempDirectory("graft_recovery_stage").toString
         val ckpt = Files.createTempDirectory("graft_recovery_ckpt").toString
-        val base = s.read.parquet(s"$dir/events.parquet")
+        val base = Tables.raw(s, dir, "events")
         val mt = new MtimeSequencer(stage)
         def writeParts(ps: Range): Unit = ps.foreach { p =>
           base.where(pmod(col("event_id"), lit(4L)) === p)
