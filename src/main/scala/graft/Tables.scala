@@ -1,8 +1,11 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loader for the driver-generated parquet tables (TESTDATA.md).
   *
@@ -11,6 +14,19 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * file-level parallelism; at 100 TB these would be partitioned
   * directories and the same call sites would pick up partition
   * pruning for free.
+  *
+  * Each fixture's schema is resolved at most once per file version:
+  * the first read of a version runs Spark's parquet schema inference
+  * (one job that reads a footer), and every read, that one included,
+  * then scans with the schema pinned. The memo key is the qualified
+  * path, the length and mtime of every file under it (a fixture is a
+  * single file or a Spark-written `name.parquet/` directory) and the
+  * session's values of the confs that change inferred types
+  * ([[typeConfs]]). It keeps one entry per path, replaced when the key
+  * changes, and holds metadata only: a schema, never rows or results.
+  * A fixture rewritten in place is therefore re-resolved, and the
+  * normalisations in [[apply]] branch on the schema of the file as it
+  * is now.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -35,7 +51,49 @@ object Tables {
     // vectorized reader rejects unless surfaced as a nanos long.
     // Harmless for micros fixtures (the conf only affects NANOS).
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+  }
+
+  /** Session confs whose values change the types parquet inference
+    * gives (`nanosAsLong` is pinned by [[raw]] itself).
+    */
+  private val typeConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema")
+
+  private final case class Resolved(
+      key: (Seq[(String, Long, Long)], Seq[Option[String]]), schema: StructType)
+  private val resolved = new ConcurrentHashMap[String, Resolved]()
+
+  /** The inferred schema of `path`, memoized per version (see the
+    * object's scaladoc). The version is listed before inference, so an
+    * entry never pairs a schema with a newer version than it was read
+    * from. Inference runs outside the map: two racing first calls may
+    * both infer, and a slow one blocks no other path.
+    */
+  private def schemaOf(spark: SparkSession, path: String): StructType = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p).toString
+    // plain statuses, not `listFiles`: a LocatedFileStatus copies the
+    // owner and permission, which the local FS reads by running a
+    // subprocess per file
+    def files(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(files)
+      else Seq(st)
+    val version = files(fs.getFileStatus(p))
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).sorted
+    val key = (version, typeConfs.map(spark.conf.getOption))
+    val hit = resolved.get(qualified)
+    if (hit != null && hit.key == key) hit.schema
+    else {
+      val schema = spark.read.parquet(path).schema
+      resolved.put(qualified, Resolved(key, schema))
+      schema
+    }
   }
 
   /** Fixture contract: `events.ts` is exposed as MICROS-since-epoch

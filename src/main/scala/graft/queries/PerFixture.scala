@@ -2,6 +2,9 @@ package graft.queries
 
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.hadoop.fs.FileSystem
+import org.apache.hadoop.util.ShutdownHookManager
+
 /** Fixture-derived artifacts (lake chains, catalog tables, ANN indexes,
   * corpus stats, stream splits, bucketed and partitioned copies), each
   * built at most once per JVM and fixture dir and reused by every later
@@ -11,18 +14,27 @@ import java.util.concurrent.ConcurrentHashMap
   *
   * An artifact is keyed by its kind, which carries any build parameters
   * (`split_8x2`), plus the fixture dir. Its builder gets the path
-  * `<root>/<kind>_<dirKey(dir)>` under one temp root made on first use.
-  * Concurrent callers of one key wait for a single build. A build that
-  * throws is not memoized: the next call clears whatever it left at the
-  * path and builds again. Each key builds under its own lock, not the
-  * map's, so a builder may ask for another artifact (a clone's builder
-  * asks for its source chain). One kind belongs to one builder; a
-  * second builder claiming it is refused.
+  * `<root>/<kind>_<dirKey(dir)>` under one temp root made on first use
+  * and deleted at JVM exit. Concurrent callers of one key wait for a
+  * single build. A build that throws is not memoized: the next call
+  * clears whatever it left at the path and builds again. Each key
+  * builds under its own lock, not the map's, so a builder may ask for
+  * another artifact (a clone's builder asks for its source chain). One
+  * kind belongs to one builder; a second builder claiming it is
+  * refused.
   */
 private[queries] object PerFixture {
 
-  private lazy val root =
-    java.nio.file.Files.createTempDirectory("graft_fixture").toString
+  private lazy val root = {
+    val r = java.nio.file.Files.createTempDirectory("graft_fixture").toString
+    // Deleted at JVM exit once Spark has stopped its context: Spark's
+    // own hook runs at Hadoop priority FileSystem.SHUTDOWN_HOOK_PRIORITY
+    // + 30 and Hadoop runs hooks highest priority first, so no stream,
+    // table or cached scan still reads the artifacts when they go.
+    ShutdownHookManager.get().addShutdownHook(() => remove(r),
+      FileSystem.SHUTDOWN_HOOK_PRIORITY + 20)
+    r
+  }
 
   /** 64-bit FNV-1a of the dir path, in hex: identifier-safe, so it also
     * names catalogs, managed tables and temp views.

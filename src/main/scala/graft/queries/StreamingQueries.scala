@@ -86,12 +86,17 @@ object StreamingQueries {
   /** File-source replay of the events fixture (the fixture is a single
     * FILE, so the stream reads the parent dir glob-filtered to it).
     */
-  private def eventsStream(s: SparkSession, dir: String): DataFrame = {
-    val schema = Tables.raw(s, dir, "events").schema
+  private def eventsStream(s: SparkSession, dir: String): DataFrame =
     tsToTimestamp(
-      s.readStream.schema(schema)
+      s.readStream.schema(eventsSchema(s, dir))
         .option("pathGlobFilter", "events.parquet").parquet(dir))
-  }
+
+  /** The events fixture's stored schema, which every split and stage
+    * written from [[Tables.raw]] shares; resolved once per file version
+    * there, so a replay runs no schema-inference job.
+    */
+  private def eventsSchema(s: SparkSession, dir: String) =
+    Tables.raw(s, dir, "events").schema
 
   /** Run `streamed` to completion into a memory sink and return the
     * sink table. Bounded by construction: the file source replays the
@@ -207,9 +212,8 @@ object StreamingQueries {
       }
       out
     }
-    val schema = s.read.parquet(splitDir).schema
     tsToTimestamp(
-      s.readStream.schema(schema)
+      s.readStream.schema(eventsSchema(s, dir))
         .option("maxFilesPerTrigger", "1").parquet(splitDir))
   }
 
@@ -259,9 +263,8 @@ object StreamingQueries {
       mt.stamp() // the sentinel MUST carry the latest mtime of all
       out
     }
-    val schema = s.read.parquet(splitDir).schema
     tsToTimestamp(
-      s.readStream.schema(schema)
+      s.readStream.schema(eventsSchema(s, dir))
         .option("maxFilesPerTrigger", "1").parquet(splitDir))
   }
 
@@ -752,7 +755,7 @@ object StreamingQueries {
           mt.stamp()
         }
         writeParts(0 until 2)
-        val schema = s.read.parquet(stage).schema
+        val schema = base.schema
         // the memory sink refuses checkpoint recovery by design, so the
         // emissions land via foreachBatch (the restart-capable sink
         // surface) into one parquet dir per incarnation
