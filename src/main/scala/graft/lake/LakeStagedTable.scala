@@ -11,10 +11,9 @@ import org.apache.spark.sql.connector.catalog.{StagedTable, SupportsWrite,
 import org.apache.spark.sql.connector.write.{BatchWrite, DataWriterFactory,
   LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder,
   WriterCommitMessage}
-import org.apache.spark.sql.graft.ParquetWriteBridge
 import org.apache.spark.sql.types.StructType
 
-import LakeLog.{Add, Meta, Remove, Stats}
+import LakeLog.{Add, Meta, Remove}
 
 /** Staged table behind the ATOMIC forms of CREATE / REPLACE —
   * `CREATE TABLE ... AS SELECT`, `REPLACE TABLE [... AS SELECT]`,
@@ -36,8 +35,10 @@ import LakeLog.{Add, Meta, Remove, Stats}
   * authoritative-replace replay rule; streaming (appId, batchId)
   * tokens survive so exactly-once holds across a replace.
   *
-  * Inline CHECK constraints (CREATE OR REPLACE ... CHECK) validate
-  * the STAGED rows before the commit, bounded by the staged files.
+  * Inline CHECK constraints (`CREATE OR REPLACE TABLE t (..., CHECK
+  * ...)`) land in the same commit; they arrive only on statements
+  * without a query (Spark refuses a constraint list on CTAS / RTAS),
+  * so they never gate staged rows.
   * Curve cluster specs (`z:`/`h:`) refuse here — the staged write
   * path cannot arrange rows on a space-filling curve; create the
   * table first and INSERT INTO it, or OPTIMIZE ZORDER after.
@@ -108,36 +109,16 @@ private[lake] final class LakeStagedTable(
           with org.apache.spark.sql.connector.write
             .RequiresDistributionAndOrdering {
         override def toBatch: BatchWrite = new BatchWrite {
+          // partitioned CTAS: files exclude the partition columns
+          // (hive layout); the rolling writers split on value
+          // boundaries over the required ordering
           override def createBatchWriterFactory(
-              info: PhysicalWriteInfo): DataWriterFactory = {
-            val spec = statsCols.filter(tableSchema.fieldNames.contains)
-              .map { c =>
-                val idx = tableSchema.fieldIndex(c)
-                LakeStreamingWrite.StatCol(c, tableSchema(idx).dataType, idx)
-              }
-            val partSpec = partitionBy.map { c =>
-              val idx = tableSchema.fieldIndex(c)
-              LakeStreamingWrite.StatCol(c, tableSchema(idx).dataType, idx)
-            }
-            // partitioned CTAS: files exclude the partition columns
-            // (hive layout); the rolling writers split on value
-            // boundaries over the required ordering
-            val contentSchema = StructType(tableSchema.fields
-              .filterNot(f => partitionBy.contains(f.name)))
-            new LakeStreamWriterFactory(root.toString, stagingSub,
-              ParquetWriteBridge.prepare(spark, contentSchema), spec,
-              partSpec, tableSchema)
-          }
-          override def commit(messages: Array[WriterCommitMessage]): Unit = {
-            staged = LakeStreamingWrite.filesOf(messages).map { m =>
-              Add(m.path, Stats(m.rows, m.bytes,
-                m.mins.map { case (k, v) =>
-                  k -> LakeTable.normalizeStat(v) },
-                m.maxs.map { case (k, v) =>
-                  k -> LakeTable.normalizeStat(v) },
-                m.nulls))
-            }.sortBy(_.path)
-          }
+              info: PhysicalWriteInfo): DataWriterFactory =
+            LakeStreamWriterFactory(spark, root.toString, stagingSub,
+              tableSchema, statsCols.filter(tableSchema.fieldNames.contains),
+              partitionBy)
+          override def commit(messages: Array[WriterCommitMessage]): Unit =
+            staged = LakeStreamingWrite.addsOf(messages)
           override def abort(messages: Array[WriterCommitMessage]): Unit =
             abortStagedChanges()
         }
@@ -180,22 +161,15 @@ private[lake] final class LakeStagedTable(
     }
 
   override def commitStagedChanges(): Unit = {
-    // inline CHECKs gate the staged rows, bounded by the staged files
-    // (partitioned: one single-base basePath read re-derives the
-    // partition columns the files don't store)
+    // inline CHECKs reach a staged write only without rows: Spark's
+    // parser refuses a column or constraint list on CTAS / RTAS, so no
+    // SQL statement stages rows under a constraint — refuse rather
+    // than land rows no CHECK ever saw
     if (constraintsToAdd.nonEmpty && staged.nonEmpty) {
-      val paths = staged.map(a => new Path(root, a.path).toString)
-      val df =
-        if (partitionBy.isEmpty)
-          spark.read.schema(tableSchema).parquet(paths: _*)
-        else spark.read
-          .option("basePath", new Path(root, stagingSub).toString)
-          .schema(tableSchema).parquet(paths: _*)
-          .select(tableSchema.fieldNames.toSeq
-            .map(org.apache.spark.sql.functions.col): _*)
-      try constraintsToAdd.foreach { case (n, e) =>
-        LakeTable.enforceConstraints(df, Map(n -> e), "staged create")
-      } catch { case ex: Throwable => abortStagedChanges(); throw ex }
+      abortStagedChanges()
+      throw new UnsupportedOperationException(
+        "staged writes cannot carry CHECK constraints — CREATE the " +
+          "table first, then INSERT INTO it")
     }
     val conActions =
       if (constraintsToAdd.isEmpty) Nil

@@ -1,12 +1,15 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.write.{DataWriter, PhysicalWriteInfo,
   WriterCommitMessage}
 import org.apache.spark.sql.connector.write.streaming.{
   StreamingDataWriterFactory, StreamingWrite}
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.v2.DataWritingSparkTask
 import org.apache.spark.sql.graft.{ParquetWriteBridge, PreparedParquetWrite}
 import org.apache.spark.sql.types.{ByteType, DataType, DoubleType, FloatType,
   IntegerType, LongType, ShortType, StringType, StructType}
@@ -15,15 +18,16 @@ import LakeLog.{Add, Meta, Remove, Stats}
 
 /** The lake's native `writeStream.toTable` sink — a real DSv2
   * `StreamingWrite`: executor tasks stream `InternalRow`s straight
-  * into parquet files under a per-epoch staging dir (the SAME writer
-  * stack as `df.write.parquet`, via [[ParquetWriteBridge]]), tracking
-  * per-file min/max/null stats AS THEY WRITE; the driver's
-  * `commit(epoch)` turns the task messages into `Add` actions and
-  * lands ONE transactional log commit carrying the `(appId, epochId)`
-  * token. Files are invisible until that commit, so task retries and
-  * speculative duplicates leave only unreferenced orphans (vacuum
-  * reaps them past the retention horizon) — no rename dance, no
-  * output coordinator dependence for correctness.
+  * into parquet files under a per-epoch staging dir through the lake's
+  * one data-file writer ([[LakeStreamDataWriter]], over
+  * [[ParquetWriteBridge]]; batch commits and staged CTAS run the same
+  * writer), tracking per-file min/max/null stats AS THEY WRITE;
+  * `commit(epoch)` turns the task messages into `Add` actions
+  * and lands ONE transactional log commit carrying the
+  * `(appId, epochId)` token. Files are invisible until that commit, so
+  * task retries and speculative duplicates leave only unreferenced
+  * orphans (vacuum reaps them past the retention horizon) — no rename
+  * dance, no output coordinator dependence for correctness.
   *
   * Exactly-once is the SAME two-phase token check the `foreachBatch`
   * sink ([[LakeSink]]) certifies: a replayed epoch after recovery is
@@ -176,8 +180,6 @@ private[lake] final class LakeStreamingWrite(
         .map(n => n -> s"col-${java.util.UUID.randomUUID()}")
     }
 
-  private def phys(c: String): String = effMap.getOrElse(c, c)
-
   /** The EXTENDED row the task writers operate on: the input columns
     * followed by the computed generated columns, then the allocated
     * identity columns. Files are read back BY NAME, so appending at
@@ -236,46 +238,30 @@ private[lake] final class LakeStreamingWrite(
       }.toMap,
       if (idSpecs.isEmpty) Map.empty else planSnap.identityHwm)
 
-  // stats measured only for columns this stream actually writes (an
-  // omitted evolved column has no values, and mayMatch treats missing
-  // stats as may-match — which is exactly right: it is all-null
-  // there); identity columns are force-added so the commit can fold
-  // the new watermark from file stats, exactly like batch writes
-  private val statsSpec: Seq[LakeStreamingWrite.StatCol] =
-    LakeColumns.statsColsFor(planSnap.statsCols, planSnap.colSpecs)
-      .filter(extSchema.fieldNames.contains).map { c =>
-        val idx = extSchema.fieldIndex(c)
-        LakeStreamingWrite.StatCol(phys(c), extSchema(idx).dataType, idx)
-      }
-
   // partitioned epochs (append mode): the rolling writers split files
   // on value boundaries; changelog staging (mergeKey) stays flat —
-  // those files are never table data. A GENERATED partition column
-  // indexes into the computed tail of the extended row.
-  private val partSpec: Seq[LakeStreamingWrite.StatCol] =
-    if (mergeKey.nonEmpty) Nil
-    else planSnap.partitionBy.map { c =>
-      val idx = extSchema.fieldIndex(c)
-      LakeStreamingWrite.StatCol(c, extSchema(idx).dataType, idx)
-    }
-
-  // files carry PHYSICAL column names (renames never touch data) and,
-  // on partitioned tables, EXCLUDE the partition columns (hive layout
-  // — the directory and the log carry the value)
-  private val prepared: PreparedParquetWrite = ParquetWriteBridge.prepare(
-    spark, StructType(extSchema.fields
-      .filterNot(f => partSpec.exists(_.physName == f.name))
-      .map(f => f.copy(name = phys(f.name)))))
+  // those files are never table data
+  private val partitioned = mergeKey.isEmpty && planSnap.partitionBy.nonEmpty
 
   // per-epoch staging dir — the same data/<uuid>/ layout as batch
   // writes, so vacuum's orphan sweep and the DV file-id contract see
   // nothing new
   private val stagingSub = s"data/${java.util.UUID.randomUUID()}"
 
+  // stats measured only for columns this stream actually writes (an
+  // omitted evolved column has no values, and mayMatch treats missing
+  // stats as may-match — which is exactly right: it is all-null
+  // there); identity columns are force-added so the commit can fold
+  // the new watermark from file stats, exactly like batch writes. A
+  // GENERATED partition column indexes into the computed tail of the
+  // extended row.
   override def createStreamingWriterFactory(
       info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    new LakeStreamWriterFactory(root, stagingSub, prepared, statsSpec,
-      partSpec, extSchema, genBound, idParams)
+    LakeStreamWriterFactory(spark, root, stagingSub, extSchema,
+      LakeColumns.statsColsFor(planSnap.statsCols, planSnap.colSpecs)
+        .filter(extSchema.fieldNames.contains),
+      if (partitioned) planSnap.partitionBy else Nil, effMap, genBound,
+      idParams)
 
   /** Keyed-upsert epoch (`.option("mergeKey", k)`): the staged files
     * are a CHANGELOG, never table data — read them back, upsert by
@@ -327,7 +313,6 @@ private[lake] final class LakeStreamingWrite(
   override def commit(epochId: Long,
                       messages: Array[WriterCommitMessage]): Unit = {
     if (mergeKey.nonEmpty) return commitMerge(mergeKey.get, epochId, messages)
-    val files = LakeStreamingWrite.filesOf(messages).sortBy(_.path)
     val snap = LakeLog.snapshot(hfs, rootP, None)
     // recovery replay of an already-committed epoch: drop the staged
     // files and acknowledge (the foreachBatch sink's skip contract)
@@ -345,12 +330,7 @@ private[lake] final class LakeStreamingWrite(
     require(snap.colMap == planSnap.colMap || snap.colMap == effMap,
       s"column mapping changed while epoch $epochId was in flight — " +
         "restart the query to re-plan")
-    val adds = files.map { m =>
-      Add(m.path, Stats(m.rows, m.bytes,
-        m.mins.map { case (k, v) => k -> LakeTable.normalizeStat(v) },
-        m.maxs.map { case (k, v) => k -> LakeTable.normalizeStat(v) },
-        m.nulls))
-    }.toSeq
+    val adds = LakeStreamingWrite.addsOf(messages)
     // CHECK constraints gate streamed rows too: validate the staged
     // files exactly as readers will see them (bounded by this epoch's
     // files, never the table). Read with the CURRENT constraints — a
@@ -360,7 +340,7 @@ private[lake] final class LakeStreamingWrite(
       // dir's value directories — a single-base basePath read gives
       // the partition columns back for the CHECK pass
       val staged =
-        if (partSpec.isEmpty) spark.read
+        if (!partitioned) spark.read
           .schema(LakeTable.physicalSchema(extSchema, effMap))
           .parquet(adds.map(a => new Path(rootP, a.path).toString): _*)
         else spark.read
@@ -446,12 +426,23 @@ private[lake] object LakeStreamingWrite {
       case ms: FileMessages => ms.files.filter(_.path != null)
       case _ => Nil
     }
+
+  /** The task messages' files as `Add` actions, sorted by path: the
+    * one conversion every lake write (batch commit, streaming epoch,
+    * staged CTAS) commits through. The writer already folds values
+    * into the Long/Double/String stats domain.
+    */
+  private[lake] def addsOf(messages: Array[WriterCommitMessage]): Seq[Add] =
+    filesOf(messages).map(m =>
+      Add(m.path, Stats(m.rows, m.bytes, m.mins, m.maxs, m.nulls)))
+      .sortBy(_.path)
 }
 
-/** Dual-interface task-writer factory: the STREAMING sink's epochs
-  * and the staged BATCH writes (atomic CTAS / REPLACE TABLE AS
-  * SELECT, [[LakeStagedTable]]) run the exact same executor writers —
-  * batch is just epoch -1.
+/** Dual-interface task-writer factory: the STREAMING sink's epochs,
+  * the staged BATCH writes (atomic CTAS / REPLACE TABLE AS SELECT,
+  * [[LakeStagedTable]]) and every batch commit of [[LakeTable]]
+  * (through [[LakeStreamWriterFactory.writeBatch]]) run the exact same
+  * executor writers — batch is just epoch -1.
   *
   * `partSpec` (non-empty = PARTITIONED table): the writer ROLLS to a
   * new file under `<col>=<value>/` whenever the partition-value tuple
@@ -467,10 +458,10 @@ private[lake] final class LakeStreamWriterFactory(
     stagingSub: String,
     prepared: PreparedParquetWrite,
     statsSpec: Seq[LakeStreamingWrite.StatCol],
-    partSpec: Seq[LakeStreamingWrite.StatCol] = Nil,
-    fullSchema: StructType = new StructType(),
-    genBound: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
-    idParams: Seq[(Long, Long)] = Nil)
+    partSpec: Seq[LakeStreamingWrite.StatCol],
+    fullSchema: StructType,
+    genBound: Seq[org.apache.spark.sql.catalyst.expressions.Expression],
+    idParams: Seq[(Long, Long)])
     extends StreamingDataWriterFactory
     with org.apache.spark.sql.connector.write.DataWriterFactory {
 
@@ -485,13 +476,66 @@ private[lake] final class LakeStreamWriterFactory(
     createWriter(partitionId, taskId, -1L)
 }
 
+private[lake] object LakeStreamWriterFactory {
+
+  /** The factory for rows of `schema`, built at plan time: files carry
+    * PHYSICAL column names (`colMap`) and, on a partitioned table,
+    * exclude the partition columns; stats fold for `statsCols` under
+    * their physical names and for the partition columns' own values.
+    */
+  def apply(spark: SparkSession, root: String, stagingSub: String,
+            schema: StructType, statsCols: Seq[String],
+            partitionBy: Seq[String],
+            colMap: Map[String, String] = Map.empty,
+            genBound: Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil,
+            idParams: Seq[(Long, Long)] = Nil): LakeStreamWriterFactory = {
+    def phys(c: String): String = colMap.getOrElse(c, c)
+    def statCol(c: String): LakeStreamingWrite.StatCol = {
+      val i = schema.fieldIndex(c)
+      LakeStreamingWrite.StatCol(phys(c), schema(i).dataType, i)
+    }
+    val content = StructType(schema.fields
+      .filterNot(f => partitionBy.contains(f.name))
+      .map(f => f.copy(name = phys(f.name))))
+    new LakeStreamWriterFactory(root, stagingSub,
+      ParquetWriteBridge.prepare(spark, content), statsCols.map(statCol),
+      partitionBy.map(statCol), schema, genBound, idParams)
+  }
+
+  /** Batch face: run `df`'s rows through `factory`'s task writers, one
+    * task per partition of its plan, inside Spark's own DSv2 task loop
+    * (`DataWritingSparkTask`), and return the written files as `Add`s.
+    * A failed attempt aborts and deletes its files. Commits are not
+    * coordinated, so a speculative duplicate that also commits leaves
+    * an unreferenced orphan for vacuum: the job keeps one message per
+    * partition, and only the log commit makes files visible. The
+    * write is the job's last stage; nothing reads the files back.
+    */
+  def writeBatch(df: DataFrame, factory: LakeStreamWriterFactory): Seq[Add] = {
+    val qe = df.queryExecution
+    val messages = SQLExecution.withNewExecutionId(qe, Some("lake write")) {
+      val rdd = qe.toRdd
+      val out = new Array[WriterCommitMessage](rdd.partitions.length)
+      df.sparkSession.sparkContext.runJob(rdd,
+        (ctx: TaskContext, rows: Iterator[InternalRow]) =>
+          DataWritingSparkTask.run(factory, ctx, rows,
+            useCommitCoordinator = false, Map.empty).writerCommitMessage,
+        rdd.partitions.indices,
+        (i: Int, m: WriterCommitMessage) => out(i) = m)
+      out
+    }
+    LakeStreamingWrite.addsOf(messages)
+  }
+}
+
 /** Executor-side task writer: opens its parquet file lazily on the
   * first row (empty partitions create nothing), folds min/max/null
   * counts per stats column as rows stream through, and reports its
   * file(s) as [[LakeStreamingWrite.FileMessage]]s. Values are tracked
-  * already normalized to the Long/Double/String stats domain; NaN
-  * orders greatest and strings order by UTF-8 bytes, matching the
-  * batch stats pass (Spark min/max).
+  * already normalized to the Long/Double/String stats domain. NaN
+  * orders greatest and strings order by UTF-8 bytes, as Spark's
+  * min/max do; -0.0 orders below 0.0 (`Double.compare`), where Spark
+  * ties them, and pruning's numeric `cmp` treats the two alike.
   */
 private[lake] final class LakeStreamDataWriter(
     root: String,
@@ -507,6 +551,7 @@ private[lake] final class LakeStreamDataWriter(
     idParams: Seq[(Long, Long)] = Nil) extends DataWriter[InternalRow] {
 
   private val partitioned = partSpec.nonEmpty
+  private val partIdx: Set[Int] = partSpec.map(_.idx).toSet
 
   // computed-column tail: the incoming row is EXTENDED to fullSchema
   // by evaluating the bound generated expressions (one codegen'd
@@ -547,7 +592,6 @@ private[lake] final class LakeStreamDataWriter(
   private val project: InternalRow => InternalRow =
     if (!partitioned && !extended) identity
     else {
-      val partIdx = partSpec.map(_.idx).toSet
       val kept = fullSchema.fields.zipWithIndex
         .collect { case (f, i) if !partIdx.contains(i) =>
           org.apache.spark.sql.catalyst.expressions
@@ -580,8 +624,8 @@ private[lake] final class LakeStreamDataWriter(
       java.lang.Double.compare(x, y) < 0
     case (x: org.apache.spark.unsafe.types.UTF8String,
           y: org.apache.spark.unsafe.types.UTF8String) =>
-      // UTF-8 BYTE order — the same order the batch stats pass (Spark
-      // min/max over UTF8String) and LakeTable.cmp use; java.lang
+      // UTF-8 BYTE order — the same order Spark's min/max over
+      // UTF8String and LakeTable.cmp use; java.lang
       // String '<' is UTF-16 code-unit order and disagrees for
       // supplementary-plane characters
       x.compareTo(y) < 0
@@ -608,14 +652,24 @@ private[lake] final class LakeStreamDataWriter(
     case other => other
   }
 
+  /** [[statVal]] with Spark's and Hive's rule for a blank string
+    * partition value: it is a NULL one, so it lands in the default
+    * partition and records no min/max (partition discovery, which the
+    * basePath reads of staged files go through, refuses an empty
+    * `col=` directory).
+    */
+  private def value(s: LakeStreamingWrite.StatCol, row: InternalRow): Any =
+    statVal(s, row) match {
+      case u: org.apache.spark.unsafe.types.UTF8String
+          if u.numBytes == 0 && partIdx(s.idx) => null
+      case v => v
+    }
+
   private def partDirs(vals: Array[Any]): String =
     partSpec.zipWithIndex.map { case (s, i) =>
-      val v = vals(i)
-      val str =
-        if (v == null) "__HIVE_DEFAULT_PARTITION__"
-        else org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .escapePathName(v.toString)
-      s"${s.physName}=$str"
+      org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+        .getPartitionPathString(s.physName,
+          if (vals(i) == null) null else vals(i).toString)
     }.mkString("/")
 
   private def openFor(vals: Array[Any]): Unit = {
@@ -654,7 +708,7 @@ private[lake] final class LakeStreamDataWriter(
   override def write(row0: InternalRow): Unit = {
     val row = extend(row0)
     if (partitioned) {
-      val vals = partSpec.map(s => stored(statVal(s, row))).toArray
+      val vals = partSpec.map(s => stored(value(s, row))).toArray
       val changed = curPart == null ||
         !java.util.Arrays.equals(vals.asInstanceOf[Array[AnyRef]],
           curPart.asInstanceOf[Array[AnyRef]])
@@ -667,8 +721,7 @@ private[lake] final class LakeStreamDataWriter(
     if (writer == null) openFor(null)
     var i = 0
     while (i < n) {
-      val s = statsSpec(i)
-      val v = statVal(s, row)
+      val v = value(statsSpec(i), row)
       if (v == null) nulls(i) += 1
       else {
         // getUTF8String may return a view into a reused buffer, so a

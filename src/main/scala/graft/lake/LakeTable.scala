@@ -102,12 +102,25 @@ object LakeTable {
 
   /** Write `df` as `nFiles` parquet files under a fresh per-commit
     * `data/<uuid>/` staging directory and return their Add actions
-    * with measured per-file stats. `clusterBy` range-partitions and
-    * sorts so each file covers a contiguous value range (tight,
-    * disjoint min/max — the layout that makes skipping bite; same
-    * idea as [[graft.operators.Compaction]]'s range-clustered mode).
-    * Stats come from ONE distributed pass grouped by
-    * `input_file_name()`, not a per-file job loop.
+    * with per-file stats, folded by the lake's one data-file writer
+    * ([[LakeStreamDataWriter]], the streaming sink's and staged CTAS's
+    * too) inside the write tasks: the write is the commit's last job,
+    * and nothing reads its own output back.
+    *
+    * One arrangement covers every layout: range-partition by
+    * (partition cols ++ order key) into `nFiles` tasks and sort within
+    * each, where the order key is the cluster column or the
+    * range-normalized curve key of a `z:`/`h:` spec. Each file then
+    * covers a contiguous key range (tight, disjoint min/max — the
+    * layout that makes skipping bite; same idea as
+    * [[graft.operators.Compaction]]'s range-clustered mode), and a
+    * partitioned write rolls to a new file at each partition-value
+    * boundary, so a task holding three days writes three files. File
+    * CONTENT excludes the partition columns (pure hive layout — what
+    * CONVERT TO LAKE adopts in place); their per-file value is
+    * recorded as min==max stats, which is where reads and pruning get
+    * them back. Without an order key rows spread over `nFiles` tasks
+    * (one task needs no shuffle at all).
     */
   private def writeDataFiles(spark: SparkSession, root: Path, df: DataFrame,
                              statsCols: Seq[String], nFiles: Int,
@@ -117,134 +130,22 @@ object LakeTable {
       : Seq[Add] = {
     require(nFiles > 0, "nFiles must be positive")
     requireStatsColsSupported(df.schema, statsCols)
-    if (partitionBy.nonEmpty)
-      return writePartitionedFiles(spark, root, df, statsCols, nFiles,
-        clusterBy, partitionBy)
-    def phys(c: String): String = colMap.getOrElse(c, c)
-    val sub = s"data/${java.util.UUID.randomUUID()}"
-    val outDir = new Path(root, sub)
-    val arranged = clusterBy match {
-      case Some(z) if z.startsWith("z:") =>
-        // multi-dimensional layout: Morton-interleave the recorded
-        // columns so every file carries tight min/max bounds on ALL
-        // of them — a predicate on any dimension prunes. Rewrites
-        // re-enter here with the same recorded spec, so maintenance
-        // preserves it. Values outside the curve's guarded domain
-        // become NULL here so the layout's own assert fails LOUDLY
-        // instead of wrapping into a wrong (but silent) position.
-        val dims = z.stripPrefix("z:").split(",").toSeq
-        def dim(c: String) =
-          when(col(c).between(0, Int.MaxValue), col(c)).cast("int")
-        if (dims.size == 2) // 2-D: range-normalized codegen'd kernel
-          graft.operators.ZOrder.layoutNormalized(df, dim(dims(0)),
-            dim(dims(1)), nFiles)
-        else
-          graft.operators.ZOrder.layoutN(df, dims.map(dim), nFiles)
-      case Some(h) if h.startsWith("h:") =>
-        // Hilbert-curve layout: the Morton spec's better-locality
-        // sibling (always-adjacent consecutive cells → tighter
-        // per-file bounding boxes); same guards, same recorded-spec
-        // maintenance contract. 2-D uses the order-31 codegen'd walk;
-        // 3-D/4-D the Skilling-transform kernels — zCluster parity.
-        val dims = h.stripPrefix("h:").split(",").toSeq
-        def hdim(c: String) =
-          when(col(c).between(0, Int.MaxValue), col(c)).cast("int")
-        if (dims.size == 2)
-          graft.operators.ZOrder.hilbertLayout(df, hdim(dims(0)),
-            hdim(dims(1)), nFiles)
-        else
-          graft.operators.ZOrder.hilbertLayoutN(df, dims.map(hdim), nFiles)
-      case Some(c) =>
-        df.repartitionByRange(nFiles, col(c)).sortWithinPartitions(col(c))
-      case None => df.repartition(nFiles)
-    }
-    // column mapping: files always carry PHYSICAL names, so renames
-    // never touch data; the alias projection after the range/sort
-    // arrangement preserves the clustered layout
-    val physDf =
-      if (colMap.isEmpty) arranged
-      else arranged.select(df.columns.map(c => col(c).as(phys(c))).toSeq: _*)
-    physDf.write.parquet(outDir.toString)
-
-    val hfs = fs(spark, root)
-    val parts = hfs.listStatus(outDir)
-      .filter(_.getPath.getName.endsWith(".parquet"))
-      .map(st => st.getPath.getName -> st.getLen).toMap
-
-    // stats are measured on the written (physical-name) files and
-    // recorded under the PHYSICAL name — the same key pre-mapping
-    // files used — so lookups translate once via the snapshot's
-    // mapping and a rename never invalidates the skipping index
-    val aggs = count(lit(1)).as("__rows") +: statsCols.flatMap { c =>
-      Seq(min(col(phys(c))).as(s"__min_$c"), max(col(phys(c))).as(s"__max_$c"),
-        sum(when(col(phys(c)).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
-    }
-    val statRows = spark.read.parquet(outDir.toString)
-      .groupBy(element_at(split(input_file_name(), "/"), -1).as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-
-    val adds = statRows.map { r =>
-      val name = r.getAs[String]("__file")
-      // stats keys = the FILE's column names (physical): lookups
-      // translate logical ranges via the snapshot's mapping, so a
-      // rename never invalidates existing files' skipping index
-      val mins = statsCols.map(c =>
-        phys(c) -> normalizeStat(r.getAs[Any](s"__min_$c")))
-        .filter(_._2 != null).toMap
-      val maxs = statsCols.map(c =>
-        phys(c) -> normalizeStat(r.getAs[Any](s"__max_$c")))
-        .filter(_._2 != null).toMap
-      val nulls = statsCols.map(c =>
-        phys(c) -> r.getAs[Long](s"__nulls_$c")).toMap
-      Add(s"$sub/$name",
-        Stats(r.getAs[Long]("__rows"), parts.getOrElse(name, 0L), mins, maxs,
-          nulls))
-    }.toSeq.sortBy(_.path)
-    // files written but empty (possible under repartitionByRange skew)
-    // are not referenced; leave them for vacuum
-    adds
-  }
-
-  /** Partitioned twin of [[writeDataFiles]]: rows land under
-    * hive-style `<col>=<value>/` directories inside the same fresh
-    * `data/<uuid>/` staging dir, written by Spark's native
-    * DYNAMIC-PARTITION writer — the mechanism that splits output
-    * files on value boundaries WITHOUT a per-value shuffle (a task
-    * holding three days writes three files). The shuffle is one
-    * range-partition on (partition cols ++ cluster col): each value
-    * lands in one task (huge partitions split across tasks only at
-    * cluster-col boundaries, every file still single-valued), and
-    * rows arrive sorted so the writer never re-sorts. File CONTENT
-    * excludes the partition columns (pure hive layout — what CONVERT
-    * TO LAKE adopts in place); their per-file value is recorded as
-    * min==max stats, which is where reads and pruning get them back.
-    * Curve cluster specs apply WITHIN each partition directory (the
-    * range exchange orders by partition cols ++ curve key), never
-    * across partition boundaries.
-    */
-  private def writePartitionedFiles(spark: SparkSession, root: Path,
-                                    df: DataFrame, statsCols: Seq[String],
-                                    nFiles: Int, clusterBy: Option[String],
-                                    partCols: Seq[String]): Seq[Add] = {
-    partCols.foreach(c => require(df.columns.contains(c),
+    partitionBy.foreach(c => require(df.columns.contains(c),
       s"partition column '$c' not in write schema ${df.columns.toSeq}"))
-    val sub = s"data/${java.util.UUID.randomUUID()}"
-    val outDir = new Path(root, sub)
-    // curve specs cluster WITHIN each partition directory: the curve
-    // key is computed per row (range-normalized over the whole batch
-    // — one extra min/max pass, the price every curve layout pays)
-    // and the range exchange orders by (partition cols ++ key), so
-    // files inside a partition cover contiguous curve ranges and
-    // carry tight min/max on EVERY dimension — partition-by-day plus
-    // multi-column z-order inside the day, the standard 100 TB
-    // layout. The curve must not span partition columns themselves
-    // (their value is constant per directory; interleaving a
-    // constant wastes key bits) — refused loudly.
+    // multi-dimensional layout: the curve key interleaves the recorded
+    // columns so every file carries tight min/max bounds on ALL of
+    // them — a predicate on any dimension prunes. Rewrites re-enter
+    // here with the same recorded spec, so maintenance preserves it.
+    // Values outside the curve's guarded domain become NULL so the
+    // key's own assert fails LOUDLY instead of wrapping into a wrong
+    // (but silent) position. On a partitioned table the curve orders
+    // rows WITHIN each partition directory; it must not span partition
+    // columns themselves (their value is constant per directory;
+    // interleaving a constant wastes key bits) — refused loudly.
     val curveKey: Option[Column] = clusterBy.collect {
       case spec if spec.startsWith("z:") || spec.startsWith("h:") =>
         val dims = spec.drop(2).split(",").toSeq
-        dims.filter(partCols.contains) match {
+        dims.filter(partitionBy.contains) match {
           case Nil => ()
           case overlap => throw new IllegalArgumentException(
             s"curve cluster spec '$spec' references partition " +
@@ -258,86 +159,31 @@ object LakeTable {
           hilbert = spec.startsWith("h:"))
     }
     val (keyed, orderCols) = curveKey match {
-      case Some(k) =>
-        (df.withColumn("__curve", k), partCols :+ "__curve")
+      case Some(k) => (df.withColumn("__curve", k), partitionBy :+ "__curve")
       case None =>
-        (df, partCols ++ clusterBy.filterNot(partCols.contains).toSeq)
+        (df, partitionBy ++ clusterBy.filterNot(partitionBy.contains).toSeq)
     }
-    val arranged = keyed.repartitionByRange(nFiles, orderCols.map(col): _*)
-      .sortWithinPartitions(orderCols.map(col): _*)
-      .drop("__curve") // projection preserves the per-partition order
-    arranged.write.partitionBy(partCols: _*).parquet(outDir.toString)
-
-    // per-file key = the last (1 + #partCols) path segments —
-    // "day=5/part-...parquet" — NOT the bare file name: one task
-    // writing the same part number into two partition directories
-    // reuses the name
-    val depth = partCols.size + 1
-    val hfs = fs(spark, root)
-    val qualOut = hfs.makeQualified(outDir).toUri.getPath
-    val it = hfs.listFiles(outDir, true)
-    val parts = scala.collection.mutable.Map[String, Long]()
-    val rawByEnc = scala.collection.mutable.Map[String, String]()
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.getPath.getName.endsWith(".parquet")) {
-        val raw = st.getPath.toUri.getPath.stripPrefix(qualOut + "/")
-        parts(raw) = st.getLen
-        // the stats pass below keys files by input_file_name(), which
-        // is the URI-ENCODED SparkPath form. A partition VALUE holding
-        // URI-special characters makes the two name spaces diverge —
-        // e.g. value '01/01/2024' is Hive-escaped ON DISK to
-        // 'day=01%2F01%2F2024', whose URI encoding is
-        // 'day=01%252F01%252F2024' — and a raw-keyed lookup would
-        // record 0 bytes (⇒ zero scan splits ⇒ silently empty reads).
-        // Both encodings derive from Path.toUri on the same listed
-        // path, so this map is exact by construction.
-        rawByEnc(st.getPath.toUri.toString.split('/')
-          .takeRight(depth).mkString("/")) = raw
-      }
+    val arranged =
+      if (orderCols.nonEmpty)
+        keyed.repartitionByRange(nFiles, orderCols.map(col): _*)
+          .sortWithinPartitions(orderCols.map(col): _*)
+          .drop("__curve") // projection preserves the per-task order
+      else if (nFiles == 1) df.coalesce(1)
+      else df.repartition(nFiles)
+    val sub = s"data/${java.util.UUID.randomUUID()}"
+    // files carry PHYSICAL column names and record stats under them —
+    // the same key pre-mapping files used — so lookups translate once
+    // via the snapshot's mapping and a rename never invalidates the
+    // skipping index
+    val factory = LakeStreamWriterFactory(spark, root.toString, sub,
+      df.schema, statsCols, partitionBy, colMap)
+    try LakeStreamWriterFactory.writeBatch(arranged, factory)
+    catch { case e: Throwable =>
+      // the committed tasks' files are unreferenced: drop the staging
+      // dir now rather than leave it to vacuum
+      fs(spark, root).delete(new Path(root, sub), true)
+      throw e
     }
-    // an empty batch writes no files at all under the dynamic writer
-    if (parts.isEmpty) return Nil
-
-    val relKey = concat_ws("/",
-      slice(split(input_file_name(), "/"), -depth, depth))
-    // basePath read re-derives the partition columns from the
-    // directory names (single base: everything is under outDir), so
-    // the same stats pass covers content AND partition columns — a
-    // partition column is constant per file, min==max by construction
-    val aggs = count(lit(1)).as("__rows") +: statsCols.flatMap { c =>
-      Seq(min(col(c)).as(s"__min_$c"), max(col(c)).as(s"__max_$c"),
-        sum(when(col(c).isNull, 1L).otherwise(0L)).as(s"__nulls_$c"))
-    }
-    // explicit schema: partition-directory TYPE INFERENCE must not
-    // run — `day=2024-01-01` dirs would come back as DATE when the
-    // declared column is STRING, and the stats fold would record a
-    // type the pruning comparators (and normalizeStat) refuse
-    val statRows = spark.read.option("basePath", outDir.toString)
-      .schema(df.schema)
-      .parquet(outDir.toString)
-      .groupBy(relKey.as("__file"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect()
-
-    statRows.map { r =>
-      // translate the stats key (URI-encoded) back to the on-disk
-      // name — the log records the RAW literal path (identity for
-      // names without URI-special characters)
-      val rel = rawByEnc.getOrElse(r.getAs[String]("__file"),
-        r.getAs[String]("__file"))
-      val mins = statsCols.map(c =>
-        c -> normalizeStat(r.getAs[Any](s"__min_$c")))
-        .filter(_._2 != null).toMap
-      val maxs = statsCols.map(c =>
-        c -> normalizeStat(r.getAs[Any](s"__max_$c")))
-        .filter(_._2 != null).toMap
-      val nulls = statsCols.map(c =>
-        c -> r.getAs[Long](s"__nulls_$c")).toMap
-      Add(s"$sub/$rel",
-        Stats(r.getAs[Long]("__rows"), parts.getOrElse(rel, 0L), mins, maxs,
-          nulls))
-    }.toSeq.sortBy(_.path)
   }
 
   // ---- create / append / overwrite ---------------------------------
@@ -1671,7 +1517,7 @@ object LakeTable {
     val nOut = math.max(1, cands.size)
     val adds = writeDataFiles(spark, rootP, newRows,
       LakeColumns.statsColsFor(snap.statsCols, snap.colSpecs), nOut,
-      snap.clusterBy, snap.colMap, snap.partitionBy).filter(_.stats.rows > 0)
+      snap.clusterBy, snap.colMap, snap.partitionBy)
     val v = LakeLog.commit(f, rootP,
       ((Meta(op, snap.schemaDdl, snap.statsCols, None, None, now()) +:
         cands.map(a => Remove(a.path))) ++ adds) ++ alloc.hwmActions(adds),
@@ -2043,8 +1889,8 @@ object LakeTable {
 
   /** ONE string order everywhere stats are written or probed: UTF-8
     * byte order — what Spark's min/max aggregates (UTF8String binary
-    * compare) already produce for the batch stats pass, what the
-    * streaming writer folds per row, and what parquet footers record
+    * compare) produce, what the lake's data-file writer folds per
+    * row, and what parquet footers record
     * for BINARY/UTF8 columns. `java.lang.String` `<`/`compareTo` is
     * UTF-16 code-unit order, which DISAGREES for supplementary-plane
     * characters (surrogates 0xD800-0xDFFF sort below 0xE000+ code
@@ -2257,7 +2103,7 @@ object LakeTable {
       .where(!coalesce(rangeFilter(ranges), lit(false)))
     val nOut = math.max(1, cands.size / 2)
     val adds = writeDataFiles(spark, rootP, survivors, snap.statsCols, nOut,
-      snap.clusterBy, snap.colMap, snap.partitionBy).filter(_.stats.rows > 0)
+      snap.clusterBy, snap.colMap, snap.partitionBy)
     val v = LakeLog.commit(f, rootP,
       (Meta("delete", snap.schemaDdl, snap.statsCols, None, None, now()) +:
         cands.map(a => Remove(a.path))) ++ adds,
@@ -2328,7 +2174,7 @@ object LakeTable {
     val nOut = math.max(1, cands.size)
     val adds = writeDataFiles(spark, rootP, merged,
       LakeColumns.statsColsFor(snap.statsCols, snap.colSpecs), nOut,
-      snap.clusterBy, snap.colMap, snap.partitionBy).filter(_.stats.rows > 0)
+      snap.clusterBy, snap.colMap, snap.partitionBy)
     val v = LakeLog.commit(f, rootP,
       ((Meta("merge", snap.schemaDdl, snap.statsCols, appId, batchId,
         now()) +: cands.map(a => Remove(a.path))) ++ adds) ++
@@ -2423,7 +2269,7 @@ object LakeTable {
     // on value boundaries, so bin-packing never merges across
     // partition directories and every output stays single-valued
     val adds = writeDataFiles(spark, rootP, packed, snap.statsCols, nOut,
-      snap.clusterBy, snap.colMap, snap.partitionBy).filter(_.stats.rows > 0)
+      snap.clusterBy, snap.colMap, snap.partitionBy)
     val v = LakeLog.commit(f, rootP,
       (Meta("compact", snap.schemaDdl, snap.statsCols, None, None, now()) +:
         smalls.map(a => Remove(a.path))) ++ adds,
@@ -2448,7 +2294,6 @@ object LakeTable {
       snap.colMap, snap.partitionBy, snap.colSpecs)
     val adds = writeDataFiles(spark, rootP, rows, snap.statsCols, nFiles,
       Some(clusterBy), snap.colMap, snap.partitionBy)
-      .filter(_.stats.rows > 0)
     val v = LakeLog.commit(f, rootP,
       (Meta("recluster", snap.schemaDdl, snap.statsCols, None, None, now(),
         Some(clusterBy)) +: snap.files.map(a => Remove(a.path))) ++ adds,

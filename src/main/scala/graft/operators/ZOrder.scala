@@ -91,26 +91,6 @@ object ZOrder {
     }
   }
 
-  /** [[layout]] with range normalization — the layout the LAKE's
-    * `z:x,y` spec uses: both columns scaled onto 16-bit bucket ids
-    * (one min/max pass), then the codegen'd 32-bit Morton kernel.
-    * Unequal column magnitudes no longer starve the smaller column
-    * of key bits.
-    */
-  def layoutNormalized(df: DataFrame, x: Column, y: Column,
-                       numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val scaled = rangeScaled(df, Seq(x, y), 16)
-    val guard = assert_true(x.isNotNull && y.isNotNull && x >= 0 && y >= 0,
-      lit("ZOrder.layoutNormalized requires non-null, non-negative " +
-        "coordinates"))
-    df.withColumn("__z", when(guard.isNull,
-        zvalue(scaled(0).cast("int"), scaled(1).cast("int"))))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
   /** The Hilbert-curve key of two int columns — [[zvalue]]'s
     * better-locality sibling: consecutive curve indexes are ALWAYS
     * adjacent cells (Morton jumps at every quadrant boundary), so the
@@ -122,31 +102,13 @@ object ZOrder {
   def hilbertValue(x: Column, y: Column): Column =
     graft.expressions.HilbertIndex(x, y)
 
-  /** [[layoutNormalized]] on the Hilbert curve instead of the Morton
-    * curve: both columns range-scaled onto 16-bit bucket ids, then
-    * the codegen'd order-31 kernel (the scaled domain fills the
-    * curve's low block).
-    */
-  def hilbertLayout(df: DataFrame, x: Column, y: Column,
-                    numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val scaled = rangeScaled(df, Seq(x, y), 16)
-    val guard = assert_true(x.isNotNull && y.isNotNull && x >= 0 && y >= 0,
-      lit("ZOrder.hilbertLayout requires non-null, non-negative " +
-        "coordinates (the order-31 curve's guarded domain)"))
-    df.withColumn("__h", when(guard.isNull,
-        hilbertValue(scaled(0).cast("int"), scaled(1).cast("int"))))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
-
   /** n-DIMENSIONAL Morton key (3+ columns; use [[zvalue]]'s codegen'd
     * kernel for the 2-D case): round-robin interleave of the low
     * `bits` bits of each column into one long, built from plain
     * shift/mask/sum arithmetic so it stays inside whole-stage codegen
     * with no custom kernel. Each column must fit in `bits` bits —
-    * [[layoutN]] guards that per row. With k columns, bits <= 63/k.
+    * [[normalizedCurveKey]] scales them so. With k columns,
+    * bits <= 63/k.
     */
   def zvalueN(cols: Seq[Column], bits: Int): Column = {
     val k = cols.size
@@ -161,50 +123,20 @@ object ZOrder {
     terms.reduce(_ + _)
   }
 
-  /** n-D clustering for writing — [[layout]]'s shape for 3+ columns:
-    * one range exchange on the interleaved key, per-partition sort,
-    * key dropped. Every column's per-file extent shrinks with file
-    * count, so a predicate on ANY of the k dimensions prunes.
-    *
-    * Columns are RANGE-NORMALIZED before interleaving (one min/max
-    * aggregate over the input, then integer bucket ids of equal
-    * width): raw interleaving lets the largest-magnitude column own
-    * every significant key bit — a (60000-range, 1500-range,
-    * 1024-range) triple would sort purely by the first column and
-    * prune on nothing else. Normalization gives each dimension the
-    * same bit significance regardless of its units, the same reason
-    * public z-order implementations rank-normalize. Negative values
-    * are fine (the bucket id is offset from the observed min); NULLs
-    * fail loudly.
-    */
-  def layoutN(df: DataFrame, cols: Seq[Column], numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val k = cols.size
-    val bits = math.min(16, 63 / k) // 2^16 buckets/dim is plenty for files
-    // null min/max inside rangeScaled = empty input (nothing to
-    // scale) or all-null coordinates (the per-row guard below still
-    // fails those loudly)
-    val scaled = rangeScaled(df, cols, bits)
-    val guard = assert_true(cols.map(_.isNotNull).reduce(_ && _),
-      lit("ZOrder.layoutN requires non-null coordinates: a NULL " +
-        "produces no curve position to range-partition on"))
-    df.withColumn("__z", when(guard.isNull, zvalueN(scaled, bits)))
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
-
-  /** Range-normalized curve KEY of `cols` — the sort column the
-    * layout functions above build internally, exposed for callers
-    * that must COMPOSE the key with their own partitioning instead of
-    * handing this module the whole exchange: the lake's partitioned +
-    * curve-clustered write range-partitions by (partition cols ++
-    * this key), so each partition DIRECTORY's files cover contiguous
-    * curve ranges and carry tight min/max on every dimension inside
-    * that partition. Triggers ONE min/max aggregate over `df` (the
-    * same normalization pass the layout functions pay). NULL
-    * coordinates fail loudly via the same codegen'd assert, woven
-    * into the key's data flow so column pruning cannot drop it.
+  /** Range-normalized curve KEY of `cols` — the sort column of the
+    * lake's `z:`/`h:` cluster specs, which range-partition by
+    * (partition cols ++ this key), so each file (within each partition
+    * DIRECTORY) covers a contiguous curve range and carries tight
+    * min/max on every dimension. Columns are RANGE-NORMALIZED before
+    * interleaving (one min/max aggregate over `df`, then integer bucket
+    * ids of equal width): raw interleaving lets the largest-magnitude
+    * column own every significant key bit — a (60000-range,
+    * 1500-range, 1024-range) triple would sort purely by the first
+    * column and prune on nothing else. 2-D keys use the codegen'd
+    * 32-bit Morton or order-31 Hilbert kernel on 16-bit bucket ids;
+    * 3-D/4-D keys the shift/mask interleave or the Skilling-transform
+    * kernels. NULL coordinates fail loudly via a codegen'd assert,
+    * woven into the key's data flow so column pruning cannot drop it.
     */
   def normalizedCurveKey(df: DataFrame, cols: Seq[Column],
                          hilbert: Boolean): Column = {
@@ -237,29 +169,6 @@ object ZOrder {
       case k => throw new IllegalArgumentException(
         s"hilbert key takes 2-4 columns, got $k")
     }
-
-  /** n-D clustering on the HILBERT curve — [[layoutN]] with the
-    * Skilling-transform key instead of the Morton interleave (2-D
-    * delegates to the order-31 kernel): same range normalization,
-    * same single range exchange, tighter per-file bounding boxes for
-    * the same file count (consecutive Hilbert cells are always
-    * adjacent; Morton jumps at every 2^k-ant boundary).
-    */
-  def hilbertLayoutN(df: DataFrame, cols: Seq[Column],
-                     numFiles: Int): DataFrame = {
-    require(numFiles > 0, s"numFiles must be positive, got $numFiles")
-    val k = cols.size
-    val bits = math.min(16, 63 / k)
-    val scaled = rangeScaled(df, cols, bits)
-    val guard = assert_true(cols.map(_.isNotNull).reduce(_ && _),
-      lit("ZOrder.hilbertLayoutN requires non-null coordinates: a NULL " +
-        "produces no curve position to range-partition on"))
-    df.withColumn("__h", when(guard.isNull,
-        hilbertValueN(scaled.map(_.cast("int")), bits)))
-      .repartitionByRange(numFiles, col("__h"))
-      .sortWithinPartitions("__h")
-      .drop("__h")
-  }
 
   /** DuckDB-expressible Morton formula for oracle generation: the
     * unrolled `Σ ((x>>i)&1)·4^i + ((y>>i)&1)·2·4^i` for inputs known

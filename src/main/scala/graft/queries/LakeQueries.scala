@@ -145,8 +145,8 @@ object LakeQueries {
     * a (o_custkey, omday, o_orderkey) Morton interleave gives prunes
     * a predicate on ANY of the three dimensions. COMPACTED once after
     * create, so the oracle-gated read also certifies the recorded n-D
-    * spec survives maintenance (writeDataFiles re-enters layoutN with
-    * the same recorded spec).
+    * spec survives maintenance (writeDataFiles re-enters the same
+    * curve key with the recorded spec).
     */
   private def z3For(s: SparkSession, dir: String): String =
     PerFixture("zord3", dir) { root =>

@@ -21,7 +21,8 @@ import org.apache.hadoop.util.ShutdownHookManager
   * builds under its own lock, not the map's, so a builder may ask for
   * another artifact (a clone's builder asks for its source chain). One
   * kind belongs to one builder; a second builder claiming it is
-  * refused.
+  * refused. [[scratch]] hands out unmemoized per-call dirs under the
+  * same root.
   */
 private[queries] object PerFixture {
 
@@ -50,6 +51,14 @@ private[queries] object PerFixture {
     dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(40) + "_" + hash(dir)
 
   def path(kind: String, dir: String): String = s"$root/${kind}_${dirKey(dir)}"
+
+  /** A fresh, empty dir under the same exit-deleted root, for per-call
+    * work whose outputs a returned frame still reads lazily (nothing
+    * memoized: every call gets its own dir).
+    */
+  def scratch(kind: String): String =
+    java.nio.file.Files.createTempDirectory(
+      java.nio.file.Paths.get(root), s"${kind}_").toString
 
   /** Deletes `path` and everything under it, if present. */
   def remove(path: String): Unit = {

@@ -744,9 +744,14 @@ object StreamingQueries {
       // includes recovered counts, not just run 2's own half) while
       // run 1's emission for that key stopped short.
       (s, dir) => {
-        import java.nio.file.Files
-        val stage = Files.createTempDirectory("graft_recovery_stage").toString
-        val ckpt = Files.createTempDirectory("graft_recovery_ckpt").toString
+        // one fresh work dir per call under the exit-deleted fixture
+        // root: the returned frame reads its sink lazily, so nothing
+        // here may be deleted before the JVM exits
+        val work = PerFixture.scratch("recovery")
+        def sub(name: String): String = java.nio.file.Files
+          .createDirectory(java.nio.file.Paths.get(work, name)).toString
+        val stage = sub("stage")
+        val ckpt = sub("ckpt")
         val base = Tables.raw(s, dir, "events")
         val mt = new MtimeSequencer(stage)
         def writeParts(ps: Range): Unit = ps.foreach { p =>
@@ -791,11 +796,9 @@ object StreamingQueries {
         val spPrev = s.conf.getOption(spKey)
         val (run1, run2) = try {
           s.conf.set(spKey, statePartitionsFor(s, dir).toString)
-          val r1 = runOnce(
-            Files.createTempDirectory("graft_recovery_sink_a").toString)
+          val r1 = runOnce(sub("sink_a"))
           writeParts(2 until 4)
-          val r2 = runOnce(
-            Files.createTempDirectory("graft_recovery_sink_b").toString)
+          val r2 = runOnce(sub("sink_b"))
           (r1, r2)
         } finally spPrev match {
           case Some(v) => s.conf.set(spKey, v)

@@ -11,15 +11,15 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions,
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
-/** Executor-side parquet writing for the lake's DSv2 STREAMING sink
-  * (`writeStream.toTable`): the micro-batch engine hands each task an
-  * `InternalRow` stream, so the sink needs a per-task parquet writer —
-  * unlike the batch path, where a whole DataFrame goes through
-  * `df.write.parquet`. This bridges to the SAME writer stack that
-  * backs `df.write.parquet` (`ParquetUtils.prepareWrite` →
-  * `ParquetOutputWriter`), so streaming-written files are bit-
-  * compatible with batch-written ones: same compression, timestamp
-  * and rebase settings, same vectorized-reader compatibility.
+/** Executor-side parquet writing for the lake's one data-file writer
+  * (`graft.lake.LakeStreamDataWriter`), which every lake write runs:
+  * batch commits, staged CTAS and streaming epochs. Each task streams
+  * `InternalRow`s into its own files, so it needs a per-task parquet
+  * writer. This bridges to the SAME writer stack that backs
+  * `df.write.parquet` (`ParquetUtils.prepareWrite` →
+  * `ParquetOutputWriter`), so lake files have the session's
+  * compression, timestamp and rebase settings and stay compatible
+  * with the vectorized reader.
   *
   * [[prepare]] runs on the DRIVER at plan time (it reads the session's
   * SQLConf into a hadoop conf); the returned [[PreparedParquetWrite]]

@@ -299,13 +299,23 @@ class LakePartitionSpec extends SparkSuite {
       Seq(LakeTable.ColRange("day", Some(3L), Some(3L))))
     assert(rep.filesRead < rep.filesTotal)
 
-    // inline CHECK referencing the PARTITION column: the staged
-    // validation must see the injected values (a violating batch
-    // aborts, nothing created)
-    intercept[Exception] {
-      spark.sql(s"CREATE TABLE $cat.ns.bad PARTITIONED BY (day) " +
-        "(CONSTRAINT lowday CHECK (day < 3)) " +
-        "AS SELECT * FROM pctas_seed")
+    // an inline CHECK never reaches a staged write with rows: Spark's
+    // parser refuses a constraint list on CTAS in either position, and
+    // refuses a satisfied CHECK the same way, so it is the parser and
+    // not the CHECK that stops the statement (nothing created)
+    Seq("day < 3", "day < 30").foreach { chk =>
+      val misplaced = intercept[
+        org.apache.spark.sql.catalyst.parser.ParseException] {
+        spark.sql(s"CREATE TABLE $cat.ns.bad PARTITIONED BY (day) " +
+          s"(CONSTRAINT lowday CHECK ($chk)) AS SELECT * FROM pctas_seed")
+      }
+      assert(misplaced.getErrorClass == "PARSE_SYNTAX_ERROR",
+        misplaced.getMessage)
+      intercept[org.apache.spark.sql.catalyst.parser.ParseException] {
+        spark.sql(s"CREATE TABLE $cat.ns.bad " +
+          s"(CONSTRAINT lowday CHECK ($chk)) PARTITIONED BY (day) " +
+          "AS SELECT * FROM pctas_seed")
+      }
     }
     assert(!spark.sql(s"SHOW TABLES IN $cat.ns").collect()
       .exists(_.getString(1) == "bad"))

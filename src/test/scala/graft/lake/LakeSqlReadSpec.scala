@@ -251,7 +251,7 @@ class LakeSqlReadSpec extends SparkSuite {
       LakeTable.append(spark, root, big, nFiles = 1)
     }
     // the recorded 3-D spec survives maintenance: compaction
-    // re-enters layoutN with the same spec, so every dimension still
+    // re-enters the curve key with the same spec, so every dimension still
     // prunes over the rewritten files
     LakeTable.compact(spark, root, smallBytes = Long.MaxValue,
       targetBytes = math.max(1L, LakeTable.snapshot(spark, root).files
