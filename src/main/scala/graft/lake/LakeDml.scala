@@ -263,8 +263,7 @@ private[lake] final case class LakeMergeIntoCommand(
 
     val cols = schema.fields.toSeq
     val tp = LakeTable
-      .readAddsWithPos(spark, rootP, snap.schemaDdl, cands, snap.colMap,
-        snap.partitionBy, snap.colSpecs)
+      .readAdds(spark, rootP, snap, cands, withPos = true)
       .select(cols.map(fd => col(fd.name).as(s"__t_${fd.name}")) ++
         Seq(col("__file"), col("__pos")): _*)
       .localCheckpoint(eager = false) // cardinality check + 3 joins
@@ -371,8 +370,7 @@ private[lake] final case class LakeUpdateCommand(
       condition.map(pruneRanges).getOrElse(Nil), snap.colMap)
     val cands = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
-    val t = LakeTable.readAdds(spark, rootP, snap.schemaDdl, cands,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val t = LakeTable.readAdds(spark, rootP, snap, cands)
     def bindT(e: Expression): Expression = e.transform {
       case a: AttributeReference if targetIds.contains(a.exprId) =>
         PlanBridge.expression(t(a.name))
@@ -419,8 +417,7 @@ private[lake] final case class LakeDeleteCommand(
     val pr = LakeTable.physRanges(pruneRanges(condition), snap.colMap)
     val cands = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
-    val t = LakeTable.readAdds(spark, rootP, snap.schemaDdl, cands,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val t = LakeTable.readAdds(spark, rootP, snap, cands)
     def bindT(e: Expression): Expression = e.transform {
       case a: AttributeReference if targetIds.contains(a.exprId) =>
         PlanBridge.expression(t(a.name))

@@ -14,9 +14,9 @@ import org.apache.spark.unsafe.types.UTF8String
 
 /** [[FileIndex]] over a [[LakeLog.Snapshot]] — the piece that puts
   * the lake's per-file min/max stats INSIDE Spark's native parquet
-  * scan planning (the Delta `TahoeFileIndex` idea): `spark.read
-  * .format("graft-lake")` plans a stock `FileScan parquet` whose
-  * file list is the snapshot (never a directory listing — vacuumed
+  * scan planning (the Delta `TahoeFileIndex` idea): every lake read
+  * ([[LakeTable.fileRelation]]) plans a stock `FileScan parquet` whose
+  * file list is the snapshot's (never a directory listing — vacuumed
   * or not-yet-committed files are invisible by construction), and
   * `listFiles` re-prunes that list against the pushed data filters,
   * so version isolation, stats skipping, parquet row-group pushdown
@@ -38,12 +38,11 @@ import org.apache.spark.unsafe.types.UTF8String
   */
 final class LakeFileIndex(spark: SparkSession, root: Path,
                           snap: LakeLog.Snapshot,
-                          subset: Option[Seq[LakeLog.Add]] = None)
+                          // any subset of files read under `snap`'s view
+                          // (a DV-aware read plans the clean and the DV'd
+                          // files as two separate native scans)
+                          files: Seq[LakeLog.Add])
     extends FileIndex {
-
-  // an index may cover a SUBSET of the snapshot (the DV-aware read
-  // plans the clean and DV'd files as two separate native scans)
-  private val files: Seq[LakeLog.Add] = subset.getOrElse(snap.files)
 
   private val statsByPath: Map[String, LakeLog.Stats] =
     files.map(f => f.path -> f.stats).toMap

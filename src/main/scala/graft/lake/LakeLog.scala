@@ -223,11 +223,16 @@ object LakeLog {
 
   // ---- JSON (de)serialization -------------------------------------
 
+  // JSON has no NaN or infinity (Jackson writes them as strings, which
+  // would read back as String stats), so non-finite doubles travel
+  // tagged: {"double": "NaN" | "Infinity" | "-Infinity"}
   private def statToJson(v: Any): JValue = v match {
     case l: Long    => JLong(l)
     case i: Int     => JLong(i.toLong)
+    case d: Double if d.isNaN || d.isInfinite =>
+      JObject("double" -> JString(d.toString))
     case d: Double  => JDouble(d)
-    case f: Float   => JDouble(f.toDouble)
+    case f: Float   => statToJson(f.toDouble)
     case s: String  => JString(s)
     case null       => JNull
     case other => throw new IllegalArgumentException(
@@ -238,6 +243,7 @@ object LakeLog {
     case JLong(l)    => l
     case JInt(i)     => i.toLong
     case JDouble(d)  => d
+    case JObject(List(("double", JString(d)))) => d.toDouble
     case JDecimal(d) => d.toDouble
     case JString(s)  => s
     case JNull       => null

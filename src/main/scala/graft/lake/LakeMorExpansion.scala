@@ -13,15 +13,16 @@ import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 
 /** Analyzer (post-hoc resolution) rule that rewrites a format read of
-  * a deletion-vector'd snapshot — `LogicalRelation(LakeMorRelation)` —
-  * into [[LakeTable.morScanIndexed]]'s native plan: vectorized
-  * `FileScan parquet` over a [[LakeFileIndex]] for the clean AND the
-  * DV'd files, the latter anti-joined against the KB-sized sidecar on
-  * `_metadata.row_index`. Without this rule (no
-  * `spark.sql.extensions=graft.GraftSparkExtensions`) the read still
-  * works through [[LakeMorRelation]]'s `PrunedFilteredScan` fallback,
-  * just without whole-stage codegen — the rule is a pure plan upgrade,
-  * never a semantics change.
+  * a snapshot the bare file relation cannot serve (deletion vectors,
+  * column mapping — `LogicalRelation(LakeMorRelation)`) and every
+  * catalog read of a lake table into [[LakeTable.readAdds]]'s native
+  * plan: vectorized `FileScan parquet` over a [[LakeFileIndex]], the
+  * logical projection above it, and for DV'd files the anti-join
+  * against the KB-sized sidecar on `_metadata.row_index`. Without this
+  * rule (no `spark.sql.extensions=graft.GraftSparkExtensions`) the
+  * read still works through [[LakeMorRelation]]'s `PrunedFilteredScan`
+  * fallback, just without whole-stage codegen — the rule is a pure
+  * plan upgrade, never a semantics change.
   *
   * Batch change-feed reads (`LakeCdfRelation`) get the same upgrade
   * via [[LakeTable.cdfFrame]].
@@ -75,16 +76,17 @@ final class LakeMorExpansion(spark: SparkSession) extends Rule[LogicalPlan] {
     plan.transformUpWithSubqueries {
       case l: LogicalRelation if l.relation.isInstanceOf[LakeMorRelation] =>
         val rel = l.relation.asInstanceOf[LakeMorRelation]
-        splice(l.output, LakeTable.morScanIndexed(spark, rel.root, rel.snap))
+        splice(l.output,
+          LakeTable.readAdds(spark, rel.root, rel.snap, rel.snap.files))
       case l: LogicalRelation if l.relation.isInstanceOf[LakeCdfRelation] =>
         val rel = l.relation.asInstanceOf[LakeCdfRelation]
         splice(l.output,
-          LakeTable.cdfFrame(spark, rel.root, rel.dataDdl, rel.from, rel.to,
-            rel.colMap, rel.partitionBy, rel.colSpecs))
+          LakeTable.cdfFrame(spark, rel.root, rel.view, rel.from, rel.to))
       case r: DataSourceV2Relation
           if r.table.isInstanceOf[LakeTableV2] && !writeTargets.contains(r) =>
         val t = r.table.asInstanceOf[LakeTableV2]
-        splice(r.output, LakeTable.morScanIndexed(spark, t.root, t.snap))
+        splice(r.output,
+          LakeTable.readAdds(spark, t.root, t.snap, t.snap.files))
       // SQL row-level DML: the stock planner needs
       // SupportsRowLevelOperations; these convert to the lake's own
       // rewrite commands instead (candidates pruned, commit guarded)

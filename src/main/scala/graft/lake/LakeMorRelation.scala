@@ -7,39 +7,27 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types.StructType
 
-/** Batch-read relation for a snapshot that carries deletion vectors.
+/** Batch-read relation for a snapshot whose rows are NOT just its
+  * files' rows under their own names: it carries deletion vectors (a
+  * DV'd file's live rows are the file minus its recorded positions),
+  * or column mapping (files hold physical names a rename or drop
+  * re-labels), or its partition columns sit before data columns. The
+  * format provider returns it for exactly those snapshots; every other
+  * snapshot gets the bare [[LakeTable.fileRelation]].
   *
-  * A DV'd file's live rows are no longer "the parquet file" — they
-  * are the file minus its recorded positions — so the stock
-  * `HadoopFsRelation` fast path (which hands Spark raw file splits)
-  * can't serve it. This `PrunedFilteredScan` keeps the format surface
-  * working instead: `buildScan` stats-prunes the snapshot's file list
-  * against the pushed filters (same [[LakeTable.mayMatch]] index as
-  * the fast path), reads the survivors DV-aware via
-  * [[LakeTable.readAdds]] (clean files on a plain parquet scan, DV'd
-  * files through the row-index anti-join), and re-applies the
-  * translatable filters INSIDE the inner plan so parquet row-group
-  * pushdown still bites. Spark re-applies every filter above the
-  * scan (`unhandledFilters` default), so pruning here is only ever an
-  * optimization.
-  *
-  * Tables without DVs never see this class — the provider only
-  * falls back here when the snapshot actually has one, so the
-  * clean-table read keeps the native vectorized `FileScan parquet`
-  * with whole-stage codegen.
-  *
-  * CLOSED POSTURE (adjudicated round 17): the inner plan this scan
-  * executes is ALREADY fully vectorized — [[LakeTable.readAdds]] plans
-  * stock `FileScan parquet` nodes and filters dead positions through
-  * the `_metadata.row_index` anti-join, the same machinery the
-  * extensions path splices. The only row-based piece left is the
-  * `PrunedFilteredScan` API boundary itself (`buildScan` must return
-  * `RDD[Row]`, one InternalRow→Row→InternalRow conversion above an
-  * otherwise-codegen'd subtree) — inherent to every V1 fallback, not
-  * removable by a different reader. Removing the boundary means
-  * replacing the relation node with the inner plan during analysis,
-  * which is exactly what [[LakeMorExpansion]] does; run with
-  * `spark.sql.extensions=graft.GraftSparkExtensions` for that.
+  * With `spark.sql.extensions=graft.GraftSparkExtensions`,
+  * [[LakeMorExpansion]] splices this relation out during analysis for
+  * [[LakeTable.readAdds]] over the snapshot — the lake's one reader,
+  * native vectorized scans with whole-stage codegen. Without the
+  * extensions this `PrunedFilteredScan` serves the same rows:
+  * `buildScan` stats-prunes the file list against the pushed filters
+  * (the same [[LakeTable.mayMatch]] index), reads the survivors
+  * through [[LakeTable.readAdds]], and re-applies the translatable
+  * filters INSIDE that plan so parquet row-group pushdown still bites.
+  * Spark re-applies every filter above the scan (`unhandledFilters`
+  * default), so pruning here is only ever an optimization. The only
+  * row-based piece is the API boundary itself (`buildScan` returns
+  * `RDD[Row]`), inherent to every V1 fallback.
   */
 private[lake] final class LakeMorRelation(spark: SparkSession,
                                           private[lake] val root: Path,
@@ -61,20 +49,19 @@ private[lake] final class LakeMorRelation(spark: SparkSession,
     // loudly ONCE per table instead of silently degrading.
     if (LakeMorRelation.warnedRoots.add(root.toString))
       logWarning(
-        s"reading deletion-vector'd lake table $root through the V1 " +
+        s"reading lake table $root through the V1 " +
           "PrunedFilteredScan fallback: the inner parquet scan is " +
           "still vectorized, but rows cross the relation boundary " +
           "one at a time (no whole-stage codegen across it). Set " +
           "spark.sql.extensions=graft.GraftSparkExtensions to splice " +
-          "the native DV scan (and enable MOR DML, table_changes, " +
+          "the native scan (and enable MOR DML, table_changes, " +
           "lake SQL statements).")
     val ranges = filters.flatMap(LakeMorRelation.toRanges)
       .filter(r => snap.statsCols.contains(r.column))
     val pr = LakeTable.physRanges(ranges.toSeq, snap.colMap)
     val kept = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
-    val df = LakeTable.readAdds(spark, root, snap.schemaDdl, kept,
-        snap.colMap, snap.partitionBy, snap.colSpecs)
+    val df = LakeTable.readAdds(spark, root, snap, kept)
       .where(LakeTable.rangeFilter(ranges.toSeq))
     df.select(requiredColumns.toSeq.map(col): _*).rdd
   }
@@ -84,37 +71,25 @@ private[lake] final class LakeMorRelation(spark: SparkSession,
   * `spark.read.format("graft-lake").option("readChangeFeed", true)
   * .option("startingVersion", v) [.option("endingVersion", w)]` —
   * the row-level changes of commits `[startingVersion, ending]`
-  * (inclusive, Delta's batch-CDF convention), reconstructed by the
-  * same per-commit frames as [[LakeTable.scanChanges]] and tagged
-  * with `_change_type`/`_commit_version`.
+  * (inclusive, Delta's batch-CDF convention), reconstructed by
+  * [[LakeTable.cdfFrame]] under the ending version's snapshot `view`
+  * and tagged with `_change_type`/`_commit_version`.
   */
 private[lake] final class LakeCdfRelation(spark: SparkSession,
                                           private[lake] val root: Path,
                                           private[lake] val from: Long,
                                           private[lake] val to: Long,
-                                          private[lake] val dataDdl: String,
-                                          private[lake] val colMap:
-                                            Map[String, String] = Map.empty,
-                                          private[lake] val partitionBy:
-                                            Seq[String] = Nil,
-                                          private[lake] val colSpecs:
-                                            Map[String, LakeLog.ColSpec] =
-                                              Map.empty)
+                                          private[lake] val view:
+                                            LakeLog.Snapshot)
     extends BaseRelation with TableScan {
 
   override def sqlContext: SQLContext = spark.sqlContext
 
   override val schema: StructType =
-    LakeStreamSource.withCdfColumns(StructType.fromDDL(dataDdl))
+    LakeStreamSource.withCdfColumns(StructType.fromDDL(view.schemaDdl))
 
-  override def buildScan(): RDD[Row] = {
-    val frames = LakeTable.changeFrames(spark, root, dataDdl, from, to,
-      colMap, partitionBy, colSpecs)
-    val df =
-      if (frames.isEmpty) LakeTable.emptyChanges(spark, root, dataDdl)
-      else frames.reduce(_.unionByName(_))
-    df.rdd
-  }
+  override def buildScan(): RDD[Row] =
+    LakeTable.cdfFrame(spark, root, view, from, to).rdd
 }
 
 private[lake] object LakeMorRelation {

@@ -2,8 +2,6 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SQLContext}
-import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{BaseRelation, DataSourceRegister,
@@ -61,13 +59,18 @@ class LakeStreamSourceProvider extends StreamSourceProvider
   override def shortName(): String = "graft-lake"
 
   /** BATCH read — `spark.read.format("graft-lake").load(root)`, with
-    * `option("versionAsOf", v)` time travel. Returns a stock
-    * [[HadoopFsRelation]] whose file list is a [[LakeFileIndex]] over
-    * the pinned snapshot: the plan is a native vectorized
-    * `FileScan parquet` (whole-stage codegen, row-group pushdown)
-    * whose candidate files were stats-pruned by the commit log's
-    * min/max index — SQL-surface reads get snapshot isolation AND
-    * file skipping without any custom scan node.
+    * `option("versionAsOf", v)` time travel. When the pinned
+    * snapshot's rows are exactly its files' rows in table order (no
+    * deletion vectors, no column mapping, partition columns last),
+    * returns the lake's stock file relation ([[LakeTable.fileRelation]]):
+    * a native vectorized `FileScan parquet` (whole-stage codegen,
+    * row-group pushdown) over a [[LakeFileIndex]] whose candidate files
+    * are stats-pruned by the commit log's min/max index, with
+    * exists-defaults applied per file. Every other snapshot gets a
+    * [[LakeMorRelation]], which [[LakeMorExpansion]] splices into the
+    * shared reader ([[LakeTable.readAdds]]) — so renamed, dropped and
+    * re-added, defaulted and MOR-deleted columns read the same rows
+    * through the format as through the catalog and `LakeTable.scan`.
     */
   override def createRelation(sqlContext: SQLContext,
                               parameters: Map[String, String]):
@@ -96,8 +99,7 @@ class LakeStreamSourceProvider extends StreamSourceProvider
                 .ofEpochMilli(horizonTs)}) — start at $keepFrom or later")
       }
       val toSnap = LakeLog.snapshot(fs, root, Some(to))
-      return new LakeCdfRelation(session, root, from, to, toSnap.schemaDdl,
-        toSnap.colMap, toSnap.partitionBy, toSnap.colSpecs)
+      return new LakeCdfRelation(session, root, from, to, toSnap)
     }
     val byVersion = parameters.get("versionAsOf").map(_.toLong)
     // epoch millis, or a UTC timestamp string ('yyyy-MM-dd[ HH:mm:ss]')
@@ -117,23 +119,10 @@ class LakeStreamSourceProvider extends StreamSourceProvider
     require(byVersion.isEmpty || byTs.isEmpty,
       "set either versionAsOf or timestampAsOf, not both")
     val snap = LakeLog.snapshot(fs, root, byVersion.orElse(byTs))
-    if (snap.files.exists(_.dv.nonEmpty))
-      // deletion vectors pending: serve through the DV-applying
-      // relation (stats pruning + inner pushdown preserved); clean
-      // snapshots keep the native FileScan fast path below
-      new LakeMorRelation(session, root, snap)
-    else {
-      val schema = StructType.fromDDL(snap.schemaDdl)
-      HadoopFsRelation(
-        location = new LakeFileIndex(session, root, snap),
-        partitionSchema =
-          StructType(snap.partitionBy.map(c => schema(c))),
-        dataSchema = StructType(
-          schema.filterNot(f => snap.partitionBy.contains(f.name))),
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map.empty)(session)
-    }
+    val bare = LakeTable.fileRelation(session, root, snap, snap.files)
+    if (snap.files.forall(_.dv.isEmpty) && bare.schema.fieldNames
+        .sameElements(StructType.fromDDL(snap.schemaDdl).fieldNames)) bare
+    else new LakeMorRelation(session, root, snap)
   }
 
   private def rootOf(parameters: Map[String, String]): String =
@@ -215,17 +204,14 @@ class LakeStreamSource(sqlContext: SQLContext, root: String,
   private val fs = LakeLog.fileSystem(rootP,
     sqlContext.sparkContext.hadoopConfiguration)
 
-  /** Data schema (and column mapping) pinned at query start; CDF
-    * batches tag it per row.
+  /** Snapshot pinned at query start: its schema, column mapping,
+    * partitioning and column semantics are the view every batch reads
+    * under; CDF batches tag it per row.
     */
-  private val startSnap = LakeLog.snapshot(fs, rootP, None)
-  private val schemaDdl: String = startSnap.schemaDdl
-  private val colMap: Map[String, String] = startSnap.colMap
-  private val partitionBy: Seq[String] = startSnap.partitionBy
-  private val colSpecs: Map[String, LakeLog.ColSpec] = startSnap.colSpecs
+  private val view = LakeLog.snapshot(fs, rootP, None)
 
   override val schema: StructType = {
-    val base = StructType.fromDDL(schemaDdl)
+    val base = StructType.fromDDL(view.schemaDdl)
     if (readChangeFeed) LakeStreamSource.withCdfColumns(base) else base
   }
 
@@ -275,14 +261,9 @@ class LakeStreamSource(sqlContext: SQLContext, root: String,
     // restart path: the checkpointed end offset seeds the cap floor
     plannedThrough = math.max(plannedThrough, to)
     val session = sqlContext.sparkSession
-    if (readChangeFeed) {
-      val frames = LakeTable.changeFrames(session, rootP, schemaDdl, from,
-        to, colMap, partitionBy, colSpecs)
-      val batch =
-        if (frames.isEmpty) LakeTable.emptyChanges(session, rootP, schemaDdl)
-        else frames.reduce(_.unionByName(_))
-      return org.apache.spark.sql.graft.StreamingFrames.asStreaming(batch)
-    }
+    if (readChangeFeed)
+      return org.apache.spark.sql.graft.StreamingFrames.asStreaming(
+        LakeTable.cdfFrame(session, rootP, view, from, to))
     val adds = (from to to).flatMap { v =>
       val actions = LakeLog.readCommit(fs, rootP, v)
       val op = actions.collectFirst { case m: LakeLog.Meta => m.op }
@@ -298,10 +279,9 @@ class LakeStreamSource(sqlContext: SQLContext, root: String,
       actions.collect { case a: LakeLog.Add => a }
     }
     // DV-aware: a re-emitted MOR-deleted file contributes its LIVE
-    // rows (pure appends carry no DV, so the common path is the same
-    // single multi-path parquet scan as before)
-    val batch = LakeTable.readAdds(session, rootP, schemaDdl, adds, colMap,
-      partitionBy, colSpecs)
+    // rows (pure appends carry no DV, so the common path is one plain
+    // scan of the added files)
+    val batch = LakeTable.readAdds(session, rootP, view, adds)
     // v1 source contract: the returned frame must be tagged streaming
     org.apache.spark.sql.graft.StreamingFrames.asStreaming(batch)
   }

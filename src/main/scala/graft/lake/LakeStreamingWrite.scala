@@ -263,6 +263,15 @@ private[lake] final class LakeStreamingWrite(
       if (partitioned) planSnap.partitionBy else Nil, effMap, genBound,
       idParams)
 
+  /** The view staged epoch files read under: rows of `schema` stored
+    * under this epoch's physical names, partition values from the
+    * files' stats — the lake's one reader serves them like table files.
+    */
+  private def stagedView(schema: StructType,
+                         partitionBy: Seq[String]): LakeLog.Snapshot =
+    LakeLog.Snapshot(planSnap.version, schema.toDDL, Nil, Nil, Map.empty,
+      None, colMap = effMap, partitionBy = partitionBy)
+
   /** Keyed-upsert epoch (`.option("mergeKey", k)`): the staged files
     * are a CHANGELOG, never table data — read them back, upsert by
     * key through [[LakeTable.merge]] (latest-wins per key within the
@@ -276,7 +285,7 @@ private[lake] final class LakeStreamingWrite(
     */
   private def commitMerge(key: String, epochId: Long,
                           messages: Array[WriterCommitMessage]): Unit = {
-    val files = LakeStreamingWrite.filesOf(messages)
+    val adds = LakeStreamingWrite.addsOf(messages)
     try {
       val snap = LakeLog.snapshot(hfs, rootP, None)
       if (snap.committedBatches.getOrElse(appId, Long.MinValue) >= epochId)
@@ -284,7 +293,7 @@ private[lake] final class LakeStreamingWrite(
       require(snap.schemaDdl == baseDdl,
         s"table schema changed while epoch $epochId was in flight — " +
           "restart the query to re-plan")
-      if (files.isEmpty) {
+      if (adds.isEmpty) {
         // still mark the epoch committed (empty epochs must not
         // re-apply after recovery as a hole in the token sequence)
         LakeLog.commit(hfs, rootP, Seq(Meta("merge", snap.schemaDdl,
@@ -293,10 +302,8 @@ private[lake] final class LakeStreamingWrite(
           baseVersion = snap.version, dedupBatch = Some((appId, epochId)))
         return
       }
-      val staged = spark.read
-        .schema(LakeTable.physicalSchema(writeSchema, effMap))
-        .parquet(files.map(m => new Path(rootP, m.path).toString): _*)
-      val changes = LakeTable.toLogical(staged, writeSchema, effMap)
+      val changes = LakeTable.readAdds(spark, rootP,
+          stagedView(writeSchema, Nil), adds)
         .withColumn("__v", org.apache.spark.sql.functions.lit(epochId))
         .withColumn("__op", org.apache.spark.sql.functions.lit("U"))
       LakeTable.merge(spark, root, changes, key,
@@ -336,22 +343,11 @@ private[lake] final class LakeStreamingWrite(
     // files, never the table). Read with the CURRENT constraints — a
     // mid-epoch ADD CONSTRAINT gates this commit already.
     if (snap.constraints.nonEmpty && adds.nonEmpty) {
-      // partitioned epochs: the staged files live under one staging
-      // dir's value directories — a single-base basePath read gives
-      // the partition columns back for the CHECK pass
-      val staged =
-        if (!partitioned) spark.read
-          .schema(LakeTable.physicalSchema(extSchema, effMap))
-          .parquet(adds.map(a => new Path(rootP, a.path).toString): _*)
-        else spark.read
-          .option("basePath", new Path(rootP, stagingSub).toString)
-          .schema(extSchema)
-          .parquet(adds.map(a => new Path(rootP, a.path).toString): _*)
-          .select(extSchema.fieldNames.toSeq.map(
-            org.apache.spark.sql.functions.col): _*)
-      val logical = LakeTable.toLogical(staged, extSchema, effMap)
+      val staged = LakeTable.readAdds(spark, rootP,
+        stagedView(extSchema, if (partitioned) planSnap.partitionBy else Nil),
+        adds)
       try LakeTable.enforceConstraints(
-        LakeTable.padToSchema(logical, evolvedDdl), snap.constraints,
+        LakeTable.padToSchema(staged, evolvedDdl), snap.constraints,
         "streaming append")
       catch { case e: Throwable => abort(epochId, messages); throw e }
     }

@@ -2,6 +2,8 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -119,8 +121,9 @@ object LakeTable {
     * CONTENT excludes the partition columns (pure hive layout — what
     * CONVERT TO LAKE adopts in place); their per-file value is
     * recorded as min==max stats, which is where reads and pruning get
-    * them back. Without an order key rows spread over `nFiles` tasks
-    * (one task needs no shuffle at all).
+    * them back. Without an order key rows spread over `nFiles` tasks.
+    * One file needs no shuffle at all, ordered or not: one task sorts
+    * and writes it.
     */
   private def writeDataFiles(spark: SparkSession, root: Path, df: DataFrame,
                              statsCols: Seq[String], nFiles: Int,
@@ -165,7 +168,8 @@ object LakeTable {
     }
     val arranged =
       if (orderCols.nonEmpty)
-        keyed.repartitionByRange(nFiles, orderCols.map(col): _*)
+        (if (nFiles == 1) keyed.coalesce(1)
+         else keyed.repartitionByRange(nFiles, orderCols.map(col): _*))
           .sortWithinPartitions(orderCols.map(col): _*)
           .drop("__curve") // projection preserves the per-task order
       else if (nFiles == 1) df.coalesce(1)
@@ -1067,79 +1071,36 @@ object LakeTable {
 
   // ---- reads --------------------------------------------------------
 
-  /** Physical StructType for reading files of a column-mapped table:
-    * same fields/types, names swapped logical -> physical.
+  /** The lake's one file relation: a stock `HadoopFsRelation` whose
+    * file list is a [[LakeFileIndex]] over `files` of `view` (stats
+    * skipping from the commit log, zero planning FS calls, vectorized
+    * parquet with whole-stage codegen). Its data schema carries the
+    * PHYSICAL column names the files hold, decorated with EXISTS_DEFAULT
+    * so files written before an `ADD COLUMN ... DEFAULT` read the
+    * declared default (the parquet reader's own existence-default
+    * machinery, applied per file), and nullable as every file-source
+    * read is (a file may lack a column). Partitioned tables: the index
+    * carries the partition schema and the scan injects each file's
+    * values from its min==max stats; the output is (data cols ++
+    * partition cols). The format provider serves this relation bare
+    * when its output already IS the snapshot's rows; [[readAdds]]
+    * builds every other read on it.
     */
-  private[lake] def physicalSchema(schema: StructType,
-                             colMap: Map[String, String]): StructType =
-    StructType(schema.fields.map(f =>
-      f.copy(name = colMap.getOrElse(f.name, f.name))))
-
-  /** logical-name projection of a physical-name frame. */
-  private[lake] def toLogical(df: DataFrame, schema: StructType,
-                        colMap: Map[String, String],
-                        extra: Seq[String] = Nil): DataFrame =
-    df.select(schema.fields.map(f =>
-      col(colMap.getOrElse(f.name, f.name)).as(f.name)).toSeq ++
-      extra.map(col): _*)
-
-  /** Native indexed scan over `adds` of a PARTITIONED table: a stock
-    * `HadoopFsRelation` whose [[LakeFileIndex]] carries the partition
-    * schema and injects each file's partition values from its
-    * min==max stats — the columns are NOT in the files. Output order
-    * is (data cols ++ partition cols); callers re-project. This is
-    * the ONLY read shape for partitioned files (a plain multi-path
-    * `spark.read.parquet` cannot inject per-file values, and
-    * `basePath` discovery refuses file sets spanning several staging
-    * dirs — no common base).
-    */
-  private def partitionedFrame(spark: SparkSession, root: Path,
-                               schemaDdl: String, adds: Seq[Add],
-                               partitionBy: Seq[String],
-                               colSpecs: Map[String, LakeLog.ColSpec] =
-                                 Map.empty): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val schema = LakeColumns.decorateExists(
-      StructType.fromDDL(schemaDdl), colSpecs)
-    val snap = LakeLog.Snapshot(0L, schemaDdl, Nil, adds, Map.empty, None,
-      partitionBy = partitionBy)
-    spark.baseRelationToDataFrame(HadoopFsRelation(
-      location = new LakeFileIndex(spark, root, snap, None),
-      partitionSchema = StructType(partitionBy.map(schema(_))),
-      dataSchema =
-        StructType(schema.filterNot(f => partitionBy.contains(f.name))),
+  private[lake] def fileRelation(spark: SparkSession, root: Path,
+                                 view: LakeLog.Snapshot, files: Seq[Add])
+      : HadoopFsRelation = {
+    val schema = org.apache.spark.sql.graft.PlanBridge.asNullable(
+      LakeColumns.decorateExists(StructType.fromDDL(view.schemaDdl),
+        view.colSpecs))
+    HadoopFsRelation(
+      location = new LakeFileIndex(spark, root, view, files),
+      partitionSchema = StructType(view.partitionBy.map(c => schema(c))),
+      dataSchema = StructType(schema.fields
+        .filterNot(f => view.partitionBy.contains(f.name))
+        .map(f => f.copy(name = view.colMap.getOrElse(f.name, f.name)))),
       bucketSpec = None,
       fileFormat = new ParquetFileFormat,
-      options = Map.empty)(spark))
-  }
-
-  private def readFiles(spark: SparkSession, root: Path, schemaDdl: String,
-                        adds: Seq[Add],
-                        colMap: Map[String, String] = Map.empty,
-                        partitionBy: Seq[String] = Nil,
-                        colSpecs: Map[String, LakeLog.ColSpec] = Map.empty)
-      : DataFrame = {
-    // EXISTS_DEFAULT decoration: files written before an ADD COLUMN
-    // ... DEFAULT read the declared default (not null) — the parquet
-    // reader's own existence-default machinery, applied per file
-    val schema = LakeColumns.decorateExists(
-      StructType.fromDDL(schemaDdl), colSpecs)
-    if (adds.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](), schema)
-    else if (partitionBy.nonEmpty)
-      // partition columns injected from the log; column mapping is
-      // refused on partitioned tables (rename/drop refuse there)
-      partitionedFrame(spark, root, schemaDdl, adds, partitionBy, colSpecs)
-        .select(schema.fieldNames.toSeq.map(col): _*)
-    else {
-      val raw = spark.read.schema(physicalSchema(schema, colMap))
-        .parquet(adds.map(a => new Path(root, a.path).toString): _*)
-      // column mapping: files carry PHYSICAL names (stable across
-      // renames/drops); project back to the logical view. Inactive
-      // mapping keeps the exact unprojected plan.
-      if (colMap.isEmpty) raw else toLogical(raw, schema, colMap)
-    }
+      options = Map.empty)(spark)
   }
 
   // ---- deletion vectors (merge-on-read) -----------------------------
@@ -1194,154 +1155,64 @@ object LakeTable {
     else spark.read.schema(dvSchema)
       .parquet(dvPaths.distinct.map(p => new Path(root, p).toString): _*)
 
-  /** Plain multi-path parquet read PLUS the file identity and the
-    * parquet-native row index (`_metadata.row_index` — the physical
-    * position in the file, stable under any pushed filter) — the
-    * coordinates deletion vectors address rows by.
-    */
-  private def readFilesWithPos(spark: SparkSession, root: Path,
-                               schemaDdl: String,
-                               adds: Seq[Add],
-                               colMap: Map[String, String] = Map.empty,
-                               partitionBy: Seq[String] = Nil,
-                               colSpecs: Map[String, LakeLog.ColSpec] =
-                                 Map.empty)
-      : DataFrame = {
-    val schema = LakeColumns.decorateExists(
-      StructType.fromDDL(schemaDdl), colSpecs)
-    if (adds.isEmpty)
-      spark.createDataFrame(new java.util.ArrayList[Row](),
-        schema.add("__file", StringType).add("__pos", LongType))
-    else if (partitionBy.nonEmpty)
-      partitionedFrame(spark, root, schemaDdl, adds, partitionBy, colSpecs)
-        .withColumn("__file", fileRelPath(idDepth(partitionBy)))
-        .withColumn("__pos", col("_metadata.row_index"))
-        .select(schema.fieldNames.toSeq.map(col) ++
-          Seq(col("__file"), col("__pos")): _*)
-    else {
-      val raw = spark.read.schema(physicalSchema(schema, colMap))
-        .parquet(adds.map(a => new Path(root, a.path).toString): _*)
-        .withColumn("__file", fileRelPath(idDepth(Nil)))
-        .withColumn("__pos", col("_metadata.row_index"))
-      if (colMap.isEmpty) raw
-      else toLogical(raw, schema, colMap, extra = Seq("__file", "__pos"))
-    }
-  }
-
-  /** Snapshot read honoring deletion vectors. Files without a DV keep
-    * the plain multi-path parquet scan (zero overhead — the common
-    * case); DV'd files anti-join their recorded (file, pos) rows on
-    * the parquet row index. The DV side is a real file relation with
-    * known (KB-to-MB) size, so Spark broadcasts it when small — the
-    * 100 TB read cost of a merge-on-read delete is one broadcast
-    * anti-join over only the DV'd files, the untouched majority stays
-    * on the stock scan path.
+  /** The live rows of `files` under `view`'s logical schema: the one
+    * read every snapshot, change-feed, DML, stream-batch and staged
+    * epoch read plans through. Each scan is a [[fileRelation]] with
+    * the logical projection above it (physical -> logical names, data
+    * ++ partition order -> table order; none when the relation's
+    * output already is the logical row), so pushed filters rewrite
+    * through the aliases into the file index. Files without a DV stay
+    * on that plain scan (the common case); DV'd files add the file
+    * identity and the parquet-native row index (`_metadata.row_index`,
+    * the physical position, stable under any pushed filter) and
+    * anti-join their KB-sized sidecar on it (auto-broadcast), so file
+    * skipping and row-group pushdown survive DVs. `withPos` appends
+    * the `(__file, __pos)` coordinates to every row — the addressing
+    * surface of position-level deletes; clean files' coordinates never
+    * appear in a sidecar.
     */
   private[lake] def readAdds(spark: SparkSession, root: Path,
-                             schemaDdl: String, adds: Seq[Add],
-                             colMap: Map[String, String] = Map.empty,
-                             partitionBy: Seq[String] = Nil,
-                             colSpecs: Map[String, LakeLog.ColSpec] =
-                               Map.empty)
-      : DataFrame = {
-    val (dvd, clean) = adds.partition(_.dv.nonEmpty)
-    val base = readFiles(spark, root, schemaDdl, clean, colMap, partitionBy,
-      colSpecs)
-    if (dvd.isEmpty) base
-    else {
-      val cols = StructType.fromDDL(schemaDdl).fieldNames.toSeq.map(col)
-      val dels = readDvRows(spark, root, dvd.flatMap(_.dv).map(_.path))
-      val withPos = readFilesWithPos(spark, root, schemaDdl, dvd,
-        colMap, partitionBy, colSpecs)
-      val live = withPos
-        .join(dels,
-          withPos("__file") === dels("file") && withPos("__pos") === dels("pos"),
-          "left_anti")
-        .select(cols: _*)
-      base.unionByName(live)
+                             view: LakeLog.Snapshot, files: Seq[Add],
+                             withPos: Boolean = false): DataFrame = {
+    val names = StructType.fromDDL(view.schemaDdl).fieldNames.toSeq
+    def out(pos: Boolean): Seq[String] =
+      if (pos) names ++ Seq("__file", "__pos") else names
+    def scan(adds: Seq[Add], pos: Boolean): DataFrame = {
+      val rel = spark.baseRelationToDataFrame(
+        fileRelation(spark, root, view, adds))
+      val r =
+        if (!pos) rel
+        else rel.withColumn("__file", fileRelPath(idDepth(view.partitionBy)))
+          .withColumn("__pos", col("_metadata.row_index"))
+      if (r.columns.toSeq == out(pos)) r // keep the unprojected plan
+      else r.select(out(pos).map { n =>
+        val p = view.colMap.getOrElse(n, n)
+        if (p == n) col(n) else col(p).as(n)
+      }: _*)
     }
-  }
-
-  /** DV-honoring snapshot read on NATIVE scan nodes — the plan the
-    * [[LakeMorExpansion]] analyzer rule splices in for a format read
-    * of a deletion-vector'd snapshot. Same semantics as [[readAdds]],
-    * different physics: both branches scan through a [[LakeFileIndex]]
-    * `HadoopFsRelation` (stats skipping from the commit log, zero
-    * planning FS calls, vectorized parquet + whole-stage codegen),
-    * the DV'd branch adds `_metadata.row_index` and anti-joins the
-    * KB-sized sidecar (auto-broadcast). Pushed filters flow through
-    * the union and the anti-join's left side into BOTH file indexes,
-    * so file skipping and row-group pushdown survive DVs — the steady
-    * state of an in-place-deduped corpus table stays on the fast path.
-    */
-  private[lake] def morScanIndexed(spark: SparkSession, root: Path,
-                                   snap: LakeLog.Snapshot): DataFrame = {
-    import org.apache.spark.sql.execution.datasources.HadoopFsRelation
-    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val (dvd, clean) = snap.files.partition(_.dv.nonEmpty)
-    val schema = LakeColumns.decorateExists(
-      StructType.fromDDL(snap.schemaDdl), snap.colSpecs)
-    val cols = schema.fieldNames.toSeq.map(col)
-    // files carry PHYSICAL names; the logical projection sits above
-    // the native scan (identity when mapping is inactive), and pushed
-    // filters rewrite through the aliases into the file index.
-    // Partitioned tables: the index carries the partition schema and
-    // the scan injects the per-file values — the relation's output is
-    // (data cols ++ partition cols), re-projected to logical order
-    def raw(files: Seq[Add]): DataFrame =
-      spark.baseRelationToDataFrame(HadoopFsRelation(
-        location = new LakeFileIndex(spark, root, snap, Some(files)),
-        partitionSchema =
-          StructType(snap.partitionBy.map(c => schema(c))),
-        dataSchema = StructType(physicalSchema(schema, snap.colMap)
-          .filterNot(f => snap.partitionBy.contains(f.name))),
-        bucketSpec = None,
-        fileFormat = new ParquetFileFormat,
-        options = Map.empty)(spark))
-    def indexed(files: Seq[Add]): DataFrame = {
-      val r = raw(files)
-      if (snap.colMap.nonEmpty) toLogical(r, schema, snap.colMap)
-      else if (snap.partitionBy.isEmpty) r // keep the unprojected plan
-      else r.select(cols: _*) // (data ++ part) order -> logical order
-    }
-    def indexedWithPos(files: Seq[Add]): DataFrame = {
-      val r = raw(files)
-        .withColumn("__file", fileRelPath(idDepth(snap.partitionBy)))
-        .withColumn("__pos", col("_metadata.row_index"))
-      if (snap.colMap.nonEmpty)
-        toLogical(r, schema, snap.colMap, extra = Seq("__file", "__pos"))
-      else if (snap.partitionBy.isEmpty) r
-      else r.select(cols ++ Seq(col("__file"), col("__pos")): _*)
-    }
-    if (dvd.isEmpty) return indexed(clean)
+    val (dvd, clean) = files.partition(_.dv.nonEmpty)
+    if (dvd.isEmpty) return scan(clean, withPos)
     val dels = readDvRows(spark, root, dvd.flatMap(_.dv).map(_.path))
-    val withPos = indexedWithPos(dvd)
-    val live = withPos
+    val hits = scan(dvd, pos = true)
+    val live = hits
       .join(dels,
-        withPos("__file") === dels("file") && withPos("__pos") === dels("pos"),
+        hits("__file") === dels("file") && hits("__pos") === dels("pos"),
         "left_anti")
-      .select(cols: _*)
-    if (clean.isEmpty) live else indexed(clean).unionByName(live)
+      .select(out(withPos).map(col): _*)
+    if (clean.isEmpty) live else scan(clean, withPos).unionByName(live)
   }
 
-  /** Batch change feed `[from, to]` as one frame — the plan
-    * [[LakeMorExpansion]] splices in for `readChangeFeed` format
-    * reads (the [[LakeCdfRelation]] fallback reaches the same rows
-    * through `RDD[Row]`).
+  /** Batch change feed `[from, to]` as one frame, in `view`'s logical
+    * names (the mapping is stable across the range: physical names
+    * never move) — behind [[scanChanges]], the `readChangeFeed` format
+    * read and the change-tailing stream source.
     */
   private[lake] def cdfFrame(spark: SparkSession, root: Path,
-                             dataDdl: String, from: Long,
-                             to: Long,
-                             colMap: Map[String, String] = Map.empty,
-                             partitionBy: Seq[String] = Nil,
-                             colSpecs: Map[String, LakeLog.ColSpec] =
-                               Map.empty)
-      : DataFrame = {
-    val frames = changeFrames(spark, root, dataDdl, from, to, colMap,
-      partitionBy, colSpecs)
-    if (frames.isEmpty) emptyChanges(spark, root, dataDdl)
-    else frames.reduce(_.unionByName(_))
-  }
+                             view: LakeLog.Snapshot, from: Long,
+                             to: Long): DataFrame =
+    changeFrames(spark, root, view, from, to).reduceOption(_.unionByName(_))
+      .getOrElse(taggedChanges(readAdds(spark, root, view, Nil), "insert",
+        0L).limit(0))
 
   /** Merge-on-read DELETE: instead of rewriting candidate files,
     * record the matching rows' (file, position) coordinates in a
@@ -1375,12 +1246,7 @@ object LakeTable {
     val candIds = cands.map(a => fileId(rootP, a.path, depth))
     val oldDels = readDvRows(spark, rootP, cands.flatMap(_.dv).map(_.path))
       .where(col("file").isin(candIds: _*))
-    val withPos = readFilesWithPos(spark, rootP, snap.schemaDdl,
-      cands, snap.colMap, snap.partitionBy)
-    val newDel = withPos
-      .join(oldDels,
-        withPos("__file") === oldDels("file") && withPos("__pos") === oldDels("pos"),
-        "left_anti")
+    val newDel = readAdds(spark, rootP, snap, cands, withPos = true)
       .where(rangeFilter(ranges))
       .select(col("__file").as("file"), col("__pos").as("pos"))
     // one candidate scan total: write new + carried-forward positions
@@ -1416,32 +1282,7 @@ object LakeTable {
   def scanWithPos(spark: SparkSession, root: String): DataFrame = {
     val rootP = new Path(root)
     val snap = LakeLog.snapshot(fs(spark, rootP), rootP, None)
-    readAddsWithPos(spark, rootP, snap.schemaDdl, snap.files, snap.colMap,
-      snap.partitionBy, snap.colSpecs)
-  }
-
-  /** [[readAdds]] plus the `(__file, __pos)` coordinates — live rows
-    * of `adds` with their DV-surviving physical addresses (clean
-    * files' coordinates never appear in a sidecar, so one anti-join
-    * covers both kinds).
-    */
-  private[lake] def readAddsWithPos(spark: SparkSession, rootP: Path,
-                                    schemaDdl: String, adds: Seq[Add],
-                                    colMap: Map[String, String],
-                                    partitionBy: Seq[String] = Nil,
-                                    colSpecs: Map[String, LakeLog.ColSpec] =
-                                      Map.empty)
-      : DataFrame = {
-    val withPos = readFilesWithPos(spark, rootP, schemaDdl,
-      adds, colMap, partitionBy, colSpecs)
-    val dvd = adds.filter(_.dv.nonEmpty)
-    if (dvd.isEmpty) withPos
-    else {
-      val dels = readDvRows(spark, rootP, dvd.flatMap(_.dv).map(_.path))
-      withPos.join(dels,
-        withPos("__file") === dels("file") && withPos("__pos") === dels("pos"),
-        "left_anti")
-    }
+    readAdds(spark, rootP, snap, snap.files, withPos = true)
   }
 
   /** Transactional REPLACE WHERE (the DSv2 filtered overwrite /
@@ -1479,8 +1320,7 @@ object LakeTable {
       snap.files.partition(a => pr.forall(r => mayMatch(a.stats, r)))
     // null-keyed survivors are outside every range: keep them (same
     // coalesce rule as deleteWhere)
-    val survivors = readAdds(spark, rootP, snap.schemaDdl, cands,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val survivors = readAdds(spark, rootP, snap, cands)
       .where(!coalesce(rangeFilter(ranges), lit(false)))
     rewriteCommit(spark, root, snap, cands,
       survivors.unionByName(df), "replacewhere", alloc0 = Some(alloc))
@@ -1639,8 +1479,7 @@ object LakeTable {
                asOf: Option[Long]): DataFrame = {
     val rootP = new Path(root)
     val snap = LakeLog.snapshot(fs(spark, rootP), rootP, asOf)
-    readAdds(spark, rootP, snap.schemaDdl, snap.files, snap.colMap,
-      snap.partitionBy, snap.colSpecs)
+    readAdds(spark, rootP, snap, snap.files)
   }
 
   /** ZERO-COPY shallow clone: `dst`'s v0 commit REFERENCES `src`'s
@@ -1835,8 +1674,7 @@ object LakeTable {
     var attempt = 0
     while (attempt < 20) {
       val snap = LakeLog.snapshot(f, rootP, None)
-      val existing = readAdds(spark, rootP, snap.schemaDdl, snap.files,
-          snap.colMap, snap.partitionBy, snap.colSpecs)
+      val existing = readAdds(spark, rootP, snap, snap.files)
         .where(violates(checkExpr)).limit(1).count()
       require(existing == 0,
         s"cannot add CHECK constraint '$name' ($checkExpr): existing " +
@@ -1906,21 +1744,29 @@ object LakeTable {
     (a: String, b: String) => utf8Cmp(a, b)
 
   /** Engine-independent ordering for stats/bound comparisons: numbers
-    * by numeric value (exact — longs via BigDecimal, no 2^53 clip),
-    * strings in UTF-8 byte order (see [[utf8Cmp]]). Mixed
-    * number/string never compares (caller treats as unprunable).
+    * by numeric value (exact — longs via BigDecimal, no 2^53 clip)
+    * with doubles ordered as Spark orders them (-Infinity < finite <
+    * Infinity < NaN, -0.0 equal to 0.0), strings in UTF-8 byte order
+    * (see [[utf8Cmp]]). Mixed number/string never compares (caller
+    * treats as unprunable).
     */
   private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (x: String, y: String) => Some(utf8Cmp(x, y))
     case (x, y) =>
-      def dec(v: Any): Option[BigDecimal] = v match {
-        case l: Long   => Some(BigDecimal(l))
-        case i: Int    => Some(BigDecimal(i))
-        case d: Double => Some(BigDecimal(d))
-        case f: Float  => Some(BigDecimal(f.toDouble))
+      // (class, value): class -1 / 0 / 1 / 2 for -Infinity / finite /
+      // Infinity / NaN; the value only tells finite numbers apart
+      def key(v: Any): Option[(Int, BigDecimal)] = v match {
+        case l: Long   => Some((0, BigDecimal(l)))
+        case i: Int    => Some((0, BigDecimal(i)))
+        case f: Float  => key(f.toDouble)
+        case d: Double =>
+          if (d.isNaN) Some((2, BigDecimal(0)))
+          else if (d.isInfinite) Some((if (d > 0) 1 else -1, BigDecimal(0)))
+          else Some((0, BigDecimal(d)))
         case _         => None
       }
-      for (dx <- dec(x); dy <- dec(y)) yield dx.compare(dy)
+      for ((cx, dx) <- key(x); (cy, dy) <- key(y))
+        yield if (cx != cy) cx.compare(cy) else dx.compare(dy)
   }
 
   /** Could any row of a file with stats `st` satisfy `r`? Missing
@@ -2069,8 +1915,7 @@ object LakeTable {
     val snap = LakeLog.snapshot(fs(spark, rootP), rootP, asOf)
     val pr = physRanges(ranges, snap.colMap)
     val kept = snap.files.filter(a => pr.forall(r => mayMatch(a.stats, r)))
-    val df = readAdds(spark, rootP, snap.schemaDdl, kept, snap.colMap,
-        snap.partitionBy, snap.colSpecs)
+    val df = readAdds(spark, rootP, snap, kept)
       .where(rangeFilter(ranges))
     (df, PruneReport(snap.files.size, kept.size))
   }
@@ -2098,8 +1943,7 @@ object LakeTable {
     // silently DROP those rows from the rewritten survivors — coalesce
     // to false so null-keyed rows survive (the general rewrite path
     // in LakeDeleteCommand applies the same rule)
-    val survivors = readAdds(spark, rootP, snap.schemaDdl, cands,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val survivors = readAdds(spark, rootP, snap, cands)
       .where(!coalesce(rangeFilter(ranges), lit(false)))
     val nOut = math.max(1, cands.size / 2)
     val adds = writeDataFiles(spark, rootP, survivors, snap.statsCols, nOut,
@@ -2158,8 +2002,7 @@ object LakeTable {
     if (!hasKeys)
       return RewriteReport(snap.version, 0, 0, snap.files.size)
 
-    val base = readAdds(spark, rootP, snap.schemaDdl, cands, snap.colMap,
-      snap.partitionBy, snap.colSpecs)
+    val base = readAdds(spark, rootP, snap, cands)
     // broadcast the changed-key set: a daily changelog is dwarfed by
     // the base table, and the anti join then never shuffles the base
     val merged0 = base.join(broadcast(changedKeys), Seq(keyCol), "left_anti")
@@ -2263,8 +2106,7 @@ object LakeTable {
     // DV-aware read: compaction PURGES deletion vectors — the packed
     // outputs are the files' live rows, written clean (still
     // dataChange=false: the live-row multiset is unchanged)
-    val packed = readAdds(spark, rootP, snap.schemaDdl, smalls,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val packed = readAdds(spark, rootP, snap, smalls)
     // partitioned tables: the partitioned write re-splits packed rows
     // on value boundaries, so bin-packing never merges across
     // partition directories and every output stays single-valued
@@ -2290,8 +2132,7 @@ object LakeTable {
     val rootP = new Path(root)
     val f = fs(spark, rootP)
     val snap = LakeLog.snapshot(f, rootP, None)
-    val rows = readAdds(spark, rootP, snap.schemaDdl, snap.files,
-      snap.colMap, snap.partitionBy, snap.colSpecs)
+    val rows = readAdds(spark, rootP, snap, snap.files)
     val adds = writeDataFiles(spark, rootP, rows, snap.statsCols, nFiles,
       Some(clusterBy), snap.colMap, snap.partitionBy)
     val v = LakeLog.commit(f, rootP,
@@ -2541,14 +2382,9 @@ object LakeTable {
           s"versions were deleted; start the range at $keepFrom or " +
           "later")
     }
-    val toSnap = LakeLog.snapshot(f, rootP, Some(toVersion))
-    val schemaDdl = toSnap.schemaDdl
-    // the change view is expressed in toVersion's LOGICAL names; the
-    // mapping is stable across the range (physical names never move)
-    val perCommit = changeFrames(spark, rootP, schemaDdl,
-      fromVersion + 1, toVersion, toSnap.colMap, toSnap.partitionBy)
-    if (perCommit.isEmpty) emptyChanges(spark, rootP, schemaDdl)
-    else perCommit.reduce(_.unionByName(_))
+    // the change view is expressed in toVersion's LOGICAL names
+    cdfFrame(spark, rootP, LakeLog.snapshot(f, rootP, Some(toVersion)),
+      fromVersion + 1, toVersion)
   }
 
   private def taggedChanges(df: DataFrame, tpe: String, v: Long): DataFrame = {
@@ -2557,22 +2393,12 @@ object LakeTable {
       .withColumn("_commit_version", lit(v))
   }
 
-  private[lake] def emptyChanges(spark: SparkSession, rootP: Path,
-                                 schemaDdl: String): DataFrame =
-    taggedChanges(readFiles(spark, rootP, schemaDdl, Nil), "insert", 0L)
-      .limit(0)
-
   /** One tagged change frame per data-changing commit in
-    * `[from, to]` — the shared reconstruction behind [[scanChanges]]
-    * and the `readChangeFeed` streaming source.
+    * `[from, to]`, read under `view` — the reconstruction behind
+    * [[cdfFrame]].
     */
-  private[lake] def changeFrames(spark: SparkSession, rootP: Path,
-                                 schemaDdl: String, from: Long,
-                                 to: Long,
-                                 colMap: Map[String, String] = Map.empty,
-                                 partitionBy: Seq[String] = Nil,
-                                 colSpecs: Map[String, LakeLog.ColSpec] =
-                                   Map.empty)
+  private def changeFrames(spark: SparkSession, rootP: Path,
+                           view: LakeLog.Snapshot, from: Long, to: Long)
       : Seq[DataFrame] = {
     val f = fs(spark, rootP)
     (from to to).flatMap { v =>
@@ -2588,27 +2414,26 @@ object LakeTable {
         // read only the re-pointed files, at only those positions
         val prev = LakeLog.snapshot(f, rootP, Some(v - 1)).files
           .filter(a => adds.exists(_.path == a.path))
-        val ids = adds.map(a => fileId(rootP, a.path, idDepth(partitionBy)))
+        val ids = adds.map(a =>
+          fileId(rootP, a.path, idDepth(view.partitionBy)))
         val newDels = readDvRows(spark, rootP, adds.flatMap(_.dv).map(_.path))
           .where(col("file").isin(ids: _*))
         val oldDels = readDvRows(spark, rootP, prev.flatMap(_.dv).map(_.path))
           .where(col("file").isin(ids: _*))
         val delta = newDels.exceptAll(oldDels)
-        val withPos = readFilesWithPos(spark, rootP, schemaDdl,
-          adds, colMap, partitionBy, colSpecs)
-        val rows = withPos
+        // every physical row with its coordinates: the delta's rows
+        // are exactly the ones the new DV hides
+        val all = readAdds(spark, rootP, view, adds.map(_.copy(dv = None)),
+          withPos = true)
+        val rows = all
           .join(delta,
-            withPos("__file") === delta("file") &&
-              withPos("__pos") === delta("pos"),
+            all("__file") === delta("file") && all("__pos") === delta("pos"),
             "left_semi")
           .drop("__file", "__pos")
         Seq(taggedChanges(rows, "delete", v))
       }
       else if (rms.isEmpty)
-        Seq(taggedChanges(
-          readAdds(spark, rootP, schemaDdl, adds, colMap, partitionBy,
-            colSpecs),
-          "insert", v))
+        Seq(taggedChanges(readAdds(spark, rootP, view, adds), "insert", v))
       else {
         // the REMOVED side must be read through the previous
         // snapshot's Adds (their deletion vectors included) — raw
@@ -2616,10 +2441,8 @@ object LakeTable {
         // again by this rewrite
         val prev = LakeLog.snapshot(f, rootP, Some(v - 1)).files
           .filter(a => rms.contains(a.path))
-        val added = readAdds(spark, rootP, schemaDdl, adds, colMap,
-          partitionBy, colSpecs)
-        val removed = readAdds(spark, rootP, schemaDdl, prev, colMap,
-          partitionBy, colSpecs)
+        val added = readAdds(spark, rootP, view, adds)
+        val removed = readAdds(spark, rootP, view, prev)
         Seq(taggedChanges(added.exceptAll(removed), "insert", v),
           taggedChanges(removed.exceptAll(added), "delete", v))
       }

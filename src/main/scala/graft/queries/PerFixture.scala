@@ -24,7 +24,7 @@ import org.apache.hadoop.util.ShutdownHookManager
   * refused. [[scratch]] hands out unmemoized per-call dirs under the
   * same root.
   */
-private[queries] object PerFixture {
+private[graft] object PerFixture {
 
   private lazy val root = {
     val r = java.nio.file.Files.createTempDirectory("graft_fixture").toString
@@ -52,13 +52,17 @@ private[queries] object PerFixture {
 
   def path(kind: String, dir: String): String = s"$root/${kind}_${dirKey(dir)}"
 
-  /** A fresh, empty dir under the same exit-deleted root, for per-call
-    * work whose outputs a returned frame still reads lazily (nothing
-    * memoized: every call gets its own dir).
+  private val scratchSeq = new java.util.concurrent.atomic.AtomicLong()
+
+  /** A fresh, empty dir `<root>/<kind>_<n>` under the same exit-deleted
+    * root, for per-call work whose outputs a returned frame still reads
+    * lazily (nothing memoized: every call gets its own dir). The root
+    * is this JVM's own, so a per-JVM counter keeps names unique, and
+    * short: Spark abbreviates a scan's location past 100 characters.
     */
   def scratch(kind: String): String =
-    java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get(root), s"${kind}_").toString
+    java.nio.file.Files.createDirectory(java.nio.file.Paths.get(root,
+      s"${kind}_${scratchSeq.incrementAndGet()}")).toString
 
   /** Deletes `path` and everything under it, if present. */
   def remove(path: String): Unit = {

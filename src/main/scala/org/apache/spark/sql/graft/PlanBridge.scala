@@ -22,6 +22,12 @@ object PlanBridge {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** `schema` with every field, nested ones included, nullable — what
+    * Spark's own file-source resolution applies to a data schema.
+    */
+  def asNullable(schema: org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType = schema.asNullable
+
   /** Registered DSv2 catalog plugin by name (CatalogManager is
     * `private[sql]`).
     */

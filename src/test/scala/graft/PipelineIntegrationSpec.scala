@@ -112,7 +112,7 @@ class PipelineIntegrationSpec extends SparkSuite {
   }
 
   test("shard-partitioned write produces one directory per shard, reread intact") {
-    val out = java.nio.file.Files.createTempDirectory("graft_corpus").toString
+    val out = tempDir("graft_corpus").toString
     val packed = buildCorpus(docs)
       .select("shard", "bin", "bin_offset", "doc_id", "chunk_idx",
         "chunk_tokens", "chunk_text")
@@ -139,7 +139,7 @@ class PipelineIntegrationSpec extends SparkSuite {
         day1.where(size(split(col("text"), " ")).between(5, 1000)),
         "doc_id", "text"),
       "doc_id", "text", threshold = 0.5)
-    val idxPath = java.nio.file.Files.createTempDirectory("graft_day1idx").toString
+    val idxPath = tempDir("graft_day1idx").toString
     IncrementalDedup.save(
       IncrementalDedup.fitIndex(day1Corpus, "doc_id", "text"), idxPath)
 

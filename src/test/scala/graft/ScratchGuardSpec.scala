@@ -9,7 +9,7 @@ class ScratchGuardSpec extends AnyFunSuite {
 
   test("first run after boot: an absent dir is created and its live " +
       "lock held, so a sibling's exclusive sweep is refused") {
-    val dir = Files.createTempDirectory("graft_guard").resolve("scratch")
+    val dir = SparkSuite.tempDir("graft_guard").resolve("scratch")
     assert(!Files.exists(dir))
     ScratchGuard.sweepAndHold(dir.toString, sweep = false)
     assert(Files.isDirectory(dir))

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** Source/sink surface (SURVEY §2.2 "scans / sinks"): parquet, csv and
@@ -13,7 +12,7 @@ class SourcesSpec extends SparkSuite {
   private lazy val nation = Tables(spark, sf("sf0.001"), "nation")
 
   private def tmp(name: String): String =
-    Files.createTempDirectory(s"graft_$name").toString + "/out"
+    tempDir(s"graft_$name").toString + "/out"
 
   test("parquet roundtrip preserves rows and schema") {
     val path = tmp("parquet")
@@ -96,7 +95,7 @@ class SourcesSpec extends SparkSuite {
 
   test("schema evolution: mergeSchema unions columns across parquet file generations") {
     import spark.implicits._
-    val path = java.nio.file.Files.createTempDirectory("graft_evolve").toString
+    val path = tempDir("graft_evolve").toString
     // generation 1: (id, v); generation 2 adds a quality column
     Seq((1L, 10.0), (2L, 20.0)).toDF("id", "v")
       .write.mode("append").parquet(path)
@@ -150,7 +149,7 @@ class SourcesSpec extends SparkSuite {
     assert(roundtrip(asNtz) == expected, "TIMESTAMP_NTZ form drifted")
     // and a parquet-written NTZ copy (what the current fixture IS)
     // normalizes identically through the full Tables read path
-    val path = java.nio.file.Files.createTempDirectory("graft_evfix").toString
+    val path = tempDir("graft_evfix").toString
     asNtz.write.mode("overwrite").parquet(s"$path/events.parquet")
     val back = Tables(spark, path, "events")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet

@@ -10,9 +10,18 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String): String = s"/root/testdata/$dir"
+  def tempDir(kind: String): java.nio.file.Path = SparkSuite.tempDir(kind)
 }
 
 object SparkSuite {
+
+  /** A fresh, empty dir `<kind>_<n>` for one test's files, under
+    * the fixture-artifact root that is deleted at JVM exit — so a test
+    * run leaves no temp dir behind.
+    */
+  def tempDir(kind: String): java.nio.file.Path =
+    java.nio.file.Paths.get(graft.queries.PerFixture.scratch(kind))
+
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
       .master("local[4]")
@@ -21,7 +30,7 @@ object SparkSuite {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
+        tempDir("graft_wh").toString)
       .config("spark.sql.extensions", "graft.GraftSparkExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

@@ -3,7 +3,6 @@ package graft
 import java.nio.file.{Files, Path, StandardCopyOption}
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.commons.io.FileUtils
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
@@ -12,7 +11,6 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
-import org.scalatest.BeforeAndAfterAll
 
 /** `Tables` resolves each fixture's schema once per file version: a
   * repeated call on an unchanged file runs no Spark job, and a rewrite,
@@ -21,11 +19,7 @@ import org.scalatest.BeforeAndAfterAll
   * Suites run sequentially in the forked test JVM, so the listener
   * counts only this suite's jobs.
   */
-class TablesSchemaSpec extends SparkSuite with BeforeAndAfterAll {
-
-  private lazy val root = Files.createTempDirectory("graft_tables_schema")
-  override def afterAll(): Unit =
-    try FileUtils.deleteDirectory(root.toFile) finally super.afterAll()
+class TablesSchemaSpec extends SparkSuite {
 
   /** Spark jobs started while `body` runs (listener events are async:
     * settle-poll until the count is stable).
@@ -46,7 +40,7 @@ class TablesSchemaSpec extends SparkSuite with BeforeAndAfterAll {
     } finally spark.sparkContext.removeSparkListener(l)
   }
 
-  private def tmp(): Path = Files.createTempDirectory(root, "t")
+  private def tmp(): Path = tempDir("t")
 
   /** `df` as ONE parquet file at `target` (the fixtures' single-file
     * form), stamped `mtimeMs` so a rewrite always carries a new mtime.

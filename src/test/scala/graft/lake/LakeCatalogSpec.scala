@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.functions._
@@ -17,7 +15,7 @@ class LakeCatalogSpec extends SparkSuite {
 
   private val cat = "glake"
   private lazy val warehouse = {
-    val w = Files.createTempDirectory("graft_cat").toString
+    val w = tempDir("graft_cat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     w

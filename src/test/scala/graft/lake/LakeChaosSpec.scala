@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import scala.collection.mutable
 import scala.util.Random
 
@@ -35,7 +33,7 @@ class LakeChaosSpec extends SparkSuite {
 
   private def runChain(seed: Int, ops: Int): Unit = {
     val rnd = new Random(seed)
-    val root = Files.createTempDirectory(s"graft_chaos_$seed")
+    val root = tempDir(s"graft_chaos_$seed")
       .toString + "/t"
     val rootP = new org.apache.hadoop.fs.Path(root)
     val f = LakeLog.fileSystem(rootP,
@@ -196,7 +194,7 @@ class LakeChaosSpec extends SparkSuite {
   private def runSemChain(seed: Int, ops: Int): Unit = {
     import spark.implicits._
     val rnd = new Random(seed)
-    val root = Files.createTempDirectory(s"graft_chaos_sem_$seed")
+    val root = tempDir(s"graft_chaos_sem_$seed")
       .toString + "/t"
     val rootP = new org.apache.hadoop.fs.Path(root)
     val f = LakeLog.fileSystem(rootP,
@@ -390,7 +388,7 @@ class LakeChaosSpec extends SparkSuite {
   private def runPartChain(seed: Int, ops: Int): Unit = {
     import spark.implicits._
     val rnd = new Random(seed)
-    val root = Files.createTempDirectory(s"graft_chaos_part_$seed")
+    val root = tempDir(s"graft_chaos_part_$seed")
       .toString + "/t"
     val rootP = new org.apache.hadoop.fs.Path(root)
     val f = LakeLog.fileSystem(rootP,

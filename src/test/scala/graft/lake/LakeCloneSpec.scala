@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -12,7 +10,7 @@ import org.apache.spark.sql.functions._
 class LakeCloneSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakeclone").resolve("tbl").toString
+    tempDir("graft_lakeclone").resolve("tbl").toString
 
   private def seed(lo: Int, hi: Int): DataFrame = {
     import spark.implicits._

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,7 +14,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
 
   private val cat = "gsem"
   private lazy val warehouse = {
-    val w = Files.createTempDirectory("graft_sem").toString
+    val w = tempDir("graft_sem").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     w
@@ -43,7 +41,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
   }
 
   test("DEFAULT: library-API append may omit defaulted columns") {
-    val root = Files.createTempDirectory("graft_sem_api").toString + "/t"
+    val root = tempDir("graft_sem_api").toString + "/t"
     LakeTable.create(spark,
       root,
       spark.range(0).selectExpr("id", "CAST(7 AS INT) AS v"),
@@ -419,7 +417,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
     // zone, month 1 under UTC.
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.session.timeZone", "Australia/Sydney")
-    val w2 = Files.createTempDirectory("graft_sem_tz").toString
+    val w2 = tempDir("graft_sem_tz").toString
     s2.conf.set("spark.sql.catalog.gtz", "graft.lake.LakeCatalog")
     s2.conf.set("spark.sql.catalog.gtz.warehouse", w2)
     s2.sql("CREATE TABLE gtz.t (id BIGINT, ts TIMESTAMP, " +
@@ -450,8 +448,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
   }
 
   test("identity watermark guard: a commit from a stale base aborts") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sem_hwm").toString + "/t"
+    val root = tempDir("graft_sem_hwm").toString + "/t"
     LakeTable.create(spark, root,
       spark.range(0).selectExpr("id", "CAST(id AS LONG) AS k"),
       Seq("k"),
@@ -476,8 +473,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
 
   test("clone carries semantics + watermark; restore reverts specs " +
     "with the schema") {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_sem_cr").toString
+    val base = tempDir("graft_sem_cr").toString
     val src = s"$base/src"
     LakeTable.create(spark, src,
       spark.range(0).selectExpr("CAST(NULL AS LONG) AS id", "id AS k"),
@@ -518,8 +514,7 @@ class LakeColumnSemanticsSpec extends SparkSuite {
   test("keyed merge (library changelog path) allocates identity for " +
     "null-id inserts and keeps survivors' ids") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_sem_km").toString + "/t"
+    val root = tempDir("graft_sem_km").toString + "/t"
     LakeTable.create(spark, root,
       spark.range(0).selectExpr("CAST(NULL AS LONG) AS id", "id AS k",
         "CAST(id AS LONG) AS v"),

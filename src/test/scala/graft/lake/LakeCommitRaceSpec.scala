@@ -1,7 +1,6 @@
 package graft.lake
 
 import java.net.URI
-import java.nio.file.Files
 import java.util.concurrent.CyclicBarrier
 import java.util.concurrent.atomic.AtomicReference
 
@@ -24,7 +23,7 @@ class LakeCommitRaceSpec extends AnyFunSuite {
 
   test(s"two writers racing tryCommit: exactly one intact winner per " +
       s"version ($trials trials)") {
-    val base = Files.createTempDirectory("graft_commit_race")
+    val base = graft.SparkSuite.tempDir("graft_commit_race")
     val root = new Path(base.resolve("tbl").toString)
     val fs = LakeLog.fileSystem(root, new Configuration())
     val won = Array.ofDim[Boolean](trials, 2)
@@ -67,7 +66,7 @@ class LakeCommitRaceSpec extends AnyFunSuite {
       override def getUri: URI = URI.create("memory:///")
     }
     val root = new Path(
-      Files.createTempDirectory("graft_commit_race").resolve("tbl").toString)
+      graft.SparkSuite.tempDir("graft_commit_race").resolve("tbl").toString)
     val e = intercept[UnsupportedOperationException](
       LakeLog.tryCommit(fs, root, 0L, payload(0, 0)))
     assert(e.getMessage.contains("scheme 'memory'"))

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -16,7 +14,7 @@ import org.apache.spark.sql.functions._
 class LakeConvertSpec extends SparkSuite {
 
   private def freshDir(): String =
-    Files.createTempDirectory("graft_convert").resolve("t").toString
+    tempDir("graft_convert").resolve("t").toString
 
   private def seed(n: Int): DataFrame = {
     import spark.implicits._
@@ -134,7 +132,7 @@ class LakeConvertSpec extends SparkSuite {
   test("a directory converted INSIDE a catalog warehouse becomes " +
       "identifier-addressable (SQL reads + DML by name)") {
     val cat = "gconvcat"
-    val w = Files.createTempDirectory("graft_convcat").toString
+    val w = tempDir("graft_convcat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")

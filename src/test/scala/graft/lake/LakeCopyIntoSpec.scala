@@ -16,7 +16,7 @@ class LakeCopyIntoSpec extends SparkSuite {
 
   private val cat = "gcpy"
   private lazy val warehouse = {
-    val w = Files.createTempDirectory("graft_cpy").toString
+    val w = tempDir("graft_cpy").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     w
@@ -24,7 +24,7 @@ class LakeCopyIntoSpec extends SparkSuite {
   private def sql(q: String): DataFrame = { warehouse; spark.sql(q) }
 
   private def landing(): String =
-    Files.createTempDirectory("graft_cpy_land").toString
+    tempDir("graft_cpy_land").toString
 
   test("COPY INTO loads once, re-runs are no-ops, new files load " +
     "incrementally") {

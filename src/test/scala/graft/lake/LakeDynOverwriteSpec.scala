@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -25,7 +23,7 @@ object LakeDynOverwriteSpec {
 class LakeDynOverwriteSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_dynov").resolve("tbl").toString
+    tempDir("graft_dynov").resolve("tbl").toString
 
   private def rows(lo: Int, hi: Int, p: String): DataFrame = {
     import spark.implicits._
@@ -257,7 +255,7 @@ class LakeDynOverwriteSpec extends SparkSuite {
   test("SQL INSERT OVERWRITE under partitionOverwriteMode=dynamic; " +
       "writeTo.overwritePartitions; static mode still replaces all") {
     val cat = "gdyno"
-    val wh = Files.createTempDirectory("graft_dynsql").toString
+    val wh = tempDir("graft_dynsql").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE $cat.core")

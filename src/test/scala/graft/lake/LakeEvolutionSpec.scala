@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -16,7 +14,7 @@ class LakeEvolutionSpec extends SparkSuite {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakeevo").resolve("tbl").toString
+    tempDir("graft_lakeevo").resolve("tbl").toString
 
   private def ids(df: DataFrame): Seq[Long] =
     df.select("id").collect().map(_.getLong(0)).sorted.toSeq

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -14,7 +12,7 @@ import org.apache.spark.sql.functions._
 class LakeGuardSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakeguard").resolve("tbl").toString
+    tempDir("graft_lakeguard").resolve("tbl").toString
 
   private def seed(lo: Int, hi: Int): DataFrame = {
     import spark.implicits._

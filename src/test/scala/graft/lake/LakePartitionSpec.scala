@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
 class LakePartitionSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakepart").resolve("tbl").toString
+    tempDir("graft_lakepart").resolve("tbl").toString
 
   private def seed(n: Int): DataFrame = {
     import spark.implicits._
@@ -69,7 +69,7 @@ class LakePartitionSpec extends SparkSuite {
     // catalog read: partition filter lands in the scan's
     // PartitionFilters (true directory pruning, not a row filter)
     val cat = "gpart"
-    val w = Files.createTempDirectory("graft_partcat").toString
+    val w = tempDir("graft_partcat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -193,7 +193,7 @@ class LakePartitionSpec extends SparkSuite {
       col("day").isNull).count() == 0)
 
     // streaming tail sees partition columns too
-    val outDir = Files.createTempDirectory("graft_part_stream").toString
+    val outDir = tempDir("graft_part_stream").toString
     val q = spark.readStream.format("graft-lake")
       .option("ignoreChanges", "true").load(root)
       .writeStream.format("memory").queryName("part_tail")
@@ -215,7 +215,7 @@ class LakePartitionSpec extends SparkSuite {
     // for the drop (there are no added files — dropped rows must not
     // reappear downstream, and no survivor row may duplicate).
     val cat = "gdpstream"
-    val w = Files.createTempDirectory("graft_dpstream").toString
+    val w = tempDir("graft_dpstream").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -225,7 +225,7 @@ class LakePartitionSpec extends SparkSuite {
       "TBLPROPERTIES (clusterBy = 'id', nFiles = '1')")
     spark.sql(s"INSERT INTO $cat.ns.s SELECT * FROM dpstream_seed")
     val root = s"$w/ns/s"
-    val ckpt = Files.createTempDirectory("graft_dpstream_ck").toString
+    val ckpt = tempDir("graft_dpstream_ck").toString
     def run(buf: scala.collection.mutable.ArrayBuffer[Long],
             ignoreChanges: Boolean): Unit = {
       val q = spark.readStream.format("graft-lake")
@@ -272,7 +272,7 @@ class LakePartitionSpec extends SparkSuite {
       "files on value boundaries, inline CHECK validates with the " +
       "injected partition column") {
     val cat = "gpctas"
-    val w = Files.createTempDirectory("graft_pctas").toString
+    val w = tempDir("graft_pctas").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -333,14 +333,14 @@ class LakePartitionSpec extends SparkSuite {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val cat = "gpstr"
-    val w = Files.createTempDirectory("graft_pstream").toString
+    val w = tempDir("graft_pstream").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
     spark.sql(s"CREATE TABLE $cat.ns.s (day INT, id BIGINT, name STRING) " +
       "PARTITIONED BY (day) TBLPROPERTIES (clusterBy = 'id')")
     val root = s"$w/ns/s"
-    val ckpt = Files.createTempDirectory("pstream_ckpt").toString
+    val ckpt = tempDir("pstream_ckpt").toString
     val ms = org.apache.spark.sql.execution.streaming.runtime
       .MemoryStream[Long]
     def start() = ms.toDF()
@@ -421,7 +421,7 @@ class LakePartitionSpec extends SparkSuite {
   test("SHOW PARTITIONS / DROP PARTITION / TRUNCATE PARTITION: " +
       "metadata-only partition management through SQL") {
     val cat = "gpm"
-    val wh = Files.createTempDirectory("graft_pm").toString
+    val wh = tempDir("graft_pm").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", wh)
     spark.sql(s"CREATE NAMESPACE $cat.core")

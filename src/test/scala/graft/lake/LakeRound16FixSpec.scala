@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -15,7 +13,7 @@ import org.apache.spark.sql.functions._
 class LakeRound16FixSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_r16").resolve("tbl").toString
+    tempDir("graft_r16").resolve("tbl").toString
 
   private def seed(lo: Int, hi: Int): DataFrame = {
     import spark.implicits._
@@ -96,7 +94,7 @@ class LakeRound16FixSpec extends SparkSuite {
     // staged CTAS (the streaming writer stack): per-row folded stats
     // must record the same UTF-8 min/max as the batch pass would
     val cat = "gr16"
-    val w = Files.createTempDirectory("graft_r16cat").toString
+    val w = tempDir("graft_r16cat").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -113,7 +111,7 @@ class LakeRound16FixSpec extends SparkSuite {
   test("CREATE TABLE with inline CHECK is atomic: one v0 commit " +
       "carries the constraint; non-CHECK refuses before creating") {
     val cat = "gr16b"
-    val w = Files.createTempDirectory("graft_r16cat2").toString
+    val w = tempDir("graft_r16cat2").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -134,7 +132,7 @@ class LakeRound16FixSpec extends SparkSuite {
 
   test("staged CTAS honors nFiles without a cluster column") {
     val cat = "gr16c"
-    val w = Files.createTempDirectory("graft_r16cat3").toString
+    val w = tempDir("graft_r16cat3").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")

@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.FileSourceScanExec
@@ -14,7 +12,7 @@ import org.apache.spark.sql.functions._
 class LakeSqlReadSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakesql").resolve("tbl").toString
+    tempDir("graft_lakesql").resolve("tbl").toString
 
   private def seed(n: Int): DataFrame = {
     import spark.implicits._

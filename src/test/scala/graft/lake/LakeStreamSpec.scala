@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -10,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQueryException
 class LakeStreamSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lakestream").resolve("tbl").toString
+    tempDir("graft_lakestream").resolve("tbl").toString
 
   private def seed(lo: Int, hi: Int): DataFrame = {
     import spark.implicits._
@@ -41,7 +39,7 @@ class LakeStreamSpec extends SparkSuite {
 
   test("a restarted query resumes at the committed log version") {
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("lake_ckpt").toString
+    val ckpt = tempDir("lake_ckpt").toString
     LakeTable.create(spark, root, seed(0, 50), Seq("id"), nFiles = 1)
     // memory sink refuses checkpoint recovery; foreachBatch into a
     // per-incarnation buffer is the recoverable-sink harness
@@ -75,7 +73,7 @@ class LakeStreamSpec extends SparkSuite {
     // A restarted incarnation re-derives the logical view and emits
     // under the NEW name, resuming at the committed offset.
     val root = freshRoot()
-    val ckpt = Files.createTempDirectory("lake_ckpt_rename").toString
+    val ckpt = tempDir("lake_ckpt_rename").toString
     LakeTable.create(spark, root, seed(0, 10), Seq("id"), nFiles = 1)
     val batches = scala.collection.mutable.ArrayBuffer
       .empty[(Seq[String], Seq[Long])]
@@ -347,7 +345,7 @@ class LakeStreamSpec extends SparkSuite {
   test("lake-to-lake via LakeSink is exactly-once end to end") {
     val src = freshRoot()
     val dst = freshRoot()
-    val ckpt = Files.createTempDirectory("lake_l2l").toString
+    val ckpt = tempDir("lake_l2l").toString
     LakeTable.create(spark, src, seed(0, 60), Seq("id"), nFiles = 1)
     LakeTable.create(spark, dst, seed(0, 0), Seq("id"), nFiles = 1)
 

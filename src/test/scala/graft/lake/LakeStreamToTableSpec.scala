@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -17,7 +15,7 @@ class LakeStreamToTableSpec extends SparkSuite {
 
   private val cat = "gstt"
   private lazy val warehouse = {
-    val w = Files.createTempDirectory("graft_stt").toString
+    val w = tempDir("graft_stt").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     w
@@ -34,7 +32,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     sql(s"CREATE NAMESPACE $cat.core")
     sql(s"CREATE TABLE $cat.core.st (id BIGINT, v BIGINT)")
     val root = s"$warehouse/core/st"
-    val ckpt = Files.createTempDirectory("stt_ckpt").toString
+    val ckpt = tempDir("stt_ckpt").toString
     val ms = MemoryStream[Long]
     def start() = ms.toDF().selectExpr("value AS id", "value * 2 AS v")
       .writeStream.option("checkpointLocation", ckpt)
@@ -76,7 +74,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     sql(s"CREATE TABLE $cat.core.cl (id BIGINT, v BIGINT) " +
       "TBLPROPERTIES (clusterBy = 'id')")
     val root = s"$warehouse/core/cl"
-    val ckpt = Files.createTempDirectory("stt_ckpt2").toString
+    val ckpt = tempDir("stt_ckpt2").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF().selectExpr("value AS id", "value AS v")
       // many input partitions; the write must still land exactly 2
@@ -107,7 +105,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     sql(s"CREATE TABLE $cat.core.agg (k BIGINT, n BIGINT)")
-    val ckpt = Files.createTempDirectory("stt_ckpt3").toString
+    val ckpt = tempDir("stt_ckpt3").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF().groupBy((col("value") % 3).as("k"))
       .agg(count(lit(1)).as("n"))
@@ -131,7 +129,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     // a CHECK constraint added to the table gates streamed epochs too
     sql(s"CREATE TABLE $cat.core.gate (id BIGINT, v BIGINT)")
     sql(s"ALTER TABLE $cat.core.gate ADD CONSTRAINT pos CHECK (v >= 0)")
-    val ckpt2 = Files.createTempDirectory("stt_ckpt4").toString
+    val ckpt2 = tempDir("stt_ckpt4").toString
     val ms2 = MemoryStream[Long]
     val q2 = ms2.toDF().selectExpr("value AS id", "-value AS v")
       .writeStream.option("checkpointLocation", ckpt2)
@@ -150,7 +148,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     sql(s"CREATE TABLE $cat.core.mix (id BIGINT, v BIGINT)")
-    val ckpt = Files.createTempDirectory("stt_ckpt7").toString
+    val ckpt = tempDir("stt_ckpt7").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF().selectExpr("value AS id", "value AS v")
       .writeStream.option("checkpointLocation", ckpt)
@@ -183,7 +181,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     sql(s"CREATE TABLE $cat.core.two (id BIGINT, v BIGINT)")
     val root = s"$warehouse/core/two"
     def run(name: String, lo: Long, hi: Long): Unit = {
-      val ckpt = Files.createTempDirectory(s"stt_$name").toString
+      val ckpt = tempDir(s"stt_$name").toString
       val ms = MemoryStream[Long]
       val q = ms.toDF().selectExpr("value AS id", "value AS v")
         .writeStream.option("checkpointLocation", ckpt)
@@ -208,8 +206,8 @@ class LakeStreamToTableSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.Trigger
     sql(s"CREATE TABLE $cat.core.etl_dst (id BIGINT, v BIGINT) " +
       "TBLPROPERTIES (clusterBy = 'id')")
-    val src = Files.createTempDirectory("stt_etl_src").resolve("t").toString
-    val ckpt = Files.createTempDirectory("stt_etl_ckpt").toString
+    val src = tempDir("stt_etl_src").resolve("t").toString
+    val ckpt = tempDir("stt_etl_ckpt").toString
     import spark.implicits._
     LakeTable.create(spark, src,
       (0L until 40L).map(i => (i, i)).toDF("id", "v"), Seq("id"), nFiles = 1)
@@ -249,7 +247,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     sql(s"CREATE TABLE $cat.core.ev2 (id BIGINT)")
     sql(s"INSERT INTO $cat.core.ev2 SELECT id FROM range(5)")
-    val ckpt = Files.createTempDirectory("stt_ckpt5").toString
+    val ckpt = tempDir("stt_ckpt5").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF().selectExpr("value AS id", "concat('s_', value) AS lang")
       .writeStream.option("checkpointLocation", ckpt)
@@ -266,7 +264,7 @@ class LakeStreamToTableSpec extends SparkSuite {
       "pre-evolution rows must read null for the streamed-in column")
     assert(rows.drop(5).forall(r => r.getString(1) == s"s_${r.getLong(0)}"))
     // without the option, a schema mismatch refuses loudly
-    val ckpt2 = Files.createTempDirectory("stt_ckpt6").toString
+    val ckpt2 = tempDir("stt_ckpt6").toString
     val ms2 = MemoryStream[Long]
     val q2 = ms2.toDF().selectExpr("value AS id", "value AS extra")
       .writeStream.option("checkpointLocation", ckpt2)
@@ -282,7 +280,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     sql(s"CREATE TABLE $cat.core.upd (id BIGINT, total BIGINT)")
     val root = s"$warehouse/core/upd"
-    val ckpt = Files.createTempDirectory("stt_upd").toString
+    val ckpt = tempDir("stt_upd").toString
     val ms = MemoryStream[Long]
     def start() = ms.toDF()
       .groupBy((col("value") % 5).as("id"))
@@ -330,7 +328,7 @@ class LakeStreamToTableSpec extends SparkSuite {
     import spark.implicits._
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     sql(s"CREATE TABLE $cat.core.updlog (id BIGINT, total BIGINT)")
-    val ckpt = Files.createTempDirectory("stt_updlog").toString
+    val ckpt = tempDir("stt_updlog").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF()
       .groupBy((col("value") % 2).as("id"))
@@ -358,7 +356,7 @@ class LakeStreamToTableSpec extends SparkSuite {
       "k BIGINT, v BIGINT, " +
       "v2 BIGINT GENERATED ALWAYS AS (v * 2 + 1))")
     val root = s"$warehouse/core/semd"
-    val ckpt = Files.createTempDirectory("stt_sem").toString
+    val ckpt = tempDir("stt_sem").toString
     val ms = MemoryStream[Long]
     def start() = ms.toDF().selectExpr("value AS k", "value * 10 AS v")
       .writeStream.option("checkpointLocation", ckpt)
@@ -403,7 +401,7 @@ class LakeStreamToTableSpec extends SparkSuite {
       "(CASE WHEN k % 2 = 0 THEN 'even' ELSE 'odd' END)) " +
       "PARTITIONED BY (bucket)")
     val root = s"$warehouse/core/semp"
-    val ckpt = Files.createTempDirectory("stt_semp").toString
+    val ckpt = tempDir("stt_semp").toString
     val ms = MemoryStream[Long]
     val q = ms.toDF().selectExpr("value AS k")
       .writeStream.option("checkpointLocation", ckpt)
@@ -433,7 +431,7 @@ class LakeStreamToTableSpec extends SparkSuite {
 
     // the stream must OMIT the identity column
     val ms1 = MemoryStream[Long]
-    val ck1 = Files.createTempDirectory("stt_semr1").toString
+    val ck1 = tempDir("stt_semr1").toString
     val q1 = ms1.toDF()
       .selectExpr("value AS rid", "value AS k", "value AS v")
       .writeStream.option("checkpointLocation", ck1)
@@ -445,7 +443,7 @@ class LakeStreamToTableSpec extends SparkSuite {
 
     // keyed upserts route through foreachBatch + merge instead
     val ms2 = MemoryStream[Long]
-    val ck2 = Files.createTempDirectory("stt_semr2").toString
+    val ck2 = tempDir("stt_semr2").toString
     val q2 = ms2.toDF().selectExpr("value AS k", "value AS v")
       .writeStream.outputMode("update")
       .option("checkpointLocation", ck2)

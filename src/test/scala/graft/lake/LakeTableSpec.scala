@@ -1,7 +1,5 @@
 package graft.lake
 
-import java.nio.file.Files
-
 import graft.SparkSuite
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
@@ -10,7 +8,7 @@ import org.apache.spark.sql.functions._
 class LakeTableSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_lake").resolve("tbl").toString
+    tempDir("graft_lake").resolve("tbl").toString
 
   private def seed(n: Int): DataFrame = {
     import spark.implicits._

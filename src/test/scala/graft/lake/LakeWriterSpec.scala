@@ -1,15 +1,12 @@
 package graft.lake
 
-import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.commons.io.FileUtils
 import org.apache.hadoop.fs.Path
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.scalatest.BeforeAndAfterAll
 
 import graft.SparkSuite
 import LakeLog.{Add, Stats}
@@ -21,14 +18,10 @@ import LakeTable.ColRange
   * the written file, a blank partition value must follow one rule on
   * every path, and a commit must run no job after its write.
   */
-class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
-
-  private lazy val tmpRoot = Files.createTempDirectory("graft_lakewriter")
-  override def afterAll(): Unit =
-    try FileUtils.deleteDirectory(tmpRoot.toFile) finally super.afterAll()
+class LakeWriterSpec extends SparkSuite {
 
   private def freshRoot(): String =
-    Files.createTempDirectory(tmpRoot, "t").resolve("tbl").toString
+    tempDir("t").resolve("tbl").toString
 
   /** Spark jobs started while `body` runs (listener events are async:
     * settle-poll until the count is stable).
@@ -72,9 +65,9 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
     StructField("none", IntegerType)))
   private val statsCols = statsSchema.fieldNames.toSeq
 
-  // NaN, -0.0 beside 0.0 (z holds only zeros, so they are its bounds),
-  // nulls, an all-null column, and strings whose UTF-8 byte order
-  // disagrees with UTF-16 code-unit order
+  // NaN and both infinities, -0.0 beside 0.0 (z holds only zeros, so
+  // they are its bounds), nulls, an all-null column, and strings whose
+  // UTF-8 byte order disagrees with UTF-16 code-unit order
   private val statsRows: Seq[Row] = Seq(
     Row(1.toByte, 10.toShort, 100, 1000L, 1.5f, 0.0, 0.0, "a", null),
     Row(-3.toByte, -30.toShort, -300, -3000L, -0.0f, -0.0, -0.0, "\uFFFD",
@@ -86,7 +79,11 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
     Row(Byte.MaxValue, Short.MinValue, Int.MaxValue, Long.MinValue,
       Float.MaxValue, Double.MinValue, 0.0, "\uD83D\uDE00z", null),
     Row(5.toByte, 5.toShort, 5, 5L, 5.0f, -0.0, -0.0, "m", null),
-    Row(2.toByte, 2.toShort, 2, 2L, 0.0f, 0.0, 0.0, "zz", null))
+    Row(2.toByte, 2.toShort, 2, 2L, 0.0f, 0.0, 0.0, "zz", null),
+    Row(3.toByte, 3.toShort, 3, 3L, Float.PositiveInfinity,
+      Double.NegativeInfinity, 0.0, "q", null),
+    Row(4.toByte, 4.toShort, 4, 4L, Float.NegativeInfinity,
+      Double.PositiveInfinity, -0.0, "r", null))
 
   private def statsFrame(copies: Int): DataFrame =
     spark.createDataFrame(spark.sparkContext.parallelize(
@@ -112,7 +109,8 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
   private val probeRanges: Seq[ColRange] = {
     val nums: Seq[Option[Any]] = Seq(None, Some(-5000L), Some(-1L),
       Some(0L), Some(-0.0), Some(0.0), Some(2L), Some(2.5), Some(7000L),
-      Some(Long.MaxValue))
+      Some(Long.MaxValue), Some(Double.NaN), Some(Double.PositiveInfinity),
+      Some(Double.NegativeInfinity))
     val strs: Seq[Option[Any]] = Seq(None, Some(""), Some("a"), Some("n"),
       Some("\uFFFD"), Some("\uD83D\uDE00"), Some("\uD83D\uDE00zz"))
     statsCols.flatMap { c =>
@@ -131,6 +129,11 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
       java.lang.Double.doubleToRawLongBits(v.asInstanceOf[Double])
     assert(bits(one.min("z")) == bits(-0.0) && bits(one.max("z")) == bits(0.0),
       one)
+    // non-finite bounds come back from the log as doubles
+    assert(bits(one.max("d")) == bits(Double.NaN) &&
+      bits(one.min("d")) == bits(Double.NegativeInfinity), one)
+    assert(bits(one.max("f")) == bits(Double.NaN) &&
+      bits(one.min("f")) == bits(Double.NegativeInfinity), one)
     // then a round-robin spread, a range-clustered write and a
     // compaction, all through the same writer
     LakeTable.append(spark, root, statsFrame(4), nFiles = 3)
@@ -158,19 +161,34 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
         s"${a.path} $r: ${a.stats} vs ${want.stats}"))
     }
     assert(LakeTable.scan(spark, root).count() == statsRows.size * 11)
+    // a NaN literal prunes through the same comparison (Spark: NaN = NaN)
+    val nans = statsRows.count(r => !r.isNullAt(5) && r.getDouble(5).isNaN)
+    assert(spark.read.format("graft-lake").load(root)
+      .where(col("d") === lit(Double.NaN)).count() == nans * 11)
   }
 
-  test("an unclustered append of one file runs one Spark job") {
+  test("a one-file append runs one Spark job, clustered or not") {
     import spark.implicits._
-    val root = freshRoot()
-    val df = (0L until 100L).map(i => (i, s"v$i")).toDF("k", "v")
-    LakeTable.create(spark, root, df, Seq("k"), nFiles = 1)
-    assert(jobsDuring(LakeTable.append(spark, root, df, nFiles = 1)) == 1)
-    val snap = LakeTable.snapshot(spark, root)
-    assert(snap.files.size == 2)
-    assert(snap.files.forall(_.stats.rows == 100L))
-    assert(snap.files.forall(_.path.matches("data/[^/]+/part-e-1-p0-t\\d+.*")),
-      snap.files.map(_.path))
+    val df = (0L until 100L).map(i => (99L - i, s"v$i")).toDF("k", "v")
+    Seq(None, Some("k")).foreach { clusterBy =>
+      val root = freshRoot()
+      LakeTable.create(spark, root, df, Seq("k"), nFiles = 1,
+        clusterBy = clusterBy)
+      assert(jobsDuring(LakeTable.append(spark, root, df, nFiles = 1)) == 1,
+        clusterBy)
+      val snap = LakeTable.snapshot(spark, root)
+      assert(snap.files.size == 2)
+      assert(snap.files.forall(a => a.stats.rows == 100L &&
+        a.stats.min("k") == 0L && a.stats.max("k") == 99L), snap.files)
+      assert(snap.files.forall(_.path.matches("data/[^/]+/part-e-1-p0-t\\d+.*")),
+        snap.files.map(_.path))
+      // the one task still sorts a clustered file by its cluster column
+      if (clusterBy.nonEmpty) snap.files.foreach { a =>
+        val ks = spark.read.parquet(new Path(root, a.path).toString)
+          .select("k").as[Long].collect().toSeq
+        assert(ks == (0L until 100L), a.path)
+      }
+    }
   }
 
   test("a blank partition value is a NULL one on every write path") {
@@ -187,7 +205,7 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
     LakeTable.append(spark, appended, df, nFiles = 1)
 
     val cat = "gblankpart"
-    val w = Files.createTempDirectory(tmpRoot, "wh").toString
+    val w = tempDir("wh").toString
     spark.conf.set(s"spark.sql.catalog.$cat", "graft.lake.LakeCatalog")
     spark.conf.set(s"spark.sql.catalog.$cat.warehouse", w)
     spark.sql(s"CREATE NAMESPACE $cat.ns")
@@ -204,7 +222,7 @@ class LakeWriterSpec extends SparkSuite with BeforeAndAfterAll {
         "value AS v")
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory(tmpRoot, "ckpt").toString)
+        tempDir("ckpt").toString)
       .toTable(s"$cat.ns.st")
     try {
       ms.addData(1L, 2L, 3L)

@@ -67,7 +67,7 @@ class CdcMergeSpec extends SparkSuite {
   }
 
   test("persisted lifecycle: save -> load -> merge day2 matches the in-memory chain") {
-    val path = java.nio.file.Files.createTempDirectory("graft_cdc").toString
+    val path = tempDir("graft_cdc").toString
     val day1 = df(row(2, "SHIPPED", 222, 1, "U"), row(3, "", 0, 1, "D"))
     val day2 = df(row(3, "REOPENED", 333, 2, "U"))
     CdcMerge.save(CdcMerge.merge(base, day1, Seq("k")), s"$path/base")

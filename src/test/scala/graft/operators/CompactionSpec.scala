@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 class CompactionSpec extends SparkSuite {
 
-  private def tmp() = java.nio.file.Files.createTempDirectory("compact").toString
+  private def tmp() = tempDir("compact").toString
 
   test("fragmented dataset compacts to the byte-derived file count, content intact") {
     val dir = tmp()

@@ -46,7 +46,7 @@ class IncrementalAggSpec extends SparkSuite {
   }
 
   test("state save/load round-trips bit-equal and merges with a new batch") {
-    val dir = java.nio.file.Files.createTempDirectory("incagg").toString
+    val dir = tempDir("incagg").toString
     val (hist, batch) = rows.splitAt(4)
     val state = IncrementalAgg.partial(hist.toDF("g", "v"), Seq("g"), "v")
     IncrementalAgg.save(state, s"$dir/state")

@@ -47,7 +47,7 @@ class IncrementalDedupSpec extends SparkSuite {
 
   test("fit -> save -> load -> filter equals fit -> filter bit-exactly") {
     val idx = IncrementalDedup.fitIndex(oldDocs, "doc_id", "text", P)
-    val dir = java.nio.file.Files.createTempDirectory("graft_incidx").toString
+    val dir = tempDir("graft_incidx").toString
     IncrementalDedup.save(idx, dir)
     val loaded = IncrementalDedup.load(spark, dir)
     val batch = Seq((10L, mkDoc(1)), (11L, mkDoc(99))).toDF("doc_id", "text")

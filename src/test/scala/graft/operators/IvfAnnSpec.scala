@@ -118,7 +118,7 @@ class IvfAnnSpec extends SparkSuite {
   test("fit -> save -> load -> search equals fit -> search bit-exactly") {
     val p = IvfAnn.Params(k = 8, iterations = 3, nprobe = 3)
     val idx = IvfAnn.fitIndex(emb, "vec_id", "embedding", p)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf_idx").toString
+    val dir = tempDir("graft_ivf_idx").toString
     IvfAnn.save(idx, dir)
     val loaded = IvfAnn.load(spark, dir)
     assert(loaded.centroids.map(_.toSeq).toSeq == idx.centroids.map(_.toSeq).toSeq,

@@ -56,8 +56,7 @@ class NgramLmSpec extends SparkSuite {
     val corpus = (1L to 30L).map(i => (i, s"w${i % 4} w${i % 6} w${i % 3}"))
       .toDF("doc_id", "text")
     val m = NgramLm.fit(corpus, "text")
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_lm_model").toString
+    val path = tempDir("graft_lm_model").toString
     NgramLm.save(m, path)
     val m2 = NgramLm.load(spark, path)
     assert(m2.vocab === m.vocab)

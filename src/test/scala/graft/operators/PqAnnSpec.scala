@@ -63,7 +63,7 @@ class PqAnnSpec extends SparkSuite {
 
   test("PQ fit -> save -> load -> search equals fit -> search bit-exactly") {
     val idx = PqAnn.fitIndex(emb, "vec_id", "embedding", p)
-    val dir = java.nio.file.Files.createTempDirectory("graft_pq_idx").toString
+    val dir = tempDir("graft_pq_idx").toString
     PqAnn.save(idx, dir)
     val loaded = PqAnn.load(spark, dir)
     assert(loaded.codebooks.map(_.map(_.toSeq).toSeq).toSeq ==
@@ -82,7 +82,7 @@ class PqAnnSpec extends SparkSuite {
     val ip = IvfPqAnn.Params(coarseK = 8, coarseIterations = 2, nprobe = 3,
       pq = PqAnn.Params(m = 8, ksub = 16, iterations = 2))
     val idx = IvfPqAnn.fitIndex(emb, "vec_id", "embedding", ip)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivfpq_idx").toString
+    val dir = tempDir("graft_ivfpq_idx").toString
     IvfPqAnn.save(idx, dir)
     val loaded = IvfPqAnn.load(spark, dir)
     assert(loaded.coarse.map(_.toSeq).toSeq == idx.coarse.map(_.toSeq).toSeq)

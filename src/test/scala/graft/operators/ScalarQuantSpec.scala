@@ -75,8 +75,7 @@ class ScalarQuantSpec extends SparkSuite {
 
   test("persisted index stores REAL int8 levels and searches " +
       "bit-identically to the in-query path") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_sq8_spec").toString
+    val path = tempDir("graft_sq8_spec").toString
     ScalarQuant.save(
       ScalarQuant.fitIndex(emb, "vec_id", "embedding"), path)
     val loaded = ScalarQuant.load(spark, path)

@@ -83,8 +83,7 @@ class SemDedupSpec extends SparkSuite {
   test("save/load round-trips the model bit-exactly (flat and two-level)") {
     for (params <- Seq(p, p.copy(twoLevel = true))) {
       val fit = SemDedup.fitModel(fixture, "vec_id", "embedding", params)
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_semdedup_spec").toString
+      val dir = tempDir("graft_semdedup_spec").toString
       SemDedup.save(fit, spark, dir)
       val loaded = SemDedup.load(spark, dir)
       // bit equality, not approximate: parquet round-trips doubles

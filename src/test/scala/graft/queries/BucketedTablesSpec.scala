@@ -21,7 +21,7 @@ class BucketedTablesSpec extends SparkSuite {
   private def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
 
   test("fixture dirs whose paths share a String.hashCode keep their own bucketed tables") {
-    val root = Files.createTempDirectory("graft_bkt_spec")
+    val root = tempDir("graft_bkt_spec")
     val aa = root.resolve("Aa").toString
     val bb = root.resolve("BB").toString
     assert(aa.hashCode == bb.hashCode) // the premise: a 32-bit collision

@@ -117,7 +117,7 @@ class StreamingOpsSpec extends SparkSuite {
   }
 
   test("file-source stream: per-batch top-N over parquet arriving in a watched dir") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_stream").toString
+    val dir = tempDir("graft_stream").toString
     val schema = graft.Tables(spark, sf("sf0.001"), "orders").schema
     val collected = mutable.Buffer[Seq[Long]]()
 
@@ -542,7 +542,7 @@ class StreamingOpsSpec extends SparkSuite {
   }
 
   test("checkpointed file-sink pipeline restarts exactly-once (no dupes, no loss)") {
-    val root = java.nio.file.Files.createTempDirectory("graft_eo").toString
+    val root = tempDir("graft_eo").toString
     val (src, out, chk) = (s"$root/src", s"$root/out", s"$root/chk")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(src))
     val schema = "doc_id LONG, text STRING"
