@@ -170,16 +170,8 @@ object Bench {
     System.err.println(
       f"[bench] heap faulted in ${(System.nanoTime() - tFault) / 1e9}%.1f s")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // deployment posture: graft SQL functions + the LevenshteinPrefilter
-      // optimizer rule active, exactly as a spark-submit user would run
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val loadStart = ambientLoad

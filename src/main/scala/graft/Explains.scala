@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 
 /** Dumps `explain("formatted")` of EVERY registered query to
   * EXPLAINS.md — the reviewed physical-plan artifact backing the
@@ -19,15 +18,7 @@ object Explains {
     // startup sweep cannot delete this run's fixtures/checkpoints
     ScratchGuard.init(sweep = false)
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // same deployment posture as Verify/Bench: the lake expansion
-      // rule plans catalog and DV'd-snapshot reads natively
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
+    val spark = SparkEntry.session(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val names = SparkEntry.queries.keys.toSeq.sorted

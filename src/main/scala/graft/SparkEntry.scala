@@ -12,6 +12,21 @@ object SparkEntry {
     RelationalQueries.all ++ PipelineQueries.all ++ StreamingQueries.all ++
       LakeQueries.all
 
+  /** The one session posture of the driver mains and the test suites:
+    * `local[cores]` with as many shuffle partitions, UTC session time,
+    * no UI, and [[GraftSparkExtensions]] active (graft SQL functions,
+    * the optimizer rules and the lake's analysis rule), exactly as a
+    * spark-submit user would run. Callers add their own settings
+    * before `getOrCreate()`.
+    */
+  def session(cores: Int): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Top-3 customers per nation by account balance, with nation names —
     * grouped top-N (WindowGroupLimit) over a broadcast join.

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -16,16 +15,8 @@ object Verify {
       if (args.length <= 2) None
       else if (args(2) == "smoke") Some(SparkEntry.smokeQueries.toSet)
       else Some(args(2).split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // deployment posture: graft SQL functions + the LevenshteinPrefilter
-      // optimizer rule active, exactly as a spark-submit user would run
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = SparkEntry.session(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     SparkEntry.oracleSfDir = sfDir // generated oracles train on the verified data
     new java.io.File(outDir).mkdirs()

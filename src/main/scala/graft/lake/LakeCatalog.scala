@@ -16,9 +16,8 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo,
   SupportsOverwrite, SupportsTruncate, V1Write, WriteBuilder}
-import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe,
-  EqualTo, Filter, GreaterThan, GreaterThanOrEqual, InsertableRelation,
-  IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{AlwaysTrue, Filter,
+  InsertableRelation}
 import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType,
   IntegerType, LongType, ShortType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -33,7 +32,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     TBLPROPERTIES (statsCols = 'id', clusterBy = 'id')
   *   INSERT INTO lake.corpus.docs SELECT ...
   *   SELECT * FROM lake.corpus.docs VERSION AS OF 3
-  *   DELETE FROM lake.corpus.docs WHERE id BETWEEN 10 AND 99
+  *   DELETE FROM lake.corpus.docs WHERE id BETWEEN 10 AND 99  -- metadata-only
   *   ALTER TABLE lake.corpus.docs ADD COLUMNS (lang STRING)
   * }}}
   *
@@ -57,9 +56,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * Writes ride the V1 fallback ([[TableCapability.V1_BATCH_WRITE]]):
   * `INSERT INTO` → [[LakeTable.append]] (one transactional commit),
   * `INSERT OVERWRITE` → [[LakeTable.overwrite]]. `DELETE FROM` plans
-  * through [[SupportsDelete]] when the predicate translates EXACTLY
-  * to the lake's conjunctive ranges (else the catalog refuses — a
-  * partial translation would delete MORE rows than asked).
+  * through [[SupportsDelete]] (a metadata-only [[LakeTable.deleteWhere]])
+  * when [[LakeRanges.exact]] translates its predicate to conjunctive
+  * ranges; otherwise [[LakeMorExpansion]] routes it, by the same
+  * function, to the general row-level rewrite [[LakeDeleteCommand]]
+  * (a partial translation would delete MORE rows than asked).
   */
 class LakeCatalog extends TableCatalog with SupportsNamespaces
     with org.apache.spark.sql.connector.catalog.StagingTableCatalog {
@@ -482,8 +483,9 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
 /** The catalog's table handle: a root + an optional pinned version.
   * Reads are spliced to the native plan by [[LakeMorExpansion]];
   * writes ride the V1 `InsertableRelation` fallback into
-  * [[LakeTable.append]]/[[LakeTable.overwrite]]; `DELETE FROM` maps
-  * exactly-translatable predicates onto [[LakeTable.deleteWhere]].
+  * [[LakeTable.append]]/[[LakeTable.overwrite]]; `DELETE FROM` and
+  * REPLACE WHERE map predicates [[LakeRanges.exact]] translates onto
+  * [[LakeTable.deleteWhere]] / [[LakeTable.replaceWhere]].
   */
 private[lake] class LakeTableV2(spark: SparkSession,
                                 private[lake] val root: Path,
@@ -630,7 +632,7 @@ private[lake] class LakeTableV2(spark: SparkSession,
         // Only EXACT translations are safe (a dropped conjunct would
         // delete a superset of what the insert replaces)
         if (filters.forall(_.isInstanceOf[AlwaysTrue])) overwriteAll = true
-        else replaceRanges = LakeTableV2.translateAll(filters).getOrElse(
+        else replaceRanges = LakeRanges.exact(filters).getOrElse(
           throw new UnsupportedOperationException(
             s"REPLACE WHERE ${filters.mkString(" AND ")} does not " +
               "translate exactly to column ranges"))
@@ -733,10 +735,10 @@ private[lake] class LakeTableV2(spark: SparkSession,
   // ---- DELETE FROM ---------------------------------------------------
 
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
-    LakeTableV2.translateAll(filters).isDefined
+    LakeRanges.exact(filters).isDefined
 
   override def deleteWhere(filters: Array[Filter]): Unit = {
-    val ranges = LakeTableV2.translateAll(filters).getOrElse(
+    val ranges = LakeRanges.exact(filters).getOrElse(
       throw new UnsupportedOperationException(
         s"DELETE predicate ${filters.mkString(" AND ")} does not " +
           "translate exactly to column ranges"))
@@ -884,66 +886,4 @@ private[lake] class LakeTableV2(spark: SparkSession,
   override def loadPartitionMetadata(
       ident0: org.apache.spark.sql.catalyst.InternalRow)
       : util.Map[String, String] = util.Collections.emptyMap()
-}
-
-private[lake] object LakeTableV2 {
-
-  /** STRICT translation of a DELETE predicate to conjunctive
-    * [[LakeTable.ColRange]]s: every conjunct must translate or the
-    * whole predicate is refused (None) — a dropped conjunct would
-    * widen the delete. `IsNotNull` conjuncts are sound to absorb:
-    * ranges are null-rejecting already, and deleting "WHERE x IS NOT
-    * NULL AND lo <= x <= hi" deletes the same rows with or without
-    * the null guard.
-    */
-  private[lake] def translateAll(filters: Array[Filter]):
-      Option[Seq[LakeTable.ColRange]] = {
-    val parts = filters.filterNot(_.isInstanceOf[AlwaysTrue]).map(one)
-    if (parts.exists(_.isEmpty)) None
-    else {
-      val ranges = parts.flatMap(_.get).toSeq
-      // a bare IS NOT NULL (no range on the same column) has no range
-      // form — (None, None) would match nulls too via lit(true)
-      val guarded = ranges.filter(r => r.lo.isEmpty && r.hi.isEmpty)
-        .map(_.column)
-        .forall(c => ranges.exists(r =>
-          r.column == c && (r.lo.nonEmpty || r.hi.nonEmpty)))
-      if (guarded) Some(ranges.filter(r => r.lo.nonEmpty || r.hi.nonEmpty))
-      else None
-    }
-  }
-
-  private def norm(v: Any): Option[Any] =
-    try Option(v).map(LakeTable.normalizeStat) catch {
-      case _: IllegalArgumentException => None
-    }
-
-  private def one(f: Filter): Option[Seq[LakeTable.ColRange]] = f match {
-    case And(l, r) => for (a <- one(l); b <- one(r)) yield a ++ b
-    case EqualTo(c, v) =>
-      norm(v).map(x => Seq(LakeTable.ColRange(c, Some(x), Some(x))))
-    // a static INSERT OVERWRITE PARTITION (p = 'x') spec arrives as
-    // null-safe equality; with a NON-NULL literal it selects exactly
-    // the EqualTo rows (ranges are null-rejecting, and null rows never
-    // match a non-null <=>), so the translation is exact. A NULL
-    // literal (p <=> NULL, the null partition) has no range form —
-    // norm(null) is None and the statement refuses loudly.
-    case EqualNullSafe(c, v) =>
-      norm(v).map(x => Seq(LakeTable.ColRange(c, Some(x), Some(x))))
-    case GreaterThan(c, v) => // ranges are inclusive: refuse strict
-      // x+1 on Long.MaxValue wraps to MinValue — "> MaxValue" would
-      // translate to a match-ALL range and delete every row; refuse
-      norm(v).collect { case x: Long if x != Long.MaxValue =>
-        Seq(LakeTable.ColRange(c, Some(x + 1L), None)) }
-    case GreaterThanOrEqual(c, v) =>
-      norm(v).map(x => Seq(LakeTable.ColRange(c, Some(x), None)))
-    case LessThan(c, v) =>
-      norm(v).collect { case x: Long if x != Long.MinValue =>
-        Seq(LakeTable.ColRange(c, None, Some(x - 1L))) }
-    case LessThanOrEqual(c, v) =>
-      norm(v).map(x => Seq(LakeTable.ColRange(c, None, Some(x))))
-    case IsNotNull(c) => // sound only beside a range on c: see above
-      Some(Seq(LakeTable.ColRange(c, None, None)))
-    case _ => None
-  }
 }

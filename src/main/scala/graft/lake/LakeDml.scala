@@ -2,10 +2,8 @@ package graft.lake
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd,
-  AttributeReference, EqualTo => CEq, Expression,
-  GreaterThan => CGt, GreaterThanOrEqual => CGe, IsNotNull => CNotNull,
-  LessThan => CLt, LessThanOrEqual => CLe, Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+  Expression}
 import org.apache.spark.sql.catalyst.plans.logical.{Assignment, DeleteAction,
   InsertAction, LogicalPlan, MergeAction, UpdateAction}
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
@@ -14,108 +12,22 @@ import org.apache.spark.sql.graft.PlanBridge
 import org.apache.spark.sql.types.{StructField, StructType}
 
 /** The lake's SQL row-level DML, executed as rewrite commits —
-  * `MERGE INTO`, `UPDATE`, and `DELETE FROM` with predicates beyond
-  * the metadata path's strict ranges. [[LakeMorExpansion]] converts
-  * the analyzed `MergeIntoTable` / `UpdateTable` / residual
-  * `DeleteFromTable` nodes into these commands (the same analysis
-  * conversion public lakehouse formats use, since the stock planner
-  * requires `SupportsRowLevelOperations`).
+  * `MERGE INTO`, `UPDATE`, and `DELETE FROM` whose predicate
+  * [[LakeRanges.exact]] refuses (an exact one stays a metadata-only
+  * `SupportsDelete` delete, decided by the same function).
+  * [[LakeMorExpansion]] converts the analyzed `MergeIntoTable` /
+  * `UpdateTable` / residual `DeleteFromTable` nodes into these commands
+  * (the same analysis conversion public lakehouse formats use, since
+  * the stock planner requires `SupportsRowLevelOperations`).
   *
   * Scale shape shared by all three: candidate files are stats-pruned
   * first (equi-key [min,max] of the source for MERGE, the predicate's
-  * range conjuncts for UPDATE/DELETE), only candidates are read and
+  * [[LakeRanges.widening]] ranges for UPDATE/DELETE), only candidates
+  * are read and
   * rewritten, and the commit guards them — the untouched majority of
   * a 100 TB table is never read, and a racing rewrite aborts loudly.
   */
 private[lake] object LakeDml {
-
-  def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case CAnd(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case other => Seq(other)
-  }
-
-  private def norm(l: Literal): Option[Any] = {
-    // type-aware, mirroring LakeTableV2.translateAll EXACTLY: a
-    // DATE/TIMESTAMP literal's INTERNAL value is an Int/Long
-    // (days/micros) that normalizeStat would happily accept — but the
-    // DSv2 side sees the EXTERNAL java.sql.Date and refuses, and a
-    // days-as-Long range compared against a DATE column would be
-    // nonsense anyway. The mirrors must agree, or a temporal DELETE
-    // gets stranded on the refusing SupportsDelete path instead of
-    // falling back to the general row-level rewrite (which handles
-    // any deterministic predicate, temporal included).
-    import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType,
-      IntegerType, LongType, ShortType, StringType}
-    l.dataType match {
-      case ByteType | ShortType | IntegerType | LongType | FloatType |
-           DoubleType | StringType =>
-        try Option(l.value).map {
-          case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-          case v => LakeTable.normalizeStat(v)
-        } catch { case _: IllegalArgumentException => None }
-      case _ => None
-    }
-  }
-
-  /** Catalyst mirror of [[LakeTableV2.translateAll]]'s STRICT
-    * predicate→range translation: Some(ranges) iff the metadata-only
-    * `SupportsDelete` path can serve this condition exactly. None
-    * sends the DELETE to [[LakeDeleteCommand]]'s general rewrite.
-    */
-  def strictRanges(cond: Expression): Option[Seq[LakeTable.ColRange]] = {
-    def one(e: Expression): Option[Seq[LakeTable.ColRange]] = e match {
-      case Literal.TrueLiteral => Some(Nil)
-      case CEq(a: AttributeReference, l: Literal) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, Some(x), Some(x))))
-      case CEq(l: Literal, a: AttributeReference) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, Some(x), Some(x))))
-      case CGe(a: AttributeReference, l: Literal) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, Some(x), None)))
-      case CLe(a: AttributeReference, l: Literal) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, None, Some(x))))
-      case CGe(l: Literal, a: AttributeReference) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, None, Some(x))))
-      case CLe(l: Literal, a: AttributeReference) =>
-        norm(l).map(x => Seq(LakeTable.ColRange(a.name, Some(x), None)))
-      // x±1 at the Long domain edge wraps ("> MaxValue" would become a
-      // match-ALL range and the metadata delete would remove every
-      // row) — refuse, sending the statement to the general rewrite
-      case CGt(a: AttributeReference, l: Literal) =>
-        norm(l).collect { case x: Long if x != Long.MaxValue =>
-          Seq(LakeTable.ColRange(a.name, Some(x + 1L), None)) }
-      case CLt(a: AttributeReference, l: Literal) =>
-        norm(l).collect { case x: Long if x != Long.MinValue =>
-          Seq(LakeTable.ColRange(a.name, None, Some(x - 1L))) }
-      case CGt(l: Literal, a: AttributeReference) =>
-        norm(l).collect { case x: Long if x != Long.MinValue =>
-          Seq(LakeTable.ColRange(a.name, None, Some(x - 1L))) }
-      case CLt(l: Literal, a: AttributeReference) =>
-        norm(l).collect { case x: Long if x != Long.MaxValue =>
-          Seq(LakeTable.ColRange(a.name, Some(x + 1L), None)) }
-      case CNotNull(a: AttributeReference) =>
-        Some(Seq(LakeTable.ColRange(a.name, None, None)))
-      case _ => None
-    }
-    val parts = splitConjuncts(cond).map(one)
-    if (parts.exists(_.isEmpty)) None
-    else {
-      val ranges = parts.flatMap(_.get)
-      val guarded = ranges.filter(r => r.lo.isEmpty && r.hi.isEmpty)
-        .map(_.column)
-        .forall(c => ranges.exists(r =>
-          r.column == c && (r.lo.nonEmpty || r.hi.nonEmpty)))
-      if (guarded) Some(ranges.filter(r => r.lo.nonEmpty || r.hi.nonEmpty))
-      else None
-    }
-  }
-
-  /** CONSERVATIVE candidate ranges from an arbitrary predicate: only
-    * attr-vs-literal comparison conjuncts prune (dropped conjuncts
-    * only widen the candidate set — the exact predicate is re-applied
-    * row-level by the command).
-    */
-  def pruneRanges(cond: Expression): Seq[LakeTable.ColRange] =
-    splitConjuncts(cond).flatMap(LakeFileIndex.toRanges)
 
   /** First-applicable-action value of column `fd` over a row frame
     * (SQL MERGE clause order): fall through while conditions are
@@ -234,26 +146,19 @@ private[lake] final case class LakeMergeIntoCommand(
     // candidate files: for each `t.col = <source expr>` conjunct,
     // the source expression's [min, max] bounds the keys that can
     // match — files outside every bound provably hold no matched row
-    def sourceOnly(e: Expression): Boolean =
-      e.references.forall(a => !targetIds.contains(a.exprId))
-    val equiKeys = splitConjuncts(cond).collect {
-      case CEq(a: AttributeReference, b)
-          if targetIds.contains(a.exprId) && sourceOnly(b) => (a.name, b)
-      case CEq(b, a: AttributeReference)
-          if targetIds.contains(a.exprId) && sourceOnly(b) => (a.name, b)
-    }
     var noMatchPossible = false
-    val ranges = equiKeys.flatMap { case (name, e) =>
-      val row = s.agg(min(PlanBridge.column(e)).as("lo"),
-        max(PlanBridge.column(e)).as("hi")).head()
-      if (row.isNullAt(0) || row.isNullAt(1)) {
-        // empty source or all-null keys: equality can never hold
-        noMatchPossible = true
-        None
-      } else try Some(LakeTable.ColRange(name,
-        Some(LakeTable.normalizeStat(row.get(0))),
-        Some(LakeTable.normalizeStat(row.get(1)))))
-      catch { case _: IllegalArgumentException => None }
+    val ranges = LakeRanges.equiKeys(cond, targetIds).flatMap {
+      case (name, e) =>
+        val row = s.agg(min(PlanBridge.column(e)).as("lo"),
+          max(PlanBridge.column(e)).as("hi")).head()
+        if (row.isNullAt(0) || row.isNullAt(1)) {
+          // empty source or all-null keys: equality can never hold
+          noMatchPossible = true
+          None
+        } else try Some(LakeTable.ColRange(name,
+          Some(LakeTable.normalizeStat(row.get(0))),
+          Some(LakeTable.normalizeStat(row.get(1)))))
+        catch { case _: IllegalArgumentException => None }
     }
     val pr = LakeTable.physRanges(ranges, snap.colMap)
     val cands =
@@ -367,7 +272,7 @@ private[lake] final case class LakeUpdateCommand(
     assignments.foreach(a => forbidAlwaysIdentity(snap, a, "UPDATE"))
     val targetIds = targetAttrs.map(_.exprId).toSet
     val pr = LakeTable.physRanges(
-      condition.map(pruneRanges).getOrElse(Nil), snap.colMap)
+      condition.map(LakeRanges.widening(_)).getOrElse(Nil), snap.colMap)
     val cands = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
     val t = LakeTable.readAdds(spark, rootP, snap, cands)
@@ -414,7 +319,8 @@ private[lake] final case class LakeDeleteCommand(
     val f = LakeLog.fileSystem(rootP, spark.sparkContext.hadoopConfiguration)
     val snap = LakeLog.snapshot(f, rootP, None)
     val targetIds = targetAttrs.map(_.exprId).toSet
-    val pr = LakeTable.physRanges(pruneRanges(condition), snap.colMap)
+    val pr = LakeTable.physRanges(LakeRanges.widening(condition),
+      snap.colMap)
     val cands = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
     val t = LakeTable.readAdds(spark, rootP, snap, cands)

@@ -4,8 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Attribute,
-  BoundReference, EqualTo, Expression, GreaterThan, GreaterThanOrEqual,
-  LessThan, LessThanOrEqual, Literal, Predicate}
+  BoundReference, Expression, Predicate}
 import org.apache.spark.sql.execution.datasources.{FileIndex,
   FileStatusWithMetadata, PartitionDirectory}
 import org.apache.spark.sql.types.{ByteType, IntegerType, LongType,
@@ -94,9 +93,9 @@ final class LakeFileIndex(spark: SparkSession, root: Path,
       }
     }
 
-  /** Pushed data filters → per-column bounds → stats pruning. Only
-    * conjuncts shaped `col <op> literal` on a stats column prune;
-    * everything else is ignored here and still applied row-level by
+  /** Pushed data filters → per-column bounds → stats pruning. The
+    * conjuncts [[LakeRanges.widening]] translates on a stats column
+    * prune; everything else is ignored here and still applied row-level by
     * the scan's own filters — pruning is an optimization, never a
     * semantics change (same contract as [[LakeTable.scanPruned]]).
     * Partition filters (arbitrary predicates on partition columns)
@@ -109,7 +108,7 @@ final class LakeFileIndex(spark: SparkSession, root: Path,
     // filter) uses PHYSICAL names — the same names stats are keyed by
     val statKeys = snap.statsCols
       .map(c => snap.colMap.getOrElse(c, c)).toSet
-    val ranges = dataFilters.flatMap(LakeFileIndex.toRanges)
+    val ranges = dataFilters.flatMap(LakeRanges.widening(_))
       .filter(r => statKeys.contains(r.column)) ++
       // generated-partition inference: a base-column predicate also
       // bounds its GENERATED partition column (month(base) etc.), and
@@ -148,45 +147,4 @@ final class LakeFileIndex(spark: SparkSession, root: Path,
   /** Stats of one committed file, for tests/tooling. */
   def statsOf(relPath: String): Option[LakeLog.Stats] =
     statsByPath.get(relPath)
-}
-
-object LakeFileIndex {
-
-  private def lit(l: Literal): Option[Any] = l.value match {
-    case null           => None
-    case u: UTF8String  => Some(u.toString)
-    case other          =>
-      try Some(LakeTable.normalizeStat(other)) catch {
-        case _: IllegalArgumentException => None // unprunable type
-      }
-  }
-
-  /** Catalyst conjunct → [[LakeTable.ColRange]]s (empty = no pruning
-    * power). Attribute-on-either-side comparisons and nested Ands.
-    */
-  private[lake] def toRanges(e: Expression): Seq[LakeTable.ColRange] =
-    e match {
-      case And(l, r) => toRanges(l) ++ toRanges(r)
-      case EqualTo(a: Attribute, l: Literal) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), Some(v)))
-      case EqualTo(l: Literal, a: Attribute) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), Some(v)))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), None))
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), None))
-      case LessThan(a: Attribute, l: Literal) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, None, Some(v)))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, None, Some(v)))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, None, Some(v)))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, None, Some(v)))
-      case LessThan(l: Literal, a: Attribute) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), None))
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        lit(l).toSeq.map(v => LakeTable.ColRange(a.name, Some(v), None))
-      case _ => Seq.empty
-    }
 }

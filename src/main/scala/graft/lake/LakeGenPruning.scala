@@ -5,12 +5,10 @@ import java.time.{Instant, LocalDate, LocalDateTime, ZoneOffset}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute,
   UnresolvedFunction}
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Cast,
-  EqualTo, Expression, GreaterThan, GreaterThanOrEqual, LessThan,
-  LessThanOrEqual, Literal, Substring}
-import org.apache.spark.sql.types.{ByteType, DataType, DateType,
-  IntegerType, LongType, ShortType, StringType, StructType,
-  TimestampNTZType, TimestampType}
+import org.apache.spark.sql.catalyst.expressions.{Attribute, Cast,
+  Expression, Literal, Substring}
+import org.apache.spark.sql.types.{DataType, DateType, IntegerType,
+  StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Partition-filter INFERENCE for generated partition columns — the
@@ -41,6 +39,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * Anything else infers nothing — inference is an OPTIMIZATION; rows
   * are still filtered exactly by the scan, so a missed inference is
   * never a correctness change (the same contract as stats pruning).
+  * The base-column bounds are the pushed filters' ranges from the
+  * lake's one predicate translator ([[LakeRanges.widening]], the same
+  * rules the file index prunes by), with raw DATE/TIMESTAMP values
+  * kept for the civil-time mapping below.
   *
   * TIMESTAMP bases are interpreted under the session timezone
   * (`spark.sql.session.timeZone`, captured when the inferencer is
@@ -238,69 +240,20 @@ private[lake] object LakeGenPruning {
     }
   }
 
-  /** Per-base-column (lo, hi) literal bounds from the filter
-    * conjuncts (strict bounds widened to inclusive — sound for
-    * pruning). Non-literal or OR'd shapes contribute nothing.
+  /** Per-base-column (lo, hi) bounds: the filters'
+    * [[LakeRanges.widening]] ranges with raw values (DATE days,
+    * TIMESTAMP micros), the tightest bound per side winning by
+    * [[LakeTable.cmp]] (the first kept when incomparable).
     */
   private def baseBounds(filters: Seq[Expression])
       : Map[String, (Option[Any], Option[Any])] = {
-    val acc = scala.collection.mutable.Map
-      .empty[String, (Option[Any], Option[Any])]
-    def add(col: String, lo: Option[Any], hi: Option[Any]): Unit = {
-      val (l0, h0) = acc.getOrElse(col, (None, None))
-      // tightest bounds win; mixed types can't happen (one column)
-      def maxOf(a: Option[Any], b: Option[Any]) =
-        (a ++ b).reduceOption((x, y) => if (cmpAny(x, y) >= 0) x else y)
-      def minOf(a: Option[Any], b: Option[Any]) =
-        (a ++ b).reduceOption((x, y) => if (cmpAny(x, y) <= 0) x else y)
-      acc(col) = (maxOf(l0, lo), minOf(h0, hi))
-    }
-    def value(l: Literal): Option[Any] = l.value match {
-      case null => None
-      case u: UTF8String => Some(u.toString)
-      case v => Some(v)
-    }
-    def walk(e: Expression): Unit = e match {
-      case And(l, r) => walk(l); walk(r)
-      case EqualTo(a: Attribute, l: Literal) =>
-        add(a.name, value(l), value(l))
-      case EqualTo(l: Literal, a: Attribute) =>
-        add(a.name, value(l), value(l))
-      case GreaterThan(a: Attribute, l: Literal) =>
-        add(a.name, value(l), None)
-      case GreaterThanOrEqual(a: Attribute, l: Literal) =>
-        add(a.name, value(l), None)
-      case LessThan(a: Attribute, l: Literal) =>
-        add(a.name, None, value(l))
-      case LessThanOrEqual(a: Attribute, l: Literal) =>
-        add(a.name, None, value(l))
-      case GreaterThan(l: Literal, a: Attribute) =>
-        add(a.name, None, value(l))
-      case GreaterThanOrEqual(l: Literal, a: Attribute) =>
-        add(a.name, None, value(l))
-      case LessThan(l: Literal, a: Attribute) =>
-        add(a.name, value(l), None)
-      case LessThanOrEqual(l: Literal, a: Attribute) =>
-        add(a.name, value(l), None)
-      // Cast(attr as <wider>) <op> lit: the analyzer often wraps the
-      // base; only the identity-preserving date<->string cases would
-      // be sound, and they don't reach here — skip
-      case _: Cast => ()
-      case _ => ()
-    }
-    filters.foreach(walk)
-    acc.toMap
-  }
-
-  private def cmpAny(a: Any, b: Any): Int = (a, b) match {
-    case (x: Int, y: Int)       => java.lang.Integer.compare(x, y)
-    case (x: Long, y: Long)     => java.lang.Long.compare(x, y)
-    // UTF-8 binary order — the order the stats comparator and Spark's
-    // min/max aggregates use (String.compareTo is UTF-16 order, which
-    // disagrees for supplementary-plane characters)
-    case (x: String, y: String) =>
-      UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
-    case _                      => 0 // incomparable: keep first
+    def tightest(vs: Seq[Any], keep: Int => Boolean): Option[Any] =
+      vs.reduceOption((x, y) => if (LakeTable.cmp(x, y).forall(keep)) x else y)
+    filters.flatMap(LakeRanges.widening(_, raw = true)).groupBy(_.column)
+      .map { case (c, rs) =>
+        c -> (tightest(rs.flatMap(_.lo), _ >= 0),
+          tightest(rs.flatMap(_.hi), _ <= 0))
+      }
   }
 
   /** A literal of the base column's type → the civil time it denotes

@@ -133,11 +133,13 @@ final class LakeMorExpansion(spark: SparkSession) extends Rule[LogicalPlan] {
         val (root, _) = lakeTarget(a.child).get
         LakeAddConstraintCommand(root, a.checkConstraint.name,
           a.checkConstraint.condition)
-      // range-shaped DELETEs keep the metadata-only SupportsDelete
-      // path; everything else becomes the general rewrite
+      // DELETEs whose predicate translates exactly keep the
+      // metadata-only SupportsDelete path (canDeleteWhere decides by
+      // the same LakeRanges.exact); everything else becomes the
+      // general rewrite
       case d: DeleteFromTable
           if d.resolved && lakeTarget(d.table).isDefined &&
-            LakeDml.strictRanges(d.condition).isEmpty =>
+            LakeRanges.exact(d.condition).isEmpty =>
         val (root, attrs) = lakeTarget(d.table).get
         LakeDeleteCommand(root, attrs, d.condition)
     }

@@ -56,13 +56,13 @@ private[lake] final class LakeMorRelation(spark: SparkSession,
           "spark.sql.extensions=graft.GraftSparkExtensions to splice " +
           "the native scan (and enable MOR DML, table_changes, " +
           "lake SQL statements).")
-    val ranges = filters.flatMap(LakeMorRelation.toRanges)
+    val ranges = LakeRanges.widening(filters)
       .filter(r => snap.statsCols.contains(r.column))
-    val pr = LakeTable.physRanges(ranges.toSeq, snap.colMap)
+    val pr = LakeTable.physRanges(ranges, snap.colMap)
     val kept = snap.files.filter(a =>
       pr.forall(r => LakeTable.mayMatch(a.stats, r)))
     val df = LakeTable.readAdds(spark, root, snap, kept)
-      .where(LakeTable.rangeFilter(ranges.toSeq))
+      .where(LakeTable.rangeFilter(ranges))
     df.select(requiredColumns.toSeq.map(col): _*).rdd
   }
 }
@@ -99,28 +99,4 @@ private[lake] object LakeMorRelation {
     */
   private[lake] val warnedRoots =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** `sources.Filter` → stats-prunable ranges (the data-source-API
-    * twin of [[LakeFileIndex.toRanges]], which walks Catalyst
-    * expressions instead). Untranslatable filters simply don't prune.
-    */
-  private def norm(v: Any): Option[Any] =
-    try Option(v).map(LakeTable.normalizeStat) catch {
-      case _: IllegalArgumentException => None
-    }
-
-  private[lake] def toRanges(f: Filter): Seq[LakeTable.ColRange] = f match {
-    case And(l, r) => toRanges(l) ++ toRanges(r)
-    case EqualTo(c, v) =>
-      norm(v).toSeq.map(x => LakeTable.ColRange(c, Some(x), Some(x)))
-    case GreaterThan(c, v) =>
-      norm(v).toSeq.map(x => LakeTable.ColRange(c, Some(x), None))
-    case GreaterThanOrEqual(c, v) =>
-      norm(v).toSeq.map(x => LakeTable.ColRange(c, Some(x), None))
-    case LessThan(c, v) =>
-      norm(v).toSeq.map(x => LakeTable.ColRange(c, None, Some(x)))
-    case LessThanOrEqual(c, v) =>
-      norm(v).toSeq.map(x => LakeTable.ColRange(c, None, Some(x)))
-    case _ => Seq.empty
-  }
 }

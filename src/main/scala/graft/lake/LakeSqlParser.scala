@@ -4,11 +4,8 @@ import scala.util.matching.Regex
 
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{FunctionIdentifier, TableIdentifier}
-import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-import org.apache.spark.sql.catalyst.expressions.{And => CAnd,
-  AttributeReference, EqualTo => CEq, Expression, GreaterThan => CGt,
-  GreaterThanOrEqual => CGe, LessThan => CLt, LessThanOrEqual => CLe,
-  Literal}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference,
+  Expression}
 import org.apache.spark.sql.catalyst.parser.{ParseException,
   ParserInterface}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
@@ -207,46 +204,14 @@ private[lake] object LakeSqlStatements {
         }
     }
 
-  /** STRICT unresolved-predicate → ranges for OPTIMIZE's WHERE (it
-    * selects files, so every conjunct must translate).
+  /** OPTIMIZE's WHERE → its [[LakeRanges.exact]] ranges (it selects
+    * files, so every conjunct must translate), or a loud refusal.
     */
-  private[lake] def whereRanges(e: Expression): Seq[LakeTable.ColRange] = {
-    def norm(l: Literal): Any = l.value match {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case v => LakeTable.normalizeStat(v)
-    }
-    def attr(x: Expression): Option[String] = x match {
-      case u: UnresolvedAttribute => Some(u.nameParts.last)
-      case a: AttributeReference => Some(a.name)
-      case _ => None
-    }
-    def one(c: Expression): Seq[LakeTable.ColRange] = c match {
-      case CAnd(l, r) => one(l) ++ one(r)
-      case CEq(a, l: Literal) if attr(a).nonEmpty =>
-        Seq(LakeTable.ColRange(attr(a).get, Some(norm(l)), Some(norm(l))))
-      case CGe(a, l: Literal) if attr(a).nonEmpty =>
-        Seq(LakeTable.ColRange(attr(a).get, Some(norm(l)), None))
-      case CLe(a, l: Literal) if attr(a).nonEmpty =>
-        Seq(LakeTable.ColRange(attr(a).get, None, Some(norm(l))))
-      // v±1 at the Long domain edge wraps — "> MaxValue" would become
-      // a match-ALL file selector; refuse like any other untranslatable
-      case CGt(a, Literal(v: Long, LongType))
-          if attr(a).nonEmpty && v != Long.MaxValue =>
-        Seq(LakeTable.ColRange(attr(a).get, Some(v + 1L), None))
-      case CLt(a, Literal(v: Long, LongType))
-          if attr(a).nonEmpty && v != Long.MinValue =>
-        Seq(LakeTable.ColRange(attr(a).get, None, Some(v - 1L)))
-      case CGt(a, Literal(v: Int, _)) if attr(a).nonEmpty =>
-        Seq(LakeTable.ColRange(attr(a).get, Some(v.toLong + 1L), None))
-      case CLt(a, Literal(v: Int, _)) if attr(a).nonEmpty =>
-        Seq(LakeTable.ColRange(attr(a).get, None, Some(v.toLong - 1L)))
-      case other => throw new IllegalArgumentException(
-        s"OPTIMIZE WHERE accepts column-vs-literal ranges only, got: " +
-          s"$other — it selects FILES, a dropped conjunct would widen " +
-          "the rewrite")
-    }
-    one(e)
-  }
+  private[lake] def whereRanges(e: Expression): Seq[LakeTable.ColRange] =
+    LakeRanges.exact(e).getOrElse(throw new IllegalArgumentException(
+      s"OPTIMIZE WHERE accepts column-vs-literal ranges only, got: " +
+        s"$e — it selects FILES, a dropped conjunct would widen " +
+        "the rewrite"))
 }
 
 /** `OPTIMIZE` — bin-pack small files (optionally only within a key

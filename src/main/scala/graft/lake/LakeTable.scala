@@ -1750,7 +1750,7 @@ object LakeTable {
     * (see [[utf8Cmp]]). Mixed number/string never compares (caller
     * treats as unprunable).
     */
-  private def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
+  private[lake] def cmp(a: Any, b: Any): Option[Int] = (a, b) match {
     case (x: String, y: String) => Some(utf8Cmp(x, y))
     case (x, y) =>
       // (class, value): class -1 / 0 / 1 / 2 for -Infinity / finite /

@@ -23,15 +23,10 @@ object SparkSuite {
     java.nio.file.Paths.get(graft.queries.PerFixture.scratch(kind))
 
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = SparkEntry.session(4)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .config("spark.sql.warehouse.dir",
         tempDir("graft_wh").toString)
-      .config("spark.sql.extensions", "graft.GraftSparkExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     // Task-level ERROR traces are redundant in local-mode tests:

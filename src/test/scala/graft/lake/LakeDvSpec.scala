@@ -265,6 +265,39 @@ class LakeDvSpec extends SparkSuite {
     assert(out.count() == 55)
   }
 
+  test("a change-feed stream restarted across a MOR delete emits the " +
+      "delete delta once and replays no insert") {
+    val root = freshRoot()
+    val ckpt = tempDir("graft_lakedv_ckpt").toString
+    LakeTable.create(spark, root, seed(0, 50), Seq("id"), nFiles = 1)
+    // (incarnation, change type, id) of every row a batch delivered;
+    // foreachBatch recovers from a checkpoint, the memory sink does not
+    val seen =
+      new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Long)]()
+    def run(incarnation: Int): Unit = {
+      val q = spark.readStream.format("graft-lake")
+        .option("readChangeFeed", "true").load(root)
+        .writeStream.option("checkpointLocation", ckpt)
+        .foreachBatch { (df: DataFrame, _: Long) =>
+          df.select("_change_type", "id").collect().foreach(r =>
+            seen.add((incarnation, r.getString(0), r.getLong(1))))
+        }.start()
+      try q.processAllAvailable() finally q.stop()
+    }
+    run(1)
+    LakeTable.deleteWhereMor(spark, root, range(0, 4))
+    run(2)
+    run(3)
+    import scala.jdk.CollectionConverters._
+    val rows = seen.asScala.toSeq
+    def of(incarnation: Int, kind: String): Seq[Long] =
+      rows.collect { case (`incarnation`, `kind`, id) => id }.sorted
+    assert(of(1, "insert") == (0L until 50L))
+    assert(of(2, "delete") == (0L until 5L), "the delete delta, once")
+    assert(of(2, "insert").isEmpty, "the restart must not replay inserts")
+    assert(rows.size == 55, s"nothing else, no third-run replay: $rows")
+  }
+
   test("deleteAt removes exactly the addressed rows; stale coords refuse") {
     import spark.implicits._
     val root = freshRoot()

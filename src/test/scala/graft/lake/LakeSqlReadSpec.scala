@@ -450,7 +450,7 @@ class LakeSqlReadSpec extends SparkSuite {
     import org.apache.spark.sql.catalyst.expressions.Literal
     val id = Symbol("id").long
     def one(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-      LakeFileIndex.toRanges(e)
+      LakeRanges.widening(e)
     assert(one(id === Literal(5L)) ==
       Seq(LakeTable.ColRange("id", Some(5L), Some(5L))))
     assert(one(id >= Literal(5L)) ==
