@@ -41,7 +41,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * directories. `CREATE TABLE` honors three table properties:
   * `statsCols` (comma list; default = every column of a
   * stats-supported type), `clusterBy` (a column, or the `z:`/`h:`
-  * curve specs [[LakeTable.zCluster]] emits), and `nFiles`.
+  * curve specs [[LakeTable.zCluster]] emits), and `nFiles`. The table
+  * keeps the first two; `nFiles` shapes the CREATE commit only (an
+  * `INSERT INTO` writes [[LakeTable.append]]'s default 4 files).
   *
   * Reads: `loadTable` pins a snapshot (and `VERSION AS OF` /
   * `TIMESTAMP AS OF` resolve through the log), then the

@@ -1,7 +1,9 @@
 package graft.lake
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
@@ -33,9 +35,9 @@ import LakeLog._
   *  - `merge` is SQL MERGE latest-wins: a keyed changelog of upserts
   *    ('U') and deletes ('D') with a monotone per-key version column
   *    resolves per key (ties: 'D' wins, matching
-  *    [[graft.operators.CdcMerge]]), then candidates = files whose key
-  *    range overlaps the changelog's [min,max] key — files outside the
-  *    range provably contain no changed key and are skipped;
+  *    [[graft.operators.CdcMerge]]), then candidates = files whose
+  *    [min,max] key range holds some changelog key — the others
+  *    provably contain no changed key and are skipped;
   *  - `compact`: bin-pack files smaller than a threshold into
   *    ~target-sized files as a normal rewrite commit — readers never
   *    see a half-compacted table (contrast
@@ -1155,6 +1157,66 @@ object LakeTable {
     else spark.read.schema(dvSchema)
       .parquet(dvPaths.distinct.map(p => new Path(root, p).toString): _*)
 
+  /** Fold `df`'s rows task-side into one partial per task, then merge
+    * the partials on the driver: one job and no exchange, where a
+    * `distinct()`/`groupBy().count()` + `collect()` shuffles first.
+    * For metadata bounded by the FILE count (touched files, per-file
+    * DV counts), whatever the row count. `add` sees Spark's reused
+    * `InternalRow`s and copies what it keeps.
+    */
+  private def foldRows[P: scala.reflect.ClassTag](df: DataFrame, zero: => P)(
+      add: (P, InternalRow) => P)(merge: (P, P) => P): P = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("lake fold")) {
+      qe.toRdd.mapPartitions(rows => Iterator.single(rows.foldLeft(zero)(add)))
+        .collect()
+    }.reduceOption(merge).getOrElse(zero)
+  }
+
+  /** Row count per value of `df`'s one string column (NULL kept). */
+  private def fileCounts(df: DataFrame): Map[String, Long] =
+    foldRows(df, scala.collection.mutable.HashMap.empty[String, Long]) {
+      (m, r) =>
+        val k = if (r.isNullAt(0)) null else r.getUTF8String(0).toString
+        m(k) = m.getOrElse(k, 0L) + 1L
+        m
+    } { (a, b) => b.foreach { case (k, n) => a(k) = a.getOrElse(k, 0L) + n }; a }
+      .toMap
+
+  /** The merge-on-read commit: write `positions` (`file`, `pos`: the
+    * new dead rows of `files` plus the ones they already carry) as ONE
+    * fresh sidecar, take per-file counts from its KB-sized read-back,
+    * and re-point each file whose count grew at the sidecar, so a file
+    * always references exactly one DV dataset. The commit guards the
+    * exact Add (stats + DV) of every re-pointed file: a racing rewrite
+    * or MOR delete conflicts loudly instead of losing deletions. A
+    * file whose victims were all dead already keeps its Add; when no
+    * file grew nothing commits (the sidecar is garbage for vacuum).
+    */
+  private def commitDv(spark: SparkSession, f: FileSystem, rootP: Path,
+                       snap: LakeLog.Snapshot, files: Seq[Add],
+                       positions: DataFrame): RewriteReport = {
+    val dvSub = s"dv/${java.util.UUID.randomUUID()}"
+    val dvDir = new Path(rootP, dvSub).toString
+    positions.repartition(math.max(1, files.size / 8)).write.parquet(dvDir)
+    val counts =
+      fileCounts(spark.read.schema(dvSchema).parquet(dvDir).select("file"))
+    val depth = idDepth(snap.partitionBy)
+    val grown = files.flatMap { a =>
+      val total = counts.getOrElse(fileId(rootP, a.path, depth), 0L)
+      if (total > a.dv.map(_.rows).getOrElse(0L))
+        Some(a -> a.copy(dv = Some(Dv(dvSub, total))))
+      else None
+    }
+    if (grown.isEmpty)
+      return RewriteReport(snap.version, 0, 0, snap.files.size)
+    val v = LakeLog.commit(f, rootP,
+      (Meta("mordelete", snap.schemaDdl, snap.statsCols, None, None,
+        now()) +: LakeLog.Feature("deletion-vectors") +: grown.map(_._2)),
+      guardFiles = grown.map(_._1), baseVersion = snap.version)
+    RewriteReport(v, grown.size, grown.size, snap.files.size - grown.size)
+  }
+
   /** The live rows of `files` under `view`'s logical schema: the one
     * read every snapshot, change-feed, DML, stream-batch and staged
     * epoch read plans through. Each scan is a [[fileRelation]] with
@@ -1226,9 +1288,9 @@ object LakeTable {
     * the prior positions forward into the new sidecar, so a file
     * always references exactly ONE DV dataset. Positions are computed
     * over LIVE rows only (already-deleted positions never recount).
-    * Concurrency: the commit guards the exact Add (stats + DV) of
-    * every re-pointed file — racing rewrites or MOR deletes conflict
-    * loudly instead of losing deletions.
+    * One candidate scan in total: new and carried-forward positions go
+    * straight into the sidecar, and [[commitDv]] folds the per-file
+    * counts from its read-back, guarding every re-pointed file.
     */
   def deleteWhereMor(spark: SparkSession, root: String,
                      ranges: Seq[ColRange]): RewriteReport = {
@@ -1249,28 +1311,7 @@ object LakeTable {
     val newDel = readAdds(spark, rootP, snap, cands, withPos = true)
       .where(rangeFilter(ranges))
       .select(col("__file").as("file"), col("__pos").as("pos"))
-    // one candidate scan total: write new + carried-forward positions
-    // first, then read the KB-sized sidecar back for per-file counts
-    val dvSub = s"dv/${java.util.UUID.randomUUID()}"
-    val dvDir = new Path(rootP, dvSub).toString
-    newDel.unionByName(oldDels)
-      .repartition(math.max(1, cands.size / 8)).write.parquet(dvDir)
-    val counts = spark.read.schema(dvSchema).parquet(dvDir)
-      .groupBy("file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val touched = cands.filter(a =>
-      counts.getOrElse(fileId(rootP, a.path, depth), 0L) >
-        a.dv.map(_.rows).getOrElse(0L))
-    if (touched.isEmpty) // no live row matched; sidecar garbage → vacuum
-      return RewriteReport(snap.version, 0, 0, snap.files.size)
-    val readds = touched.map(a =>
-      a.copy(dv = Some(Dv(dvSub, counts(fileId(rootP, a.path, depth))))))
-    val v = LakeLog.commit(f, rootP,
-      (Meta("mordelete", snap.schemaDdl, snap.statsCols, None, None,
-        now()) +: LakeLog.Feature("deletion-vectors") +: readds),
-      guardFiles = touched, baseVersion = snap.version)
-    RewriteReport(v, touched.size, readds.size,
-      snap.files.size - touched.size)
+    commitDv(spark, f, rootP, snap, cands, newDel.unionByName(oldDels))
   }
 
   /** Live rows plus their `(__file, __pos)` coordinates — the
@@ -1374,8 +1415,10 @@ object LakeTable {
     * KB-sized sidecar commit, no data rewritten. Victim coordinates
     * pointing at unknown files fail loudly (stale snapshot);
     * already-dead positions are dropped, never double-counted. The
-    * commit guards the exact Add of every re-pointed file, so a
-    * racing rewrite aborts this delete instead of losing it.
+    * victims' file set folds task-side (no `distinct` shuffle); the
+    * sidecar write, counts and guarded commit are [[commitDv]]'s, so a
+    * racing rewrite of a re-pointed file aborts this delete instead of
+    * losing it.
     */
   def deleteAt(spark: SparkSession, root: String,
                victims: DataFrame): RewriteReport = {
@@ -1390,8 +1433,7 @@ object LakeTable {
     val vRows = victims
       .select(col("__file").as("file"), col("__pos").as("pos"))
       .distinct()
-    val victimFiles = vRows.select("file").distinct().collect()
-      .map(_.getString(0)).toSet
+    val victimFiles = fileCounts(victims.select(col("__file"))).keySet
     if (victimFiles.isEmpty)
       return RewriteReport(snap.version, 0, 0, snap.files.size)
     val depth = idDepth(snap.partitionBy)
@@ -1403,30 +1445,10 @@ object LakeTable {
     val touched = victimFiles.toSeq.sorted.map(byId)
     val carried = readDvRows(spark, rootP, touched.flatMap(_.dv).map(_.path))
       .where(col("file").isin(victimFiles.toSeq: _*))
-    val dvSub = s"dv/${java.util.UUID.randomUUID()}"
-    val dvDir = new Path(rootP, dvSub).toString
     // already-dead coordinates cancel against the carried positions,
     // so cumulative per-file counts stay exact for any caller input
-    vRows.exceptAll(carried).unionByName(carried)
-      .repartition(math.max(1, touched.size / 8)).write.parquet(dvDir)
-    val counts = spark.read.schema(dvSchema).parquet(dvDir)
-      .groupBy("file").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val readds = touched.flatMap { a =>
-      val id = fileId(rootP, a.path, depth)
-      val total = counts.getOrElse(id, 0L)
-      if (total > a.dv.map(_.rows).getOrElse(0L))
-        Some(a.copy(dv = Some(Dv(dvSub, total))))
-      else None // every victim was already dead: nothing to re-point
-    }
-    if (readds.isEmpty)
-      return RewriteReport(snap.version, 0, 0, snap.files.size)
-    val v = LakeLog.commit(f, rootP,
-      (Meta("mordelete", snap.schemaDdl, snap.statsCols, None, None,
-        now()) +: LakeLog.Feature("deletion-vectors") +: readds),
-      guardFiles = touched, baseVersion = snap.version)
-    RewriteReport(v, readds.size, readds.size,
-      snap.files.size - readds.size)
+    commitDv(spark, f, rootP, snap, touched,
+      vRows.exceptAll(carried).unionByName(carried))
   }
 
   /** Deduplicate the TABLE IN PLACE: for each group of rows sharing
@@ -1820,75 +1842,82 @@ object LakeTable {
     out.toSeq
   }
 
-  /** Partition `files` into (candidates, untouched) for a changelog
-    * whose distinct keys are `changedKeys`: a file is a candidate iff
-    * some key stabs its [min,max] `keyCol` range (files without key
-    * stats are always candidates). One distributed pass over the keys,
-    * each binary-searched against the task-broadcast sorted range
-    * index; the collected result is bounded by the FILE count, never
-    * the key count. Third element: whether the changelog had any key
-    * at all (false ⇒ a guaranteed no-op merge).
+  /** Partition `files` into (candidates, untouched) for the changelog
+    * `changes`: a file is a candidate iff some changelog key stabs its
+    * [min,max] `keyCol` range (files without key stats are always
+    * candidates). Every changelog row's key is binary-searched against
+    * the task-broadcast sorted range index; the winner window yields
+    * one row per changelog key, so stabbing the raw rows selects the
+    * same files without computing it. Each task folds its matches into
+    * a bitset over the file count ([[foldRows]]: one job, no exchange),
+    * with a flag for whether it saw any row — the third element: false
+    * ⇒ an empty changelog, a guaranteed no-op merge.
     */
   private def touchedFiles(spark: SparkSession, files: Seq[Add],
                            keyCol: String, keyType: DataType,
-                           changedKeys: DataFrame,
+                           changes: DataFrame,
                            statsKey: String): (Seq[Add], Seq[Add], Boolean) = {
     val (statted, unstatted) = files.partition(a =>
       a.stats.min.contains(statsKey) && a.stats.max.contains(statsKey))
 
+    // (files hit, any row seen) over the changelog's key column
+    def fold(key: Column, hits: InternalRow => Seq[Int])
+        : (java.util.BitSet, Boolean) =
+      foldRows(changes.select(key), (new java.util.BitSet, false)) {
+        case ((bits, _), r) =>
+          if (!r.isNullAt(0)) hits(r).foreach(bits.set)
+          (bits, true)
+      } { case ((a, sa), (b, sb)) => a.or(b); (a, sa || sb) }
+
     // The sorted range index ships to executors as a BROADCAST, never
-    // a UDF closure: at 10^6 files the three arrays are ~24 MB, and a
+    // a task closure: at 10^6 files the three arrays are ~24 MB, and a
     // closure-captured copy would serialize with EVERY task of every
     // batch, while a broadcast moves once per executor and is
-    // torrent-distributed. The udf captures only the broadcast handle.
-    def run[T: scala.reflect.ClassTag](ord: Ordering[T], toT: Any => T,
-               mkUdf: org.apache.spark.broadcast.Broadcast[
-                 (Array[T], Array[T], Array[T])] => Column): Set[Int] = {
+    // torrent-distributed. The tasks capture only the broadcast handle.
+    def run[T: scala.reflect.ClassTag](ord: Ordering[T], key: Column,
+                                       keys: InternalRow => Seq[T])
+        : (Set[Int], Boolean) = {
       implicit val o: Ordering[T] = ord
-      val order = statted.indices
-        .sortBy(i => toT(statted(i).stats.min(statsKey)))
-      val mins = order.map(i => toT(statted(i).stats.min(statsKey))).toArray
-      val maxs = order.map(i => toT(statted(i).stats.max(statsKey))).toArray
+      def stat(m: Map[String, Any]): T = m(statsKey).asInstanceOf[T]
+      val order = statted.indices.sortBy(i => stat(statted(i).stats.min))
+      val mins = order.map(i => stat(statted(i).stats.min)).toArray
+      val maxs = order.map(i => stat(statted(i).stats.max)).toArray
       val pref = maxs.clone()
       (1 until pref.length).foreach { i =>
         if (ord.lt(pref(i), pref(i - 1))) pref(i) = pref(i - 1)
       }
       val bc = spark.sparkContext.broadcast((mins, maxs, pref))
-      val matched =
-        try changedKeys
-          .select(explode(mkUdf(bc)).as("__i"))
-          .distinct().collect().map(_.getInt(0))
+      val (bits, sawRow) =
+        try fold(key, r => {
+          val (mn, mx, pf) = bc.value
+          keys(r).flatMap(stab(mn, mx, pf, _)(ord))
+        })
         finally bc.destroy()
-      matched.map(order).toSet
+      (bits.stream().toArray.map(order).toSet, sawRow)
     }
 
-    val touched: Set[Int] =
-      if (statted.isEmpty) Set.empty
+    val (touched, hasKeys) =
+      if (statted.isEmpty) (Set.empty[Int], fold(col(keyCol), _ => Nil)._2)
       else keyType match {
         case ByteType | ShortType | IntegerType | LongType =>
-          run[Long](Ordering.Long, v => v.asInstanceOf[Long],
-            bc => udf((k: Long) => {
-              val (mn, mx, pf) = bc.value; stab(mn, mx, pf, k)
-            }).apply(col(keyCol).cast(LongType)))
+          run[Long](Ordering.Long, col(keyCol).cast(LongType),
+            r => Seq(r.getLong(0)))
         case FloatType | DoubleType =>
+          // the anti-join ties -0.0 to 0.0; the stats order does not
           run[Double](Ordering.Double.TotalOrdering,
-            v => v.asInstanceOf[Double],
-            bc => udf((k: Double) => {
-              val (mn, mx, pf) = bc.value; stab(mn, mx, pf, k)
-            }).apply(col(keyCol).cast(DoubleType)))
+            col(keyCol).cast(DoubleType), r => {
+              val k = r.getDouble(0)
+              if (k == 0.0) Seq(0.0, -0.0) else Seq(k)
+            })
         case StringType =>
           // stats were written in UTF-8 byte order — stab with the
           // same order, or non-BMP keys could miss their files
-          run[String](utf8Ordering, v => v.asInstanceOf[String],
-            bc => udf((k: String) => {
-              val (mn, mx, pf) = bc.value
-              stab(mn, mx, pf, k)(utf8Ordering)
-            }).apply(col(keyCol)))
+          run[String](utf8Ordering, col(keyCol),
+            r => Seq(r.getUTF8String(0).toString))
         case dt => throw new IllegalArgumentException(
           s"merge key '$keyCol' has unsupported type $dt")
       }
 
-    val hasKeys = touched.nonEmpty || !changedKeys.isEmpty
     val cands = statted.zipWithIndex.collect {
       case (a, i) if touched(i) => a
     } ++ (if (hasKeys) unstatted else Nil)
@@ -1960,7 +1989,8 @@ object LakeTable {
     * 'D' delete). Per key the highest version wins; version ties
     * resolve to 'D' (the conservative reading, same rule as
     * [[graft.operators.CdcMerge]]). Candidate files are selected by
-    * PER-FILE key membership: every changelog key is binary-searched
+    * PER-FILE key membership ([[touchedFiles]], one job with no
+    * exchange): every changelog key is binary-searched
     * against the (broadcast) sorted per-file [min,max] key ranges —
     * O(|changes|·log|files|) work, interval-stab via sorted starts +
     * running max — so a file is rewritten only when some changed key
@@ -1991,21 +2021,24 @@ object LakeTable {
     val upserts = winners.where(col(opCol) =!= lit("D"))
       .select(tableCols.map(col): _*)
     enforceConstraints(upserts, snap.constraints, "merge upsert")
-    val changedKeys = winners.select(col(keyCol)).distinct()
 
     val keyType = StructType.fromDDL(snap.schemaDdl)
       .find(_.name == keyCol).map(_.dataType).getOrElse(
         throw new IllegalArgumentException(s"merge key '$keyCol' not in schema"))
     val (cands, untouched, hasKeys) =
-      touchedFiles(spark, snap.files, keyCol, keyType, changedKeys,
+      touchedFiles(spark, snap.files, keyCol, keyType, changes,
         snap.colMap.getOrElse(keyCol, keyCol))
     if (!hasKeys)
       return RewriteReport(snap.version, 0, 0, snap.files.size)
 
     val base = readAdds(spark, rootP, snap, cands)
-    // broadcast the changed-key set: a daily changelog is dwarfed by
-    // the base table, and the anti join then never shuffles the base
-    val merged0 = base.join(broadcast(changedKeys), Seq(keyCol), "left_anti")
+    // broadcast the changelog's keys: a daily changelog is dwarfed by
+    // the base table, and the anti join then never shuffles the base.
+    // Raw keys, not the winners': a left-anti join drops the same rows
+    // when its build side repeats a key, and a NULL key matches
+    // nothing either way — so that side needs no window or distinct
+    val merged0 = base
+      .join(broadcast(changes.select(col(keyCol))), Seq(keyCol), "left_anti")
       .unionByName(upserts)
     // rewrite-mode semantics: surviving rows keep their identity
     // values, changelog inserts with null ids allocate past the

@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,6 +14,26 @@ trait SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.session
   def sf(dir: String): String = s"/root/testdata/$dir"
   def tempDir(kind: String): java.nio.file.Path = SparkSuite.tempDir(kind)
+
+  /** Spark jobs started while `body` runs (listener events are async:
+    * settle-poll until the count is stable). Suites run sequentially
+    * in the forked test JVM, so the count is this body's alone.
+    */
+  def jobsDuring(body: => Any): Int = {
+    val jobs = new AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    try {
+      body
+      var prev = -1
+      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
+      jobs.get
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
 }
 
 object SparkSuite {

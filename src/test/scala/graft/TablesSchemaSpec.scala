@@ -1,13 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopOutputFile
 import org.apache.parquet.schema.MessageTypeParser
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -20,25 +18,6 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * counts only this suite's jobs.
   */
 class TablesSchemaSpec extends SparkSuite {
-
-  /** Spark jobs started while `body` runs (listener events are async:
-    * settle-poll until the count is stable).
-    */
-  private def jobsDuring(body: => Any): Int = {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   private def tmp(): Path = tempDir("t")
 

@@ -1,9 +1,6 @@
 package graft.lake
 
-import java.util.concurrent.atomic.AtomicInteger
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -22,25 +19,6 @@ class LakeWriterSpec extends SparkSuite {
 
   private def freshRoot(): String =
     tempDir("t").resolve("tbl").toString
-
-  /** Spark jobs started while `body` runs (listener events are async:
-    * settle-poll until the count is stable).
-    */
-  private def jobsDuring(body: => Any): Int = {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      body
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      jobs.get
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
 
   /** An Add as the log stores it: stats go through the same JSON round
     * trip the snapshot's do, so both sides of a comparison share it.
