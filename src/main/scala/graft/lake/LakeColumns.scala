@@ -448,20 +448,4 @@ object LakeColumns {
     (out, IdentityAllocation(allocated,
       if (allocated.isEmpty) Map.empty else identityHwm))
   }
-
-  /** UPDATE/MERGE assignment guard: SET on an identity column, or a
-    * SET that disagrees with a generated column's expression, is
-    * refused at plan time by the DML rewriters via this helper.
-    */
-  def forbidAssignment(specs: Map[String, ColSpec], col: String,
-                       op: String): Unit =
-    specs.get(col).foreach { cs =>
-      if (cs.kind == KindIdentity)
-        throw new UnsupportedOperationException(
-          s"$op may not assign IDENTITY column '$col'")
-      if (cs.kind == KindGenerated)
-        throw new UnsupportedOperationException(
-          s"$op may not assign GENERATED column '$col' — it is computed " +
-            s"as ${cs.spec("expr")}")
-    }
 }

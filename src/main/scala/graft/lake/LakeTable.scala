@@ -1415,9 +1415,10 @@ object LakeTable {
     * KB-sized sidecar commit, no data rewritten. Victim coordinates
     * pointing at unknown files fail loudly (stale snapshot);
     * already-dead positions are dropped, never double-counted. The
-    * victims' file set folds task-side (no `distinct` shuffle); the
-    * sidecar write, counts and guarded commit are [[commitDv]]'s, so a
-    * racing rewrite of a re-pointed file aborts this delete instead of
+    * victims are evaluated once: their file set folds task-side from
+    * the materialized coordinates (no `distinct` shuffle); the sidecar
+    * write, counts and guarded commit are [[commitDv]]'s, so a racing
+    * rewrite of a re-pointed file aborts this delete instead of
     * losing it.
     */
   def deleteAt(spark: SparkSession, root: String,
@@ -1429,11 +1430,13 @@ object LakeTable {
     val snap = LakeLog.snapshot(f, rootP, None)
     // dedupe caller coordinates: a victim passed twice must count
     // once, both against Dv.rows and in the change feed (exceptAll/
-    // unionByName below are multiset ops, so duplicates would survive)
+    // unionByName below are multiset ops, so duplicates would survive);
+    // materialized once for the file fold and the sidecar write
     val vRows = victims
       .select(col("__file").as("file"), col("__pos").as("pos"))
       .distinct()
-    val victimFiles = fileCounts(victims.select(col("__file"))).keySet
+      .localCheckpoint(eager = false)
+    val victimFiles = fileCounts(vRows.select(col("file"))).keySet
     if (victimFiles.isEmpty)
       return RewriteReport(snap.version, 0, 0, snap.files.size)
     val depth = idDepth(snap.partitionBy)

@@ -106,8 +106,7 @@ object MinHashLSH {
     *   known cliff #2): a pathological corpus where huge sets of
     *   documents share a band signature (boilerplate-dominated crawls)
     *   makes candidate pairs quadratic in bucket size. Buckets holding
-    *   more than `maxBucket` ids are SPLIT, not dropped (round-13
-    *   upgrade — the old behavior lost every pair inside them):
+    *   more than `maxBucket` ids are SPLIT, not dropped:
     *    - rows with IDENTICAL full signatures are connected by a
     *      min-id STAR (linear edges; transitive closure recovers the
     *      clique, and a boilerplate flood is exactly this case —
@@ -119,8 +118,9 @@ object MinHashLSH {
     *      linear in the bucket).
     *   Residual recall loss is only for DISTINCT-signature pairs that
     *   land in different sub-buckets AND agree on no other band; the
-    *   split is logged loudly. Default None preserves exact banding
-    *   semantics (and exact pair enumeration).
+    *   split posts a `split` [[BucketCapEvent]] with the hot-bucket
+    *   count. Default None preserves exact banding semantics (and
+    *   exact pair enumeration).
     */
   def candidatePairs(df: DataFrame, idCol: String, textCol: String, p: Params = Params(),
                      maxBucket: Option[Long] = None): DataFrame = {
@@ -131,21 +131,11 @@ object MinHashLSH {
           keys.map(k => col(s"l.$k") === col(s"r.$k"))
             .reduce(_ && _) && col(s"l.$id") < col(s"r.$id"))
         .select(col(s"l.$id").as("a"), col(s"r.$id").as("b"))
-    maxBucket match {
+    HotSplit.hot(banded, Seq("band", "key"), maxBucket,
+        "MinHashLSH.candidatePairs") match {
       case None =>
         selfJoin(banded, Seq("band", "key"), idCol).distinct()
-      case Some(cap) =>
-        val oversized = banded.groupBy("band", "key")
-          .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-          .localCheckpoint(eager = false) // read by the count + both joins
-        val nOver = oversized.count() // eager by design: the split must be LOUD
-        if (nOver == 0)
-          return selfJoin(banded, Seq("band", "key"), idCol).distinct()
-        System.err.println(
-          s"[graft] MinHashLSH.candidatePairs: splitting $nOver bucket(s) larger " +
-            s"than $cap ids — identical-signature groups keep star connectivity; " +
-            "distinct-signature pairs may land in different sub-buckets " +
-            "(bounded residual recall loss, was total loss before round 13)")
+      case Some((cap, oversized)) =>
         val cold = banded
           .join(oversized.select("band", "key"), Seq("band", "key"), "left_anti")
         val coldPairs = selfJoin(cold, Seq("band", "key"), idCol)
@@ -255,8 +245,9 @@ object SimHash {
     *   a 16-bit band makes the band self-join quadratic in bucket
     *   size. With a cap, buckets holding more than `maxBucket` ids are
     *   EXCLUDED from the self-join — their pairs are lost, and the
-    *   recall loss is explicit: the dropped-bucket count is logged
-    *   loudly. Default None preserves exact band semantics.
+    *   recall loss is explicit: the action that runs the pairs posts a
+    *   `drop` [[BucketCapEvent]] with the dropped-bucket count. Default
+    *   None preserves exact band semantics.
     */
   def pairs(df: DataFrame, idCol: String, textCol: String, maxHamming: Int,
             maxBucket: Option[Long] = None): DataFrame = {
@@ -277,8 +268,8 @@ object HammingBands {
 
   /** Near-duplicate id pairs (a, b, hamming) with hamming <=
     * `maxHamming`, from `hashed(idCol, hashCol: BIGINT)`.
-    * `maxBucket` is the loud per-bucket candidate cap (SCALE.md
-    * cliff #2), same contract as [[MinHashLSH.candidatePairs]].
+    * `maxBucket` is the per-bucket candidate cap (SCALE.md cliff #2)
+    * with [[SimHash.pairs]]' drop contract, reported under `caller`.
     */
   def pairs64(hashed: DataFrame, idCol: String, hashCol: String,
               maxHamming: Int, maxBucket: Option[Long] = None,
@@ -296,19 +287,8 @@ object HammingBands {
           .as("bk"))
       .select(col(idCol), col("sh"), col("bk.band").as("band"), col("bk.key").as("key"))
       .localCheckpoint(eager = false) // read by both sides of the self-join
-    val capped = maxBucket match {
-      case None => banded
-      case Some(cap) =>
-        val oversized = banded.groupBy("band", "key")
-          .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-          .select("band", "key")
-          .localCheckpoint(eager = false) // read by the count + the anti-join
-        val nOver = oversized.count() // eager by design: truncation must be LOUD
-        if (nOver > 0) System.err.println(
-          s"[graft] $caller: dropping $nOver bucket(s) larger than " +
-            s"$cap ids — near-dup pairs inside them are NOT reported (recall loss)")
-        banded.join(oversized, Seq("band", "key"), "left_anti")
-    }
+    val capped = maxBucket.fold(banded)(
+      HotSplit.dropOversized(banded, Seq("band", "key"), _, caller))
     capped.as("l").join(capped.as("r"),
         col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
           col(s"l.$idCol") < col(s"r.$idCol"))

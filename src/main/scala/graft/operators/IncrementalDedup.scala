@@ -78,7 +78,8 @@ object IncrementalDedup {
     *
     * Same candidate discipline as [[filterNew]]: exact check is a
     * hash-only semi-join, near-dup candidates come from the band
-    * equi-join with the loud `maxBucket` cap on the primary side.
+    * equi-join with the `maxBucket` cap on the primary side (a `drop`
+    * [[BucketCapEvent]]: near-dups hiding in dropped buckets are KEPT).
     */
   def compact(primary: DataFrame, secondary: DataFrame, idCol: String,
               minAgree: Int, p: MinHashLSH.Params = MinHashLSH.Params(),
@@ -94,19 +95,8 @@ object IncrementalDedup {
       val banded = MinHashLSH.bandKeys(
         primary.where(col("sig").isNotNull).select(col(idCol), col("sig")),
         idCol, p)
-      maxBucket match {
-        case None => banded
-        case Some(cap) =>
-          val oversized = banded.groupBy("band", "key")
-            .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-            .select("band", "key")
-            .localCheckpoint(eager = false)
-          val nOver = oversized.count() // eager by design: truncation must be LOUD
-          if (nOver > 0) System.err.println(
-            s"[graft] IncrementalDedup.compact: dropping $nOver primary bucket(s) " +
-              s"larger than $cap ids — near-dups hiding in them are KEPT (recall loss)")
-          banded.join(oversized, Seq("band", "key"), "left_anti")
-      }
+      maxBucket.fold(banded)(HotSplit.dropOversized(banded,
+        Seq("band", "key"), _, "IncrementalDedup.compact"))
     }
     val sBands = MinHashLSH.bandKeys(
       sec.where(col("sig").isNotNull).select(col(idCol), col("sig")), idCol, p)
@@ -132,9 +122,11 @@ object IncrementalDedup {
     *
     * @param minAgree integer agreement threshold out of
     *   `p.numHashes` signature components (e.g. 45/64 ≈ Jaccard 0.7)
-    * @param maxBucket loud per-band-bucket cap on the INDEX side
-    *   (SCALE.md cliff #2 — boilerplate mega-clusters in the corpus
-    *   flood a band bucket; batch-side buckets are batch-bounded)
+    * @param maxBucket per-band-bucket cap on the INDEX side (SCALE.md
+    *   cliff #2 — boilerplate mega-clusters in the corpus flood a band
+    *   bucket; batch-side buckets are batch-bounded): near-dups hiding
+    *   in dropped buckets are ADMITTED, reported as a `drop`
+    *   [[BucketCapEvent]]
     */
   def filterNew(batch: DataFrame, idCol: String, textCol: String,
                 index: DataFrame, minAgree: Int,
@@ -151,19 +143,8 @@ object IncrementalDedup {
       val banded = MinHashLSH.bandKeys(
         index.where(col("sig").isNotNull).select(col(idCol), col("sig")),
         idCol, p)
-      maxBucket match {
-        case None => banded
-        case Some(cap) =>
-          val oversized = banded.groupBy("band", "key")
-            .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-            .select("band", "key")
-            .localCheckpoint(eager = false)
-          val nOver = oversized.count() // eager by design: truncation must be LOUD
-          if (nOver > 0) System.err.println(
-            s"[graft] IncrementalDedup.filterNew: dropping $nOver index bucket(s) " +
-              s"larger than $cap ids — near-dups hiding in them are ADMITTED (recall loss)")
-          banded.join(oversized, Seq("band", "key"), "left_anti")
-      }
+      maxBucket.fold(banded)(HotSplit.dropOversized(banded,
+        Seq("band", "key"), _, "IncrementalDedup.filterNew"))
     }
     val bBands = MinHashLSH.bandKeys(
       bIdx.where(col("sig").isNotNull).select(col(idCol), col("sig")), idCol, p)

@@ -65,17 +65,12 @@ object IvfAnn {
       s"maxTrainPerCentroid must be >= the 64-point floor, got $maxTrainPerCentroid")
   }
 
-  /** Task count every Lloyd iteration runs at — sized to the TRAINING
-    * SAMPLE's row volume (~[[trainRowsPerPartition]] rows per task,
-    * capped at min(cores, 32)), NEVER the corpus's input-split count
-    * (pinned by IvfAnnSpec's marginal-task budget). The sample is
-    * bounded by maxTrainPerCentroid·k regardless of corpus size, so at
-    * test SF this is 1 task per Lloyd stage (a few hundred rows spread
-    * over 32 partitions was pure scheduling overhead — ~60 ms/task
-    * floor × iterations × stages) and at the 256k-row cap it is the
-    * full environment parallelism. Centroids are partitioning-
-    * independent (exact decimal sums — IvfAnnSpec), so this changes
-    * scheduling only, never a result bit.
+  /** Task count every Lloyd iteration runs at: ~[[trainRowsPerPartition]]
+    * sample rows per task, capped at min(cores, 32), NEVER the corpus's
+    * input-split count (one mostly empty task per corpus split per
+    * iteration is jitter at test SF and a full fan-in at 100 TB; pinned
+    * by IvfAnnSpec's marginal-task budget). Centroids are exact decimal
+    * sums, so this changes scheduling only, never a result bit.
     */
   private[operators] val trainRowsPerPartition = 8192L
   private[operators] def trainPartitions(
@@ -83,6 +78,42 @@ object IvfAnn {
     val envCap = math.max(1, math.min(32, spark.sparkContext.defaultParallelism))
     val byRows = math.ceil(sampleRows.toDouble / trainRowsPerPartition).toInt
     math.max(1, math.min(envCap, byRows))
+  }
+
+  /** The k-means training sample of `all` (`id` + vectors), shared by
+    * [[fitCentroids]] and [[PqAnn.fitCodebooksOn]]: the deterministic
+    * `fraction` hash-sample bracketed between ~64 points per centroid
+    * (the IVF training floor; tiny corpora train on everything) and
+    * `maxTrainPerCentroid`, so a fit at fixed k costs the same at any
+    * corpus size. The cap gate is a SUBSET of the fraction gate
+    * (hashGate is monotone), so capping never reshuffles membership.
+    * One cheap count job per fit; the sample is pinned onto
+    * [[trainPartitions]] for its Lloyd rows (`rowsPerPoint` per point:
+    * PQ explodes each into m subvectors) and checkpointed lazily.
+    */
+  private[operators] def trainingSample(all: DataFrame, fraction: Double,
+                                        k: Int, maxTrainPerCentroid: Int,
+                                        rowsPerPoint: Int): DataFrame = {
+    val sampled =
+      if (fraction >= 1.0) all
+      else all.where(Sampling.hashGate(col("id"), fraction))
+    val n = sampled.count()
+    val capRows = maxTrainPerCentroid.toLong * k
+    val tiny = !(sampled eq all) && n < 64L * k
+    val chosen =
+      if (tiny) all
+      else if (n > capRows) {
+        val f0 = if (sampled eq all) 1.0 else fraction
+        all.where(Sampling.hashGate(col("id"), f0 * capRows.toDouble / n))
+      } else sampled
+    // rows the chosen frame will actually hold: the capped gate lands
+    // ~capRows; the tiny-corpus fallback to `all` is ~n/fraction (n
+    // was the fraction's yield)
+    val chosenRows =
+      if (tiny) math.ceil(n / fraction).toLong else math.min(n, capRows)
+    chosen.repartition(trainPartitions(all.sparkSession,
+        chosenRows * rowsPerPoint))
+      .localCheckpoint(eager = false) // one materialization, reused per iteration
   }
 
   /** score of assigning vector v to centroid c under L2:
@@ -106,56 +137,16 @@ object IvfAnn {
   /** Lloyd's k-means over a deterministic hash-sample of the corpus;
     * returns k centroids (driver-side metadata).
     *
-    * Training cost: one bounded sample materialization
-    * (localCheckpoint) + `iterations` passes over the SAMPLE — not the
-    * full corpus — plus a (cell, dim)-keyed partial-aggregated shuffle
-    * of k x dim sums per pass. The sample-size probe (`count`) is one
-    * cheap aggregate job, paid once per fit.
+    * Training cost: one bounded [[trainingSample]] + `iterations`
+    * passes over the SAMPLE — not the full corpus — plus a (cell,
+    * dim)-keyed partial-aggregated shuffle of k x dim sums per pass.
     */
   def fitCentroids(corpus: DataFrame, idCol: String, vecCol: String,
                    p: Params = Params()): Array[Array[Double]] = {
     val all = corpus.select(col(idCol).as("id"),
       VectorFunctions.toDoubleArray(col(vecCol)).as("v"))
-    val sampled =
-      if (p.trainFraction >= 1.0) all
-      else all.where(Sampling.hashGate(col("id"), p.trainFraction))
-    // bracket the training set between the useful k-means minimum
-    // (~64 points per centroid, the conventional IVF training floor —
-    // tiny corpora train on everything) and the per-centroid CAP
-    // (points beyond a few hundred per centroid add nothing): the
-    // training cost is corpus-independent above the cap crossover,
-    // which is what keeps a 100 TB index fit at fixed k a fixed cost.
-    // The tighter cap gate is a SUBSET of the trainFraction gate
-    // (hashGate is monotone in fraction), so capping only shrinks the
-    // deterministic sample, never reshuffles its membership.
-    val vecs = {
-      val n = sampled.count() // one cheap aggregate job per fit
-      val capRows = p.maxTrainPerCentroid.toLong * p.k
-      val chosen =
-        if (!(sampled eq all) && n < 64L * p.k) all
-        else if (n > capRows) {
-          val f0 = if (sampled eq all) 1.0 else p.trainFraction
-          all.where(Sampling.hashGate(col("id"), f0 * capRows.toDouble / n))
-        } else sampled
-      // rows the chosen frame will actually hold, for partition sizing:
-      // the capped gate lands ~capRows; the tiny-corpus fallback to
-      // `all` is ~n/trainFraction (n was the fraction's yield)
-      val chosenRows =
-        if (!(sampled eq all) && n < 64L * p.k)
-          math.ceil(n / p.trainFraction).toLong
-        else math.min(n, capRows)
-      // pin the materialized sample onto a FIXED small partition
-      // count before checkpointing: the sample is bounded (≤
-      // maxTrainPerCentroid·k points) but inherits the CORPUS scan's
-      // partitioning — without this every Lloyd iteration re-runs one
-      // (mostly empty) task per corpus split, which is wall-clock
-      // jitter at test SF and a 5× full-fan-in disaster at 100 TB
-      // (millions of no-op tasks per iteration over ~256k rows).
-      // Centroids are partitioning-independent (exact decimal sums),
-      // so this changes scheduling, never results.
-      chosen.repartition(trainPartitions(corpus.sparkSession, chosenRows))
-        .localCheckpoint(eager = false) // one materialization, reused per iteration
-    }
+    val vecs = trainingSample(all, p.trainFraction, p.k,
+      p.maxTrainPerCentroid, rowsPerPoint = 1)
     var centroids = vecs.orderBy(col("id")).limit(p.k)
       .collect().map(_.getSeq[Double](1).toArray)
     val dim = centroids.head.length

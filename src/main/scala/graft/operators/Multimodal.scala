@@ -109,10 +109,10 @@ object Multimodal {
     * fewer bytes than cells the hash degrades toward a raw byte map
     * and every short payload collides.
     *
-    * @param maxBucket loud per-bucket candidate cap (SCALE.md cliff
-    *   #2): mega-clusters of identical-hash media (solid-color
-    *   thumbnails, tracking pixels) otherwise go quadratic in the
-    *   band self-join.
+    * @param maxBucket per-bucket candidate cap (SCALE.md cliff #2,
+    *   [[SimHash.pairs]]' drop contract): mega-clusters of
+    *   identical-hash media (solid-color thumbnails, tracking pixels)
+    *   otherwise go quadratic in the band self-join.
     */
   def phashPairs(media: DataFrame, idCol: String, payloadCol: String,
                  maxHamming: Int = 3,

@@ -123,40 +123,10 @@ object PqAnn {
     require(dim % p.m == 0, s"dim $dim not divisible by m=${p.m}")
     val dsub = dim / p.m
 
-    // deterministic hash-sample for codebook TRAINING only (encoding
-    // always covers the full corpus); below the 64-points-per-centroid
-    // floor sampling saves nothing and costs recall, so tiny corpora
-    // train on everything — which also keeps the sf0.01 oracle corpora
-    // bit-identical to unsampled training
-    val all = prepared.select(col("id"), col("vn"))
-    val base = {
-      val sampled =
-        if (p.trainFraction >= 1.0) all
-        else all.where(Sampling.hashGate(col("id"), p.trainFraction))
-      // floor/cap bracket as in IvfAnn.fitCentroids: [64, cap] points
-      // per subspace centroid, so Lloyd passes are corpus-independent
-      // above the cap crossover (the tighter gate is a subset — the
-      // deterministic sample shrinks, membership never reshuffles)
-      val n = sampled.count() // one cheap aggregate job per fit
-      val capRows = p.maxTrainPerCentroid.toLong * p.ksub
-      val chosen =
-        if (!(sampled eq all) && n < 64L * p.ksub) all
-        else if (n > capRows) {
-          val f0 = if (sampled eq all) 1.0 else p.trainFraction
-          all.where(Sampling.hashGate(col("id"), f0 * capRows.toDouble / n))
-        } else sampled
-      // pinned task count for every Lloyd pass, sized to the sample's
-      // sub-row volume (each vector explodes into m subspace rows) —
-      // the bounded sample must never inherit the corpus's input-split
-      // count (see IvfAnn.fitCentroids; same jitter/fan-in argument)
-      val chosenRows =
-        if (!(sampled eq all) && n < 64L * p.ksub)
-          math.ceil(n / p.trainFraction).toLong
-        else math.min(n, capRows)
-      chosen.repartition(IvfAnn.trainPartitions(prepared.sparkSession,
-        chosenRows * p.m))
-        .localCheckpoint(eager = false) // reused across iterations
-    }
+    // training only (encoding covers the full corpus); the tiny-corpus
+    // fallback keeps the sf0.01 oracle corpora unsampled
+    val base = IvfAnn.trainingSample(prepared.select(col("id"), col("vn")),
+      p.trainFraction, p.ksub, p.maxTrainPerCentroid, rowsPerPoint = p.m)
     // init: subvectors of the ksub lowest-id vectors, per subspace
     val initRows = base.orderBy(col("id")).limit(p.ksub)
       .collect().map(_.getSeq[Double](1).toArray)

@@ -26,9 +26,9 @@ import org.apache.spark.sql.functions._
   *    corpus can collapse into one giant cluster): oversized cells
   *    are SPLIT into fingerprint sub-cells (identical vectors still
   *    meet and dedup; only distinct near-dup pairs straddling
-  *    sub-cells are kept — bounded residual recall loss, logged
-  *    loudly), the same split-not-drop contract as MinHashLSH's
-  *    `maxBucket`.
+  *    sub-cells are kept — bounded residual recall loss, reported as
+  *    a `split` [[BucketCapEvent]]), the same split-not-drop contract
+  *    as MinHashLSH's `maxBucket`.
   *
   * Determinism: centroid training is exactly deterministic (fixed-
   * point DECIMAL sums — see IvfAnn), assignment ties break to the
@@ -157,14 +157,12 @@ object SemDedup {
     * survivor, the same rule as ExactDedup/NearDupClusters).
     */
   private def droppedIds(assigned: DataFrame, p: Params): DataFrame = {
-    // over-cap cells are SPLIT into fingerprint sub-cells, not skipped
-    // (round-13 upgrade — skipping kept every row of a hot cell, i.e.
-    // zero dedup inside exactly the boilerplate floods that need it
-    // most). Bitwise-identical embeddings share a fingerprint, so
-    // exact duplicates always meet; distinct-but-close vectors may
-    // land in different sub-cells (bounded residual recall loss, was
-    // total loss). Sub-cell count ceil(n/cap) keeps each pair join
-    // ~cap wide, so hot-cell work is ~n·cap — linear in the cell.
+    // over-cap cells are SPLIT into fingerprint sub-cells, not skipped:
+    // bitwise-identical embeddings share a fingerprint, so exact
+    // duplicates always meet; distinct-but-close vectors may land in
+    // different sub-cells (bounded residual recall loss). Sub-cell
+    // count ceil(n/cap) keeps each pair join ~cap wide, so hot-cell
+    // work is ~n·cap — linear in the cell.
     def pairsOn(rows: DataFrame, keys: Seq[String]): DataFrame =
       rows.as("a").join(rows.as("b"),
           keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
@@ -172,25 +170,12 @@ object SemDedup {
         .where(VectorFunctions.cosine(col("a.v"), col("b.v")) >= p.tau)
         .select(col("a.id").as("id"))
         .distinct()
-    p.maxCluster match {
+    HotSplit.hot(assigned, Seq("cell"), p.maxCluster, "SemDedup") match {
+      // healthy corpus: keep the EXACT in-cell plan (and its
+      // broadcastable pair join) — the split machinery only engages
+      // when a hot cell actually exists
       case None => pairsOn(assigned, Seq("cell"))
-      case Some(cap) =>
-        val oversized = assigned.groupBy("cell")
-          .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-          .localCheckpoint(eager = false) // read by the count + the join
-        val nOver = oversized.count() // eager by design: the split must be LOUD
-        if (nOver == 0)
-          // healthy corpus: keep the EXACT in-cell plan (and its
-          // broadcastable pair join) — the split machinery only
-          // engages when a hot cell actually exists
-          return pairsOn(assigned, Seq("cell"))
-        System.err.println(
-          s"[graft] SemDedup: splitting $nOver cluster(s) larger than $cap " +
-            "— identical vectors dedup via a LINEAR min-id star (a " +
-            "boilerplate flood shares one fingerprint, so any sub-cell " +
-            "containing it would re-create the quadratic join); distinct-" +
-            "vector representatives self-join inside recursively capped " +
-            "sub-cells (bounded residual recall loss across sub-cells)")
+      case Some((cap, oversized)) =>
         val cold = assigned
           .join(broadcast(oversized.select("cell")), Seq("cell"), "left_anti")
         val coldDropped = pairsOn(cold, Seq("cell"))
@@ -229,10 +214,9 @@ object SemDedup {
   def survivors(corpus: DataFrame, idCol: String = "vec_id",
                 vecCol: String = "embedding",
                 p: Params = Params()): DataFrame = {
-    if (!p.twoLevel && p.k > 64) System.err.println(
-      s"[graft] SemDedup: flat assignment at k=${p.k} is O(n*k*d) — " +
-        "superlinear once k is sized to the corpus; set twoLevel=true " +
-        "for the O(n*sqrt(k)*d) two-level quantizer")
+    // flat assignment is superlinear once k is sized to the corpus
+    if (!p.twoLevel && p.k > 64) HotSplit.report(corpus.sparkSession,
+      BucketCapEvent("SemDedup.survivors", "flat", p.k, 64))
     survivorsWithModel(corpus, idCol, vecCol, p,
       fitModel(corpus, idCol, vecCol, p))
   }

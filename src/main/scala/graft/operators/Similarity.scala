@@ -209,26 +209,13 @@ object RandomHyperplaneLSH {
                    idCol: String = "vec_id", vecCol: String = "embedding",
                    p: Params = Params(),
                    maxBucket: Option[Long] = None): DataFrame = {
-    // Optional per-bucket candidate cap (SCALE.md known cliff #2, same
-    // contract as MinHashLSH.candidatePairs): buckets above `maxBucket`
-    // ids are dropped from the self-join, loudly — bounded recall loss
-    // instead of a quadratic candidate blowup on degenerate corpora
-    // (e.g. near-constant embeddings all sharing one sign pattern).
+    // optional per-bucket cap (SCALE.md cliff #2, SimHash.pairs' drop
+    // contract): bounded recall loss instead of a quadratic candidate
+    // blowup on degenerate corpora (near-constant embeddings)
     val raw = buckets(df, idCol, vecCol, p)
-    val b = maxBucket match {
-      case None => raw
-      case Some(cap) =>
-        val banded = raw.localCheckpoint(eager = false)
-        val oversized = banded.groupBy("table", "bucket")
-          .agg(count(lit(1)).as("__n")).where(col("__n") > cap)
-          .select("table", "bucket")
-          .localCheckpoint(eager = false)
-        val nOver = oversized.count() // eager by design: truncation must be LOUD
-        if (nOver > 0) System.err.println(
-          s"[graft] RandomHyperplaneLSH.nearDupPairs: dropping $nOver bucket(s) larger " +
-            s"than $cap ids — pairs inside them are NOT reported (recall loss)")
-        banded.join(oversized, Seq("table", "bucket"), "left_anti")
-    }
+    val b = maxBucket.fold(raw)(HotSplit.dropOversized(
+      raw.localCheckpoint(eager = false), Seq("table", "bucket"), _,
+      "RandomHyperplaneLSH.nearDupPairs"))
     val cands = b.as("l").join(b.as("r"),
         col("l.table") === col("r.table") && col("l.bucket") === col("r.bucket") &&
           col(s"l.$idCol") < col(s"r.$idCol"))

@@ -9,7 +9,8 @@ import org.apache.spark.sql.classic.{Dataset, ExpressionUtils, SparkSession}
   * stored (already-analyzed) logical plan as a DataFrame, and convert
   * between resolved Catalyst expressions and `Column`s so action
   * expressions from `MERGE INTO` / `UPDATE` plans can be re-bound
-  * against freshly built frames. Lives in the sql package namespace
+  * against freshly built frames; and the listener-bus post the
+  * operators' bucket-cap events go through. Lives in the sql package namespace
   * for that access, like the sibling [[StreamingFrames]].
   */
 object PlanBridge {
@@ -19,6 +20,11 @@ object PlanBridge {
     Dataset.ofRows(spark.asInstanceOf[SparkSession], plan)
 
   def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  /** Posts `e` to `sc`'s listener bus (`private[spark]`). */
+  def post(sc: org.apache.spark.SparkContext,
+           e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
+    sc.listenerBus.post(e)
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 

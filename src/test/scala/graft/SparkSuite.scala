@@ -1,9 +1,14 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
+import java.util.concurrent.ConcurrentLinkedQueue
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import scala.jdk.CollectionConverters._
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkFirehoseListener
+import org.apache.spark.scheduler.{SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graft.ExtensionsTestShim
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
@@ -15,24 +20,32 @@ trait SparkSuite extends AnyFunSuite {
   def sf(dir: String): String = s"/root/testdata/$dir"
   def tempDir(kind: String): java.nio.file.Path = SparkSuite.tempDir(kind)
 
-  /** Spark jobs started while `body` runs (listener events are async:
-    * settle-poll until the count is stable). Suites run sequentially
-    * in the forked test JVM, so the count is this body's alone.
+  /** Spark jobs started while `body` runs. Suites run sequentially in
+    * the forked test JVM, so the count is this body's alone.
     */
-  def jobsDuring(body: => Any): Int = {
-    val jobs = new AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
+  def jobsDuring(body: => Any): Int =
+    eventsDuring[SparkListenerJobStart](body).size
+
+  /** The `E` events posted to the listener bus while `body` runs, in
+    * posting order: job or stage starts, say, or the operators'
+    * [[graft.operators.BucketCapEvent]]s, including those a
+    * `QueryExecutionListener` posts when an action of `body` succeeds.
+    * Listener events are async: the bus is drained before returning.
+    */
+  def eventsDuring[E <: SparkListenerEvent: ClassTag](body: => Any): Seq[E] = {
+    val events = new ConcurrentLinkedQueue[E]()
+    val l = new SparkFirehoseListener {
+      override def onEvent(e: SparkListenerEvent): Unit = e match {
+        case x: E => events.add(x); ()
+        case _ => ()
       }
     }
     spark.sparkContext.addSparkListener(l)
     try {
       body
-      var prev = -1
-      while (jobs.get != prev) { prev = jobs.get; Thread.sleep(200) }
-      jobs.get
+      ExtensionsTestShim.drainListenerBus(spark.sparkContext)
     } finally spark.sparkContext.removeSparkListener(l)
+    events.asScala.toSeq
   }
 }
 

@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.spark.scheduler.SparkListenerStageSubmitted
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -66,5 +67,26 @@ class LakeFoldJobsSpec extends SparkSuite {
     assert(jobs <= 3, s"$jobs jobs for one MOR delete")
     assert(rep.filesRewritten >= 2 && rep.filesRewritten <= 4, s"$rep")
     assert(LakeTable.scan(spark, root).count() == 400 - 141)
+  }
+
+  test("dedupTable over an 8-file table scans its data files once") {
+    // 400 rows, 4 per key k: 300 victims spread over every file
+    val root = tempDir("lake_fold_jobs").resolve("dups").toString
+    LakeTable.create(spark, root,
+      spark.range(0, 400).select(col("id"), (col("id") % 100).as("k")),
+      Seq("id"), nFiles = 8, clusterBy = Some("id"))
+    var rep: LakeTable.RewriteReport = null
+    val scans = eventsDuring[SparkListenerStageSubmitted] {
+      rep = LakeTable.dedupTable(spark, root, Seq("k"), "id")
+    }.count(_.stageInfo.rddInfos.exists(_.name == "FileScanRDD"))
+    // one scan of the data files (the victims' window), one read-back
+    // of the sidecar the commit counts from; evaluating the victims
+    // once for their file set and again for the sidecar scanned twice
+    assert(scans == 2, s"$scans file-scan stages for one dedupTable")
+    // ids 0..99 survive: the first file or two hold no victim
+    assert(rep.filesRewritten == 6, s"$rep")
+    val out = LakeTable.scan(spark, root)
+    assert(out.count() == 100)
+    assert(out.agg(max(col("id"))).head().getLong(0) == 99L)
   }
 }
